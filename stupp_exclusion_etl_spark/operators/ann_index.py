@@ -25,8 +25,8 @@ corpus table's change feed:
 Maintenance contract (the ``pipeline_incremental_dedup`` pattern):
 ``refresh()`` consumes ``corpus.changes(applied, head)`` — deletes
 retire assignment rows, inserts/updates re-route ONLY the changed
-vectors through the frozen centroids (a broadcast of k rows; O(churn),
-never O(corpus)) — then advances the cursor. Because both state
+vectors through the frozen centroids (k rows shipped with the task;
+O(churn), never O(corpus)) — then advances the cursor. Because both state
 tables are atomic, a crashed refresh replays idempotently (keyed
 upserts/deletes) and the index itself has time travel and CDC.
 
@@ -42,31 +42,216 @@ restatable in ANSI SQL for the DuckDB oracle; ``kmeans`` (pyspark.ml)
 is the production trainer — same storage and maintenance, recall-
 tested rather than oracle-hashed (clustering is partition-sensitive).
 
-100 TB shape: build trains on a sample and assigns with one broadcast
-(no shuffle); refresh is O(changed rows); serving is a probe over k
-centroid rows plus a chunk/file-pruned read of the probed cells only.
+Serving and assignment run ONE numpy kernel (below) over flat Arrow
+values. A query batch is collected (zero jobs on a LocalRelation; a
+batch is serving-sized by contract), routed on the driver against the
+memoized centroids, and its probed cells are read once, chunk/file-
+pruned — the only Spark job; the top-k returns as a LocalRelation
+frame. A probed read above ``_DRIVER_PROBE_BYTES`` is scored in Arrow
+tasks instead, then merged per query: only the placement differs,
+never the arithmetic. Build and refresh assign through the kernel in a
+map-only Arrow pass, so every path agrees on NaN, NULL and ties.
 """
 
 from __future__ import annotations
 
+import sys
+import zlib
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
+import pyarrow as pa
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 from pyspark.sql.window import Window
 
-from stupp_exclusion_etl_spark.functions.vectors import cosine
 from stupp_exclusion_etl_spark.sinks.atomic import (
     _PROBE_BROADCAST_CAP,
     AtomicParquetTable,
     _local_df,
 )
 
+# Arrow tasks run this module's kernel: pickle it by value, so an
+# executor needs no import path to the package (a local-mode worker
+# resolves imports from its launch directory, not the driver's
+# sys.path).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
 #: Queries sampled for the once-per-batch recall escalation decision
 #: (_batch_probe_escalation) — bounded however large the batch.
 _BATCH_SAMPLE_QUERIES = 8
 
+#: Values per kernel scoring block (_score): 8 MB of float64 pairs.
+_BLOCK = 1 << 20
+
+#: Serving runs the kernel on the driver while the probed read is at
+#: most this many bytes (_probe_bytes), else in Arrow tasks: the measured
+#: crossover on 4 local cores at 32-768 dimensions, far below
+#: spark.driver.maxResultSize.
+_DRIVER_PROBE_BYTES = 32 << 20
+
 _META_APPLIED = "applied_version"
 _META_TRAINED = "trained_version"
 _META_BASELINE_Q = "baseline_quality"
+
+
+# -- the kernel ---------------------------------------------------------
+#
+# Every cosine is accumulated left to right in float64 from 0.0, the
+# operation order of functions.vectors.dot/cosine, so each value is
+# bit-identical to the Catalyst expression (a BLAS matmul sums pairwise
+# and can differ in the last ulp). One set of rules for every caller:
+# - NULL never wins: a zero norm, or a NULL, ragged or NULL-element
+#   vector, scores NULL (try_divide / zip_with);
+# - NaN ranks above every double, as Spark orders it;
+# - assignment and routing ties go to the lowest cell;
+# - top-k orders by Spark's round(cos, 6) descending, then id
+#   ascending, exact under any number of ties.
+
+_MICRO = Decimal("1e-6")
+_WIDE = Context(prec=400)  # any double quantizes to 1e-6 exactly
+
+
+def _parts(arr) -> tuple:
+    """(values, offsets, lengths, ok) of an Arrow list array of floats
+    or doubles. ``ok`` is False for a NULL row and for a row holding a
+    NULL element — Spark's zip_with dot is NULL for both."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    offs = arr.offsets.to_numpy()
+    vals = arr.values
+    ok = ~arr.is_null().to_numpy(zero_copy_only=False)
+    if vals.null_count:
+        nul = vals.is_null().to_numpy(zero_copy_only=False)
+        held = np.r_[0, np.cumsum(nul)]
+        ok &= held[offs[1:]] == held[offs[:-1]]
+    return vals.to_numpy(zero_copy_only=False), offs, np.diff(offs), ok
+
+
+def _rows(parts, idx, d: int):
+    """(len(idx)×d float64 matrix, ok) of rows ``idx`` at width d. A
+    row of any other length is not ok: zip_with pads the shorter array
+    with NULLs, so Spark's dot is NULL."""
+    vals, offs, lens, ok = parts
+    ok = ok[idx] & (lens[idx] == d)
+    m = np.zeros((len(idx), d))
+    if d and ok.any():
+        m[ok] = vals[offs[idx][ok][:, None] + np.arange(d)]
+    return m, ok
+
+
+def _dots(a, b):
+    """a·bᵀ, each dot summed left to right from 0.0 (dot()'s order)."""
+    acc = np.zeros((len(a), len(b)))
+    for j in range(a.shape[1]):
+        acc += a[:, j, None] * b[None, :, j]
+    return acc
+
+
+def _norms(a):
+    acc = np.zeros(len(a))
+    for j in range(a.shape[1]):
+        acc += a[:, j] * a[:, j]
+    return np.sqrt(acc)
+
+
+def _cosines(a, ai, b, bi):
+    """cosine(a[ai], b[bi]) as a len(ai)×len(bi) float64 matrix plus
+    its NULL mask; a pair is scored per distinct length of ``b``'s rows
+    (in practice one)."""
+    cos = np.zeros((len(ai), len(bi)))
+    null = np.ones(cos.shape, dtype=bool)
+    blens, bok = b[2][bi], b[3][bi]
+    with np.errstate(all="ignore"):
+        for d in np.unique(blens[bok]):
+            cols = np.flatnonzero(bok & (blens == d))
+            am, aok = _rows(a, ai, int(d))
+            bm, _ = _rows(b, bi[cols], int(d))
+            den = _norms(am)[:, None] * _norms(bm)[None, :]
+            cos[:, cols] = _dots(am, bm) / den
+            null[:, cols] = ~aok[:, None] | (den == 0)
+    return cos, null
+
+
+def _rank(cos, null):
+    """Sort keys of Spark's ``DESC NULLS LAST`` double order: class 0
+    is NaN (above every double), 1 a number (key −cos), 2 NULL."""
+    cls = np.where(null, 2, np.where(np.isnan(cos), 0, 1))
+    return cls, np.where(cls == 1, -cos, 0.0)
+
+
+def _best(cos, null):
+    """Each row's winning column; columns are in ascending cell order,
+    so ties take the lowest cell, and an all-NULL row takes column 0."""
+    cls, key = _rank(cos, null)
+    win = cls == cls.min(axis=1, keepdims=True)
+    key = np.where(win, key, np.inf)
+    return np.argmax(win & (key == key.min(axis=1, keepdims=True)), axis=1)
+
+
+def _top(group, cos, null, ids, k: int):
+    """Indices of each group's first k entries, ordered by (group,
+    rank, id) — the per-query ``row_number() <= k`` of a window over
+    (cos DESC NULLS LAST, id ASC)."""
+    if not len(group):
+        return np.zeros(0, dtype=np.int64)
+    if ids.dtype == object:  # strings order by code point, as UTF-8
+        ids = np.unique(ids, return_inverse=True)[1]
+    cls, key = _rank(cos, null)
+    order = np.lexsort((ids, key, cls, group))
+    g = group[order]
+    at = np.arange(len(g))
+    first = np.r_[True, g[1:] != g[:-1]]
+    start = np.maximum.accumulate(np.where(first, at, 0))
+    return order[at - start < k]
+
+
+def _round6(x):
+    """Spark's round(x, 6) on doubles: BigDecimal.valueOf(x) — the
+    shortest decimal of x — set to scale 6 HALF_UP (away from zero),
+    NaN and ±inf passed through, a zero result as +0.0. numpy's
+    rint(x·1e6)/1e6 rounds halves to even and misreads near-halves, so
+    values whose scaled fraction sits near one half go through exact
+    decimal arithmetic; the rest round in float64 exactly."""
+    x = np.asarray(x, dtype=np.float64)
+    out = x.copy()
+    fin = np.isfinite(x)
+    with np.errstate(all="ignore"):
+        u = np.abs(x) * 1e6
+        f = u - np.floor(u)
+        easy = fin & (u < 2.0**52) & (np.abs(f - 0.5) > 1e-9 + u * 1e-14)
+        out[easy] = np.copysign(np.floor(u + 0.5), x)[easy] / 1e6 + 0.0
+    for i in np.flatnonzero(fin & ~easy):
+        d = Decimal(repr(float(x[i])))
+        out[i] = float(d.quantize(_MICRO, ROUND_HALF_UP, _WIDE)) + 0.0
+    return out
+
+
+def _score(q, by_cell, ids, cells, vecs, k: int):
+    """Each query's top k among the candidate rows of the cells it was
+    routed to (``by_cell``: cell -> query indices). Returns (query
+    index, row index, cos_sim, NULL mask) in per-query rank order,
+    cos_sim rounded like Spark's round(cos, 6). Pairs are formed per
+    cell in blocks of at most ``_BLOCK`` values and cut to each query's
+    top k at once, so the work is exactly the routed pairs and the
+    memory is one block plus k rows per query and block."""
+    c = _parts(vecs)
+    d = int(q[2].max(initial=1))
+    kept = [(np.zeros(0, np.int64),) * 2 + (np.zeros(0), np.zeros(0, bool))]
+    for cell, qs in by_cell.items():
+        rows = np.flatnonzero(cells == cell)
+        for r in np.array_split(rows, 1 + len(rows) * (len(qs) + d) // _BLOCK):
+            cos, null = (m.ravel() for m in _cosines(c, r, q, qs))
+            qi, ri = np.tile(qs, len(r)), np.repeat(r, len(qs))
+            cos[~null] = _round6(cos[~null])
+            top = _top(qi, cos, null, ids[ri], k)
+            kept.append((qi[top], ri[top], cos[top], null[top]))
+    qi, ri, cos, null = (np.concatenate(x) for x in zip(*kept))
+    top = _top(qi, cos, null, ids[ri], k)
+    return qi[top], ri[top], cos[top], null[top]
 
 
 class PersistedIvfIndex:
@@ -171,205 +356,77 @@ class PersistedIvfIndex:
         )
         return cents
 
-    #: Above this cell count the literal-fold projection gets unwieldy
-    #: (k×d literal doubles in the plan, k fold expressions per row);
-    #: route through the Arrow/numpy argmax instead (_assign_arrow).
-    _ASSIGN_FOLD_MAX_CELLS = 64
-
-    def _centroid_state(self) -> tuple[list, str] | None:
-        """((cell, centroid) tuples sorted by cell, cell dtype
+    def _centroids(self) -> tuple:
+        """(cells ascending, centroid kernel parts, cell dtype
         simpleString) of the FROZEN centroid table — memoized per
         centroids VERSION. The table only changes on build/rebuild, so
-        every assign after the first (each refresh re-routes through
-        the same frozen centroids) reuses the collected k rows instead
-        of paying a read+collect job; a rebuild bumps the version and
-        invalidates (guide §1.2: don't recompute what you already
-        have). The dtype rides the cache (ADVICE r14): the fold path
-        needs it for the cell cast, and fetching it via a fresh
-        read() per assign re-paid the manifest read the memo exists to
-        avoid."""
+        every route and assign after the first reuses the collected k
+        rows instead of paying a read+collect job; a rebuild bumps the
+        version and invalidates (guide §1.2: don't recompute what you
+        already have)."""
         v = self.centroids.current_version()
         if v is None:
-            return None
-        cached = getattr(self, "_cent_cache", None)
-        if cached is not None and cached[0] == v:
-            return cached[1], cached[2]
-        cents = self.centroids.read(version=v)
-        rows = sorted(
-            (
-                (r[0], [float(x) for x in r[1]])
-                for r in cents.select("cell", "centroid").collect()
-            ),
-            key=lambda r: r[0],
-        )
-        cell_t = cents.schema["cell"].dataType.simpleString()
-        self._cent_cache = (v, rows, cell_t)
-        return rows, cell_t
-
-    def _assign(self, vectors: DataFrame) -> DataFrame:
-        """Route vectors to their nearest frozen centroid. The
-        centroid table is k metadata-scale rows, so it is collected
-        once and embedded as LITERAL arrays: the k cosines project
-        into one array column and a codegen'd argmax fold (strict >,
-        ascending cell order) picks the cell — a ZERO-shuffle,
-        map-only pass. The previous shape (crossJoin the broadcast
-        centroids, row_number window per id) multiplied every vector
-        row k× and shuffled ALL of it for the window — an 8× corpus
-        exchange at build time (guide §2.3/§2.4); the fold removes the
-        exchange entirely. Tie/NULL semantics are bit-identical to
-        row_number over (cosine DESC NULLS LAST, cell ASC): a
-        candidate wins only when non-NULL and strictly greater, so
-        ties and all-NULL rows (zero vectors) keep the lowest cell.
-        Very large k (> _ASSIGN_FOLD_MAX_CELLS) routes through ONE
-        numpy matmul per Arrow batch instead (_assign_arrow) — still
-        zero-shuffle map-only, with plan size O(1) in k."""
-        state = self._centroid_state()
-        if state is None:
             raise ValueError("index not built: no centroids committed")
-        rows, cell_t = state
-        if not rows:
+        cached = getattr(self, "_cent_cache", None)
+        if cached is None or cached[0] != v:
+            cents = self.centroids.read(version=v)
+            self._cache_centroids(
+                v,
+                cents.select("cell", "centroid").collect(),
+                cents.schema["cell"].dataType.simpleString(),
+            )
+        if not len(self._cent_cache[1]):
             raise ValueError("index not built: centroid table is empty")
-        if len(rows) > self._ASSIGN_FOLD_MAX_CELLS:
-            return self._assign_arrow(vectors, rows, cell_t)
-        v = F.col(self.vec_col)
-        # argmax via array_max + array_position so every cosine
-        # appears in the plan EXACTLY ONCE — a nested CASE fold would
-        # duplicate the k×d centroid literals O(k²) times, and the
-        # resulting multi-hundred-KB expression tree costs seconds of
-        # py4j construction + analysis per commit (measured; guide
-        # §7.3 "very large plans"). Semantics match row_number over
-        # (cosine DESC NULLS LAST, cell ASC) exactly: array_max skips
-        # NULLs (zero vectors), array_position returns the FIRST
-        # (lowest-cell) index on bit-equal ties, and the all-NULL row
-        # coalesces to the lowest cell with a NULL cent_cos.
-        scored = vectors.select(
-            F.col(self.id_col),
+        return self._cent_cache[1:]
+
+    def _cache_centroids(self, v: int, rows, cell_t: str) -> None:
+        rows = sorted(rows, key=lambda r: r[0])
+        self._cent_cache = (
             v,
-            F.array(
-                *[
-                    cosine(v, F.lit([float(x) for x in r[1]]))
-                    for r in rows
-                ]
-            ).alias("__cs"),
-        )
-        best = F.array_max(F.col("__cs"))
-        pos = F.coalesce(
-            F.array_position(F.col("__cs"), best), F.lit(1)
-        ).cast("int")
-        cell = F.element_at(
-            F.lit([r[0] for r in rows]), pos
-        ).cast(cell_t)
-        return scored.select(
-            self.id_col,
-            cell.alias("cell"),
-            self.vec_col,
-            best.alias("cent_cos"),
+            np.asarray([r[0] for r in rows]),
+            _parts(pa.array([r[1] for r in rows], pa.list_(pa.float64()))),
+            cell_t,
         )
 
-    def _assign_arrow(
-        self, vectors: DataFrame, rows: list, cell_t: str
-    ) -> DataFrame:
-        """Large-k assignment route: one numpy matmul per Arrow batch
-        against the collected k×d centroid matrix — zero-shuffle,
-        map-only, like the literal fold, but the plan carries no
-        centroid literals at all (guide §4.2: hand whole batches to
-        vectorized native code; the pre-r15 fallback here was a
-        crossJoin + row_number window that multiplied the corpus k×
-        and SHUFFLED all of it). Semantics match the fold path:
-        cosines in float64 with try_divide's NULL on zero norms, a
-        NULL cosine never wins, ties take the lowest cell, and rows
-        whose cosine is NULL against EVERY cell (zero vectors, NULL /
-        ragged / null-element embeddings — any of which NULL the
-        fold's zip_with dot too) keep the lowest cell with NULL
-        cent_cos. One documented difference: BLAS pairwise summation
-        can differ from the fold's left-to-right accumulation in the
-        final ulp, so an argmax between two cells whose cosines agree
-        to ~1e-16 could land differently — every oracle-checked layout
-        (k ≤ 64) takes the bit-exact fold path above."""
-        import numpy as np
-        from pyspark.sql import types as T
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        cells_np = np.asarray([r[0] for r in rows])
-        C = np.asarray([r[1] for r in rows], dtype=np.float64)
-        cn = np.linalg.norm(C, axis=1)
-        d = C.shape[1]
-        id_t = vectors.schema[self.id_col].dataType.simpleString()
-        vec_t = vectors.schema[self.vec_col].dataType.simpleString()
+    def _assign(self, vectors: DataFrame, stored: bool = False) -> DataFrame:
+        """Route vectors to their nearest frozen centroid: (id, cell,
+        vector, cent_cos) through the kernel, one map-only Arrow pass
+        (zero shuffle; the plan carries no centroid literals, so its
+        size is O(1) in k). ``cent_cos`` is the cosine against the
+        chosen cell, NULL when every cosine is NULL (zero, NULL, ragged
+        or NULL-element vectors keep the lowest cell). With ``stored``
+        the rows already carry a ``cell``: it is kept, and cent_cos is
+        the cosine against that cell's centroid (NULL for a cell the
+        centroid table lacks)."""
+        cells, cents, cell_t = self._centroids()
+        cols = [self.id_col] + (["cell"] if stored else []) + [self.vec_col]
+        src = vectors.select(*cols)
+        id_t = src.schema[self.id_col].dataType.simpleString()
+        vec_t = src.schema[self.vec_col].dataType.simpleString()
         cell_pa = to_arrow_type(T._parse_datatype_string(cell_t))
-        src = vectors.select(self.id_col, self.vec_col)
-        # plain-value captures only: the task closure must not drag
-        # `self` (and its SparkSession) through pickle
-        id_name, vec_name = self.id_col, self.vec_col
+        names = [self.id_col, "cell", self.vec_col, "cent_cos"]
+        every = np.arange(len(cells))
 
         def route(batches):
-            import pyarrow as pa
-
-            f64 = pa.float64()
-            names = [id_name, "cell", vec_name, "cent_cos"]
             for b in batches:
                 n = b.num_rows
-                ids, emb = b.column(0), b.column(1)
-                if n == 0:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            ids,
-                            pa.array([], type=cell_pa),
-                            emb,
-                            pa.array([], type=f64),
-                        ],
-                        names=names,
-                    )
-                    continue
-                if emb.offset != 0:
-                    # rebase a sliced array so offsets index `values`
-                    # directly (Spark emits unsliced batches; guard
-                    # anyway)
-                    emb = emb.take(pa.array(range(n), type=pa.int64()))
-                offs = emb.offsets.to_numpy()
-                lens = offs[1:] - offs[:-1]
-                valid = (~np.asarray(emb.is_null())) & (lens == d)
-                ev = emb.values
-                if ev.null_count and valid.any():
-                    # a null ELEMENT nulls the fold's dot for every
-                    # cell — same all-NULL handling as a null row
-                    evn = np.asarray(ev.is_null())
-                    for i in np.flatnonzero(valid):
-                        if evn[offs[i]:offs[i + 1]].any():
-                            valid[i] = False
-                idx = np.zeros(n, dtype=np.int64)
-                best = np.full(n, np.nan, dtype=np.float64)
-                if valid.any():
-                    vals = ev.to_numpy(zero_copy_only=False).astype(
-                        np.float64
-                    )
-                    take = (
-                        offs[:-1][valid][:, None]
-                        + np.arange(d)[None, :]
-                    )
-                    V = vals[take]
-                    num = V @ C.T
-                    den = np.linalg.norm(V, axis=1)[:, None] * cn[None, :]
-                    with np.errstate(
-                        divide="ignore", invalid="ignore"
-                    ):
-                        cos = num / den
-                    cos[~np.isfinite(cos)] = -np.inf
-                    vi = np.argmax(cos, axis=1)
-                    vb = cos[np.arange(len(vi)), vi]
-                    dead = ~np.isfinite(vb)  # all cosines NULL
-                    vi[dead] = 0
-                    idx[valid] = vi
-                    bv = best[valid]
-                    bv[~dead] = vb[~dead]
-                    best[valid] = bv
-                null_cos = ~np.isfinite(best)
+                emb = b.column(b.num_columns - 1)
+                cos, null = _cosines(_parts(emb), np.arange(n), cents, every)
+                if stored:
+                    cell = b.column(1)
+                    got = cell.to_numpy(zero_copy_only=False)
+                    j = np.minimum(np.searchsorted(cells, got), len(cells) - 1)
+                    null = null | (cells[j] != got)[:, None]
+                else:
+                    j = _best(cos, null)
+                    cell = pa.array(cells[j], type=cell_pa)
+                r = np.arange(n)
                 yield pa.RecordBatch.from_arrays(
                     [
-                        ids,
-                        pa.array(cells_np[idx], type=cell_pa),
+                        b.column(0),
+                        cell,
                         emb,
-                        pa.array(best, type=f64, mask=null_cos),
+                        pa.array(cos[r, j], pa.float64(), mask=null[r, j]),
                     ],
                     names=names,
                 )
@@ -470,15 +527,12 @@ class PersistedIvfIndex:
             [F.col("ts").desc()],
         )
         # keep the per-version value memo (see _get_meta) warm: the
-        # committed state is exactly (what we knew at parent) + pairs
-        cached = getattr(self, "_meta_cache", None)
-        if parent is None:
-            base: dict | None = {}
-        elif cached is not None and cached[0] == parent:
-            base = dict(cached[1])
-        else:
-            base = None  # unknown parent contents: reload lazily
-        if base is not None:
+        # committed state is (what we knew at parent) + pairs only when
+        # our commit is parent's direct successor — a foreign commit in
+        # between holds values this handle never saw
+        cached = getattr(self, "_meta_cache", None) or (None, {})
+        if v == (0 if parent is None else parent + 1) and cached[0] == parent:
+            base = dict(cached[1]) if parent is not None else {}
             base.update({k: float(x) for k, x in pairs.items()})
             self._meta_cache = (v, base)
 
@@ -526,20 +580,11 @@ class PersistedIvfIndex:
                 -(-int(n) // self.target_cell_rows),
             )
         # Train, then COLLECT the k metadata-scale centroid rows once:
-        # the commit becomes a zero-probe LocalRelation write instead
-        # of re-running the training aggregate inside the write job
-        # (and inside the key probe), and the collected rows seed the
-        # per-version assign cache so the build's own assignment pass
-        # pays no further centroid read (guide §1.2; the old shape
-        # spent 7 jobs here: 6 in centroids.upsert over the live
-        # training lineage + 1 re-collect in _assign).
-        from pyspark.sql import types as T
-
+        # the commit is a zero-probe LocalRelation write, and the rows
+        # seed the per-version centroid memo, so the build's own
+        # assignment pass pays no further centroid read (guide §1.2).
         tr = self._train_centroids(snap).select("cell", "centroid")
-        got = sorted(
-            ((r[0], [float(x) for x in r[1]]) for r in tr.collect()),
-            key=lambda r: r[0],
-        )
+        got = [(r[0], [float(x) for x in r[1]]) for r in tr.collect()]
         sch = T.StructType(
             list(tr.schema.fields)
             + [T.StructField("ts", T.LongType(), False)]
@@ -562,7 +607,7 @@ class PersistedIvfIndex:
             if not doomed.isEmpty():
                 self.centroids.delete_keys(doomed)
             self.centroids.upsert(cents, [F.col("ts").desc()])
-        self._cent_cache = (
+        self._cache_centroids(
             self.centroids.current_version(),
             got,
             tr.schema["cell"].dataType.simpleString(),
@@ -598,18 +643,11 @@ class PersistedIvfIndex:
         # Baseline quality rides the upsert's own write pass as an
         # observed metric: post-commit the live index is exactly the
         # assigned rows (stale keys are retired below), so
-        # avg(cent_cos) over the batch IS quality() — without the
-        # full assignments re-scan + centroid re-join the old
-        # post-commit quality() call paid (guide §1.2: don't recompute
-        # what the write pass already evaluates). cent_cos is KEPT in
-        # the stored row (VERDICT r14 next-round #5): it is exactly
-        # cosine(vector, frozen assigned centroid), so later drift
-        # checks become a single-column scan instead of a full
-        # assignments pass + centroid broadcast join (guide §2.3 —
-        # 8 bytes/row buys back a whole index read per check at
-        # 100 TB; every refresh re-route stores its own cent_cos the
-        # same way, so the column always reflects the live frozen
-        # centroids).
+        # avg(cent_cos) over the batch IS quality() (guide §1.2).
+        # cent_cos is KEPT in the stored row (VERDICT r14 next-round
+        # #5) — cosine(vector, frozen assigned centroid), so later
+        # drift checks are a single-column scan (guide §2.3); every
+        # refresh re-route stores its own the same way.
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -756,13 +794,20 @@ class PersistedIvfIndex:
         recorded its cosine against the frozen centroid it was routed
         to at build/refresh time, and the centroid table only changes
         on rebuild (which rewrites every row), so the stored value IS
-        cosine(vector, assigned centroid) — bit-identical to the
-        broadcast join + re-fold this method used to pay (same fold
-        over the same doubles), at one column's scan cost instead of a
-        full index pass per drift check."""
+        cosine(vector, assigned centroid), at one column's scan cost
+        instead of a full index pass per drift check.
+
+        An index built before the column existed has no ``cent_cos``:
+        the cosines are recomputed through the kernel against the
+        memoized centroids (one map-only pass). A refresh-only
+        migration of such an index skews the metric: rows written
+        before it read cent_cos as NULL, which avg() skips, so until
+        the next rebuild quality() covers only the re-routed rows."""
         a = self.assignments.read()
         if a is None:
             raise ValueError("index not built")
+        if "cent_cos" not in a.columns:
+            a = self._assign(a, stored=True)
         row = a.agg(F.avg("cent_cos").alias("q")).collect()
         if row[0][0] is None:
             # avg over zero assignment rows is NULL (churn deleted the
@@ -808,24 +853,131 @@ class PersistedIvfIndex:
 
     # -- serving ------------------------------------------------------
 
-    def probe_cells(self, query: DataFrame, n_probe: int | None = None):
-        """The query's nearest cells — k-row metadata collect, same
-        contract as operators.similarity.ivf_probe_cells."""
-        n = self.n_probe if n_probe is None else n_probe
-        cents = self.centroids.read()
-        if cents is None:
+    def _queries(self, df: DataFrame, qvec_col: str, qid_col=None):
+        """(qids, vectors, kernel parts) of a query frame — one driver
+        collect, which runs no Spark job on a LocalRelation."""
+        cols = ([qid_col] if qid_col else []) + [qvec_col]
+        rows = df.select(*cols).collect()
+        vecs = [r[-1] for r in rows]
+        qids = [r[0] for r in rows] if qid_col else None
+        return qids, vecs, _parts(pa.array(vecs, pa.list_(pa.float64())))
+
+    def _route(self, q, n: int, qi=None):
+        """The first n probe cells of every query (or of the ``qi``
+        subset): the q×k kernel cosines against the memoized centroids
+        ranked by the one order, shaped (queries, n)."""
+        cells, cents, _t = self._centroids()
+        qi = np.arange(len(q[3])) if qi is None else qi
+        nq, nc = len(qi), len(cells)
+        n = max(0, min(n, nc))
+        cos, null = _cosines(q, qi, cents, np.arange(nc))
+        top = _top(np.repeat(np.arange(nq), nc), cos.ravel(), null.ravel(),
+                   np.tile(cells, nq), n)
+        return cells[top % nc].reshape(nq, n)
+
+    def _sample(self) -> list:
+        """A bounded deterministic (xxhash64-ordered, content-spread)
+        256-row sample of (id, cell, vector) assignment rows — the
+        recall estimate's ground."""
+        a = self.assignments.read()
+        if a is None:
             raise ValueError("index not built")
         rows = (
-            cents.crossJoin(F.broadcast(query))
-            .select(
-                "cell",
-                cosine(F.col("centroid"), F.col("q")).alias("__c"),
-            )
-            .orderBy(F.col("__c").desc_nulls_last(), F.col("cell"))
-            .limit(n)
+            a.select(self.id_col, "cell", self.vec_col)
+            .orderBy(F.xxhash64(F.col(self.id_col)), F.col(self.id_col))
+            .limit(256)
             .collect()
         )
-        return [r[0] for r in rows]
+        return [(r[0], r[1], [float(x) for x in r[2]]) for r in rows]
+
+    def _probed(self, cells: list) -> DataFrame:
+        """The chunk/file-pruned assignment rows of ``cells``."""
+        a = self.assignments.read(
+            where=[("cell", "in", cells)] if cells else None
+        )
+        if a is None:
+            raise ValueError("index not built")
+        return a if cells else a.limit(0)
+
+    def _probe_bytes(self, cells: list, cand, n_queries: int) -> float:
+        """Driver bytes of serving ``cells`` there: the probed read (an
+        upper bound from the kept files' row stats, zero jobs) at the
+        stored vector width plus the queries; no stats: unbounded."""
+        where = [("cell", "in", cells)]
+        rep = self.assignments.skipping_report(where) if cells else {}
+        rows = rep.get("rows_kept", 0)
+        if rows is None:
+            return float("inf")
+        d = int(self._centroids()[1][2].max())
+        vec_t = cand.schema[self.vec_col].dataType.elementType
+        item = 4 if isinstance(vec_t, T.FloatType) else 8
+        return float(rows * (d * item + 16) + n_queries * d * 8)
+
+    def _serve(self, qids, q, routes, k: int, qid_field=None) -> DataFrame:
+        """Top-k of every query over the candidate rows of its routed
+        cells: (qid, id, cell, cos_sim), or (id, cell, cos_sim) without
+        ``qid_field``. ONE Spark job — the pruned read — then the
+        kernel on the driver, returned as a LocalRelation frame. Above
+        the driver byte budget (_probe_bytes) the kernel runs in Arrow
+        tasks over the same read instead, a per-query top-k window
+        merges the tasks' partial top-ks, and a sort restores the
+        driver placement's (query, rank) row order."""
+        by_cell = {c: np.flatnonzero((routes == c).any(axis=1))
+                   for c in np.unique(routes).tolist()}
+        cand = self._probed(sorted(by_cell)).select(
+            self.id_col, "cell", self.vec_col
+        )
+        fields = [cand.schema[self.id_col], cand.schema["cell"],
+                  T.StructField("cos_sim", T.DoubleType())]
+        qid_pa = None
+        if qid_field is not None:
+            fields.insert(0, qid_field)
+            qid_pa = pa.array(qids, type=to_arrow_type(qid_field.dataType))
+        schema = T.StructType(fields)
+
+        def hits(ids, cell, vec):
+            qi, ri, cos, null = _score(
+                q, by_cell, ids.to_numpy(zero_copy_only=False),
+                cell.to_numpy(zero_copy_only=False), vec, k,
+            )
+            cols = [ids.take(ri), cell.take(ri),
+                    pa.array(cos, pa.float64(), mask=null)]
+            if qid_pa is not None:
+                cols.insert(0, qid_pa.take(qi))
+            return cols, qi
+
+        est = self._probe_bytes(sorted(by_cell), cand, len(q[3]))
+        if est <= _DRIVER_PROBE_BYTES:
+            t = cand.toArrow()
+            cols, _qi = hits(*(c.combine_chunks() for c in t.columns))
+            out = pa.Table.from_arrays(cols, schema=to_arrow_schema(schema))
+            return self.spark.createDataFrame(out, schema)
+
+        def score(batches):
+            for b in batches:
+                cols, qi = hits(*b.columns)
+                yield pa.RecordBatch.from_arrays(
+                    cols + [pa.array(qi, pa.int64())],
+                    names=schema.names + ["__q"],
+                )
+
+        rank = [F.col("cos_sim").desc_nulls_last(), F.col(self.id_col)]
+        w = Window.partitionBy("__q").orderBy(*rank)
+        qcol = T.StructField("__q", T.LongType())
+        return (
+            cand.mapInArrow(score, T.StructType(schema.fields + [qcol]))
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= k)
+            .orderBy("__q", *rank)
+            .select(*schema.names)
+        )
+
+    def probe_cells(self, query: DataFrame, n_probe: int | None = None):
+        """The query's nearest cells — same contract as
+        operators.similarity.ivf_probe_cells."""
+        _qids, _vecs, q = self._queries(query, "q")
+        routes = self._route(q, self.n_probe if n_probe is None else n_probe)
+        return routes[0].tolist() if len(routes) else []
 
     def topk(
         self,
@@ -835,206 +987,66 @@ class PersistedIvfIndex:
         recall_target: float | None = None,
         max_n_probe: int | None = None,
     ) -> DataFrame:
-        """Serve top-k from the PERSISTED index: probe cells against
-        the k-row centroid table, then an exact-cosine scan of ONLY
-        the probed cells' assignment rows — a chunk/file-pruned
+        """Serve top-k from the PERSISTED index: route the query to
+        its probe cells, then an exact-cosine kernel scan of ONLY the
+        probed cells' assignment rows — a chunk/file-pruned
         ``read(where=[("cell","in",...)])``, never the corpus.
-        ``query`` is a 1-row DataFrame with column ``q``.
+        ``query`` is a 1-row DataFrame with column ``q``; the result
+        is (id, cell, cos_sim), exactly ``topk_batch``'s rows for it.
 
-        ``recall_target`` (VERDICT r12 task #6 — the recall contract,
-        wired from operators.recall like the knn-join reroute): a
-        bounded deterministic sample of assignment rows estimates
-        recall@k per probe depth (fraction of the sample's exact
-        top-m whose assigned cell is probed), and the serve ESCALATES
-        n_probe — up to ``max_n_probe`` (default: all cells, which is
-        exact over the index) — until the estimate clears the target.
-        The decision is surfaced via recall.last_reroute_info
-        ('persisted_ivf_topk') and warnings.warn when the target is
-        unreachable within the cap. Opt-in: it adds one ~256-row
-        sample collect per served query."""
+        ``recall_target`` (VERDICT r12 task #6): escalate n_probe up
+        to ``max_n_probe`` (default: every cell, exact over the index)
+        until the sampled recall estimate clears the target — the
+        decision ``topk_batch`` makes for a batch, surfaced at
+        recall.last_reroute_info('persisted_ivf_topk'). Opt-in: it
+        adds one ~256-row sample collect per served query."""
+        _qids, vecs, q = self._queries(query.limit(1), "q")
+        n = self.n_probe if n_probe is None else n_probe
         if recall_target is not None:
-            from stupp_exclusion_etl_spark.operators import recall as _rc
-
-            n = self.n_probe if n_probe is None else n_probe
-            cap = self.k_cells if max_n_probe is None else min(
-                max_n_probe, self.k_cells
+            n = self._batch_probe_escalation(
+                list(range(len(vecs))), vecs, q, k, n, recall_target,
+                max_n_probe, "persisted_ivf_topk",
             )
-            if cap < 1:
-                raise ValueError(
-                    "max_n_probe must be >= 1 (got %r)" % (max_n_probe,)
-                )
-            # The cap wins over the index default: a caller ceiling
-            # tighter than self.n_probe must not produce an empty
-            # escalation range (ADVICE r13, recall.py choose_ivf_probe).
-            n = min(n, cap)
-            order = self.probe_cells(query, self.k_cells)
-            a = self.assignments.read()
-            if a is None:
-                raise ValueError("index not built")
-            rows = (
-                a.select(self.id_col, "cell", self.vec_col)
-                .orderBy(
-                    F.xxhash64(F.col(self.id_col)), F.col(self.id_col)
-                )
-                .limit(256)
-                .collect()
-            )
-            sample = [
-                (r[0], r[1], [float(x) for x in r[2]]) for r in rows
-            ]
-            qv = [float(x) for x in query.select("q").collect()[0][0]]
-            info = _rc.choose_ivf_probe(
-                sample, qv, k, order, n, recall_target, cap
-            )
-            _rc.record_probe_decision(
-                "persisted_ivf_topk", info, recall_target
-            )
-            cells = order[: info["n_probe"]]
-            cand = self.assignments.read(where=[("cell", "in", cells)])
-            scored = cand.crossJoin(F.broadcast(query)).select(
-                F.col(self.id_col),
-                F.col("cell"),
-                F.round(
-                    cosine(F.col(self.vec_col), F.col("q")), 6
-                ).alias("cos_sim"),
-            )
-            return scored.orderBy(
-                F.col("cos_sim").desc_nulls_last(), F.col(self.id_col)
-            ).limit(k)
-        cells = self.probe_cells(query, n_probe)
-        cand = self.assignments.read(where=[("cell", "in", cells)])
-        scored = cand.crossJoin(F.broadcast(query)).select(
-            F.col(self.id_col),
-            F.col("cell"),
-            F.round(
-                cosine(F.col(self.vec_col), F.col("q")), 6
-            ).alias("cos_sim"),
-        )
-        return scored.orderBy(
-            F.col("cos_sim").desc_nulls_last(), F.col(self.id_col)
-        ).limit(k)
-
-    def _batch_routes(
-        self,
-        queries: DataFrame,
-        n_probe: int,
-        qid_col: str,
-        qvec_col: str,
-    ) -> tuple[DataFrame, list]:
-        """(routes, probed_cells) for a query TABLE: one broadcast
-        join of the k-row centroid table onto the queries, window
-        top-n_probe cells per query — no per-query driver round-trip.
-        The ONLY collect is the union of probed cells (≤ k_cells
-        values regardless of the batch size), which drives the
-        chunk/file-pruned assignments read."""
-        cents = self.centroids.read()
-        if cents is None:
-            raise ValueError("index not built: no centroids committed")
-        scored = (
-            queries.select(qid_col, qvec_col)
-            .crossJoin(F.broadcast(cents.select("cell", "centroid")))
-            .withColumn(
-                "__pc", cosine(F.col(qvec_col), F.col("centroid"))
-            )
-        )
-        wp = Window.partitionBy(qid_col).orderBy(
-            F.col("__pc").desc_nulls_last(), F.col("cell").asc()
-        )
-        routes = (
-            scored.withColumn("__rn", F.row_number().over(wp))
-            .filter(F.col("__rn") <= n_probe)
-            .select(qid_col, "cell", qvec_col)
-        )
-        cells = sorted(
-            r[0] for r in routes.select("cell").distinct().collect()
-        )
-        return routes, cells
+        return self._serve(None, q, self._route(q, n), k)
 
     def _batch_probe_escalation(
-        self,
-        queries: DataFrame,
-        k: int,
-        n: int,
-        recall_target: float,
-        max_n_probe: int | None,
-        qid_col: str,
-        qvec_col: str,
-        op: str,
+        self, qids: list, vecs: list, q, k: int, n: int,
+        recall_target: float, max_n_probe: int | None, op: str,
     ) -> int:
-        """Batch twin of the single-query recall fence (VERDICT r13
-        next-round #4): the escalation is decided ONCE per batch from
-        a bounded deterministic sample of queries — never per query,
-        so a 10k-query serve pays the same two small collects as a
-        1-query serve. A ~256-row assignment sample estimates
-        recall@k per probe depth for each of ≤ ``_BATCH_SAMPLE_QUERIES``
-        sampled queries (xxhash64-ordered: deterministic,
-        content-spread); the served depth is the smallest at which the
+        """The recall fence (VERDICT r12 #6, r13 #4): ONE escalation
+        decision per batch, never per query, so a 10k-query serve pays
+        the same one sample collect as a 1-query serve. A ~256-row
+        assignment sample estimates recall@k per probe depth for each
+        of ≤ ``_BATCH_SAMPLE_QUERIES`` sampled queries (crc32-ordered
+        qids: deterministic, content-spread) from their kernel cell
+        orders; the served depth is the smallest ≥ n at which the
         WORST sampled query clears the target, capped at
-        ``max_n_probe`` (default: all cells — exact over the index).
-        The decision is surfaced via recall.last_reroute_info(op) and
-        warnings.warn when the target is unreachable within the cap.
-        Probe-cell orders for the sampled queries are computed
-        driver-side over the k_cells-row centroid collect — same
-        k-row metadata the routing join broadcasts."""
+        ``max_n_probe`` (default: every PERSISTED cell — a fresh
+        handle's k_cells is only the configured floor). A cap below n
+        wins over n. The decision is surfaced via
+        recall.last_reroute_info(op), and warnings.warn fires when the
+        target is unreachable within the cap."""
         from stupp_exclusion_etl_spark.operators import recall as _rc
 
-        cap = self.k_cells if max_n_probe is None else min(
-            max_n_probe, self.k_cells
-        )
+        total = len(self._centroids()[0])
+        cap = total if max_n_probe is None else min(max_n_probe, total)
         if cap < 1:
             raise ValueError(
                 "max_n_probe must be >= 1 (got %r)" % (max_n_probe,)
             )
-        n = min(n, cap)
-        cents = self.centroids.read()
-        if cents is None:
-            raise ValueError("index not built")
-        a = self.assignments.read()
-        if a is None:
-            raise ValueError("index not built")
-        crows = cents.select("cell", "centroid").collect()
-        srows = (
-            a.select(self.id_col, "cell", self.vec_col)
-            .orderBy(F.xxhash64(F.col(self.id_col)), F.col(self.id_col))
-            .limit(256)
-            .collect()
-        )
-        sample = [
-            (r[0], r[1], [float(x) for x in r[2]]) for r in srows
-        ]
-        qrows = (
-            queries.select(qid_col, qvec_col)
-            .orderBy(
-                F.xxhash64(F.col(qid_col).cast("string")),
-                F.col(qid_col),
-            )
-            .limit(_BATCH_SAMPLE_QUERIES)
-            .collect()
-        )
-        import numpy as np
-
-        cellids = [r[0] for r in crows]
-        C = np.asarray(
-            [[float(x) for x in r[1]] for r in crows], dtype=np.float64
-        )
-        nC = np.linalg.norm(C, axis=1)
-        nC[nC == 0] = 1.0
-        qvecs, orders = [], []
-        for r in qrows:
-            qv = [float(x) for x in r[1]]
-            q = np.asarray(qv, dtype=np.float64)
-            nq = float(np.linalg.norm(q)) or 1.0
-            cs = (C @ q) / (nC * nq)
-            order = [
-                c
-                for _neg, c in sorted(
-                    zip((-cs).tolist(), cellids)
-                )
-            ]
-            qvecs.append(qv)
-            orders.append(order)
+        pick = sorted(
+            range(len(qids)),
+            key=lambda i: (zlib.crc32(str(qids[i]).encode()), i),
+        )[:_BATCH_SAMPLE_QUERIES]
+        orders = self._route(q, cap, np.asarray(pick, dtype=np.int64))
         info = _rc.choose_ivf_probe_batch(
-            sample, qvecs, k, orders, n, recall_target, cap
+            self._sample(),
+            [[float(x) for x in vecs[i]] for i in pick],
+            k,
+            [o.tolist() for o in orders],
+            min(n, cap),
+            recall_target,
+            cap,
         )
         _rc.record_probe_decision(op, info, recall_target)
         return int(info["n_probe"])
@@ -1050,49 +1062,26 @@ class PersistedIvfIndex:
         max_n_probe: int | None = None,
     ) -> DataFrame:
         """Batched index-backed serving (VERDICT r12 task #3): top-k
-        for a query TABLE with ZERO per-query driver work — ``topk``
-        collects probe cells once per query (10k queries = 10k driver
-        round-trips); here ALL queries route to their probe cells via
-        one broadcast join against the k-row centroid table, one
-        bounded collect takes the UNION of probed cells (≤ k_cells
-        values however large the batch) into the chunk/file-pruned
-        assignments read, and the per-query candidate sets re-form by
-        joining the (query, cell) routes against the pruned
-        candidates on cell (routes broadcast: a query batch is tiny
-        next to the corpus). One window top-k per query. Per-query
-        results are EXACTLY ``topk``'s — same cosine expression, same
-        rounding, same tie-break — pinned by tests/test_ann_index.py.
+        for a query TABLE in ONE Spark job. The queries are collected
+        (zero jobs on a LocalRelation), routed on the driver against
+        the memoized centroids, the UNION of their probed cells is read
+        once (chunk/file-pruned), and the kernel scores each query
+        against the rows of its own routed cells — per query exactly
+        ``topk``'s rows, pinned by tests/test_ann_index.py.
 
         ``queries``: (qid_col, qvec_col) rows. Output: (qid, id,
-        cell, cos_sim), k rows per query.
-
-        ``recall_target`` (VERDICT r13 #4): the single-query fence's
-        batch twin — ONE escalation decision for the whole batch from
-        a bounded query sample (_batch_probe_escalation), surfaced at
-        recall.last_reroute_info('persisted_ivf_topk_batch')."""
+        cell, cos_sim), k rows per query. ``recall_target``: the
+        once-per-batch escalation (_batch_probe_escalation), surfaced
+        at recall.last_reroute_info('persisted_ivf_topk_batch')."""
+        qids, vecs, q = self._queries(queries, qvec_col, qid_col)
         n = self.n_probe if n_probe is None else n_probe
         if recall_target is not None:
             n = self._batch_probe_escalation(
-                queries, k, n, recall_target, max_n_probe,
-                qid_col, qvec_col, "persisted_ivf_topk_batch",
+                qids, vecs, q, k, n, recall_target, max_n_probe,
+                "persisted_ivf_topk_batch",
             )
-        routes, cells = self._batch_routes(queries, n, qid_col, qvec_col)
-        cand = self.assignments.read(where=[("cell", "in", cells)])
-        scored = cand.join(F.broadcast(routes), "cell").select(
-            qid_col,
-            self.id_col,
-            "cell",
-            F.round(
-                cosine(F.col(self.vec_col), F.col(qvec_col)), 6
-            ).alias("cos_sim"),
-        )
-        ws = Window.partitionBy(qid_col).orderBy(
-            F.col("cos_sim").desc_nulls_last(), F.col(self.id_col).asc()
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(ws))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
+        return self._serve(
+            qids, q, self._route(q, n), k, queries.schema[qid_col]
         )
 
     def topk_batch_adc(
@@ -1105,7 +1094,7 @@ class PersistedIvfIndex:
         recall_target: float | None = None,
         max_n_probe: int | None = None,
     ) -> DataFrame:
-        """Batched PQ-ADC serving: same zero-per-query routing as
+        """Batched PQ-ADC serving: same kernel routing as
         ``topk_batch``, but the candidate scan reads ONLY (id, cell,
         codes) — m small ints per vector, never the raw embeddings —
         and scores each (query, candidate) pair asymmetrically
@@ -1123,18 +1112,30 @@ class PersistedIvfIndex:
         m = len(book)
         kc = len(book[0])
         d = len(book[0][0])
+        qids, vecs, q = self._queries(queries, qvec_col, qid_col)
         n = self.n_probe if n_probe is None else n_probe
         if recall_target is not None:
             # same once-per-batch escalation as topk_batch (routing
             # is identical; only candidate scoring differs)
             n = self._batch_probe_escalation(
-                queries, k, n, recall_target, max_n_probe,
-                qid_col, qvec_col, "persisted_ivf_topk_batch_adc",
+                qids, vecs, q, k, n, recall_target, max_n_probe,
+                "persisted_ivf_topk_batch_adc",
             )
-        routes, cells = self._batch_routes(queries, n, qid_col, qvec_col)
-        cand = self.assignments.read(
-            where=[("cell", "in", cells)]
-        ).select(self.id_col, "cell", "codes")
+        # the (query, cell) routes as a LocalRelation literal: the
+        # broadcast builds driver-side (see _local_df)
+        routed = [
+            (qids[i], c, vecs[i])
+            for i, row in enumerate(self._route(q, n))
+            for c in row.tolist()
+        ]
+        cell_t = T._parse_datatype_string(self._centroids()[2])
+        routes = _local_df(self.spark, routed, T.StructType([
+            queries.schema[qid_col], T.StructField("cell", cell_t),
+            queries.schema[qvec_col],
+        ]))
+        cand = self._probed(sorted({c for _q, c, _v in routed})).select(
+            self.id_col, "cell", "codes"
+        )
         joined = cand.join(F.broadcast(routes), "cell")
         terms = []
         for s in range(m):
@@ -1185,9 +1186,7 @@ class PersistedIvfIndex:
             [([float(x) for x in query_vec],)], "q array<float>",
         )
         cells = self.probe_cells(q, n_probe)
-        cand = self.assignments.read(
-            where=[("cell", "in", cells)]
-        ).select(self.id_col, "codes")
+        cand = self._probed(cells).select(self.id_col, "codes")
         return pq_adc_topk(
             cand, self._load_codebook(), [float(x) for x in query_vec],
             k=k, id_col=self.id_col,

@@ -441,41 +441,6 @@ def estimate_ivf_recall(
     )
 
 
-def choose_ivf_probe(
-    sample: list,
-    query_vec: list,
-    k: int,
-    cell_order: list,
-    n_probe: int,
-    recall_target: float,
-    max_n_probe: int,
-) -> dict:
-    """Smallest probe depth >= ``n_probe`` whose estimated recall
-    clears the target, else the feasible argmax (at a full probe the
-    estimate is 1.0 by construction — every cell is probed, and the
-    served answer is exact over the index). When ``max_n_probe`` is
-    below ``n_probe`` the cap wins: the loop starts at the cap so a
-    caller-supplied ceiling tighter than the index default still
-    yields one feasible candidate instead of an empty range."""
-    best = None
-    for p in range(min(n_probe, max_n_probe), max_n_probe + 1):
-        r, m = estimate_ivf_recall(sample, query_vec, k, cell_order[:p])
-        cand = {
-            "n_probe": p,
-            "recall_est": r,
-            "sample_top": m,
-            "escalated": p > n_probe,
-        }
-        if r is not None and r >= recall_target:
-            return cand
-        eff = r if r is not None else 0.0
-        # ties prefer the DEEPER probe: probing more cells can never
-        # lower true recall, so the argmax fallback is conservative
-        if best is None or eff >= best[0]:
-            best = (eff, cand)
-    return best[1]
-
-
 def choose_ivf_probe_batch(
     sample: list,
     query_vecs: list,
@@ -486,11 +451,15 @@ def choose_ivf_probe_batch(
     max_n_probe: int,
 ) -> dict:
     """ONE escalation decision for a whole query batch (VERDICT r13
-    #4): the smallest probe depth >= ``n_probe`` at which the WORST
-    sampled query's estimated recall clears the target, else the
-    feasible argmax — the batch twin of choose_ivf_probe, sharing
-    estimate_ivf_recall. ``query_vecs``/``cell_orders`` are the
-    bounded per-sampled-query vectors and probe-cell orders; the
+    #4; a single query is a batch of one): the smallest probe depth
+    >= ``n_probe`` at which the WORST sampled query's estimated recall
+    clears the target, else the feasible argmax (at a full probe the
+    estimate is 1.0 by construction — every cell is probed, and the
+    served answer is exact over the index). When ``max_n_probe`` is
+    below ``n_probe`` the cap wins: the loop starts at the cap, so a
+    ceiling tighter than the index default still yields one feasible
+    candidate instead of an empty range. ``query_vecs``/``cell_orders``
+    are the bounded per-sampled-query vectors and probe-cell orders; the
     reported ``recall_est`` is the min across sampled queries
     (conservative), ``sampled_queries`` records the sample size. An
     empty query sample or empty assignment sample yields

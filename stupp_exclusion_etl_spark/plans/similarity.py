@@ -717,12 +717,14 @@ def sim_index_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched index-backed ANN serving (VERDICT r12 task #3): build
     the persisted IVF index over the corpus (every embedding except
     the query stripe), then serve top-5 for the WHOLE query stripe
-    (vec_id % 50 == 7 — 10 queries at sf0.01, 100 at sf0.1) in ONE
-    plan: queries route to probe cells via a broadcast join against
-    the k-row centroid table (no per-query driver collect — the
-    looped ``topk`` pays one round-trip per query), one bounded
-    collect takes the union of probed cells into the chunk/file-
-    pruned assignments read, and a window top-k per query finishes.
+    (vec_id % 50 == 7 — 10 queries at sf0.01, 100 at sf0.1) through
+    the index's one numpy kernel: the query stripe is collected (here
+    a FileScan frame, so that collect is a job of its own), routed on
+    the driver against the memoized centroids, the union of probed
+    cells is read once chunk/file-pruned (the second job), and the
+    kernel's per-query top-k returns as a LocalRelation frame. This
+    plan thus pays two jobs; a serving batch built driver-side (a
+    LocalRelation) pays only the pruned read.
     The oracle restates centroids, assignment, per-query probe, and
     per-query serve; tests/test_ann_index.py additionally pins
     per-query equality with the looped ``topk`` and that the job

@@ -2034,10 +2034,15 @@ class AtomicParquetTable:
             for f in part_files
         ]
         kept = self._prune_files(man, rel, where)
+        stats = man.get("stats", {})
+        rows = [(stats.get(f) or {}).get("rows") for f in kept]
         out = {
             "files_total": len(rel),
             "files_kept": len(kept),
             "kept": sorted(kept),
+            # upper bound on the rows the read returns (kept files'
+            # row stats); None when a kept file has no recorded count
+            "rows_kept": None if None in rows else sum(map(int, rows)),
         }
         # chunk-level view of the same decision: how many entry-chunk
         # FILES a predicated read would even open (the metadata-I/O

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -393,9 +394,9 @@ def test_batch_topk_adc_equals_looped_adc(spark, tmp_path):
 
 def test_batch_topk_driver_work_is_flat_in_batch_size(spark, tmp_path):
     """The scale contract: the looped path pays driver round-trips
-    PER QUERY (probe collect + serve), so its job count grows with
-    the batch; topk_batch launches a batch-size-INDEPENDENT number of
-    jobs (routing collect + one serve plan)."""
+    PER QUERY (query collect + serve), so its job count grows with
+    the batch; topk_batch launches ONE job however large the batch
+    (the pruned read of the probed cells)."""
     root = str(tmp_path)
     _mk_corpus(spark, root + "/corpus")
     idx = PersistedIvfIndex(
@@ -405,8 +406,13 @@ def test_batch_topk_driver_work_is_flat_in_batch_size(spark, tmp_path):
     idx.build()
 
     def mk_queries(n):
+        # a pandas-built batch is a LocalRelation (as a serving client
+        # sends it), so collecting it runs no job
         return spark.createDataFrame(
-            [(i, _vec(i % N_CLUSTERS, 200 + i)) for i in range(n)],
+            pd.DataFrame({
+                "qid": list(range(n)),
+                "q": [_vec(i % N_CLUSTERS, 200 + i) for i in range(n)],
+            }),
             "qid long, q array<float>",
         )
 
@@ -416,7 +422,8 @@ def test_batch_topk_driver_work_is_flat_in_batch_size(spark, tmp_path):
     jb9 = _jobs_for(
         spark, "tb9", lambda: idx.topk_batch(mk_queries(9), k=5).collect()
     )
-    assert jb9 <= jb3 + 1, (jb3, jb9)
+    # one job per batch: the pruned read of the probed cells
+    assert jb3 <= 1 and jb9 <= 1, (jb3, jb9)
 
     def looped(n):
         for i in range(n):
@@ -524,12 +531,12 @@ def test_recall_contract_on_persisted_topk(spark, tmp_path):
 
 def test_recall_cap_below_default_n_probe(spark, tmp_path):
     """ADVICE r13 (medium): max_n_probe BELOW the effective n_probe
-    must not crash choose_ivf_probe with an empty escalation range —
-    the cap wins and the serve runs at the capped depth."""
+    must not crash choose_ivf_probe_batch with an empty escalation
+    range — the cap wins and the serve runs at the capped depth."""
     import warnings as _w
 
     from stupp_exclusion_etl_spark.operators.recall import (
-        choose_ivf_probe,
+        choose_ivf_probe_batch,
         last_reroute_info,
     )
 
@@ -538,8 +545,8 @@ def test_recall_cap_below_default_n_probe(spark, tmp_path):
         (i, i % 3, [float((i * 7 + d) % 5) for d in range(4)])
         for i in range(30)
     ]
-    info = choose_ivf_probe(
-        sample, [1.0, 0.0, 2.0, 1.0], 5, [0, 1, 2], 3, 0.9, 2
+    info = choose_ivf_probe_batch(
+        sample, [[1.0, 0.0, 2.0, 1.0]], 5, [[0, 1, 2]], 3, 0.9, 2
     )
     assert info is not None and info["n_probe"] <= 2
 
@@ -711,11 +718,11 @@ def test_target_cell_rows_derives_k_from_corpus(spark, tmp_path):
 
 
 def test_arrow_assign_matches_join_window_reference(spark, tmp_path):
-    """k > _ASSIGN_FOLD_MAX_CELLS routes assignment through the numpy
-    mapInArrow path; pin it cell-for-cell against the reference
-    crossJoin + row_number argmax (the pre-r15 fallback route),
-    including a zero vector (every cosine NULL under try_divide ->
-    lowest cell, NULL cent_cos)."""
+    """A large-k (k > 64) layout assigns through the kernel's
+    mapInArrow pass; pin it cell-for-cell and bit-for-bit against the
+    reference crossJoin + row_number argmax (the pre-r15 fallback
+    route), including a zero vector (every cosine NULL under
+    try_divide -> lowest cell, NULL cent_cos)."""
     from pyspark.sql.window import Window
 
     from stupp_exclusion_etl_spark.functions.vectors import cosine
@@ -735,7 +742,7 @@ def test_arrow_assign_matches_join_window_reference(spark, tmp_path):
         spark, root + "/corpus", root + "/idx",
         k_cells=72, n_probe=3,
     )
-    assert idx.k_cells > idx._ASSIGN_FOLD_MAX_CELLS
+    assert idx.k_cells > 64
     idx.build()
 
     assigned = idx._assign(t.read().select("vec_id", "embedding"))
@@ -763,7 +770,7 @@ def test_arrow_assign_matches_join_window_reference(spark, tmp_path):
         assert cell == rcell, f"vec {vid}: arrow cell {cell} != {rcell}"
         assert (cos is None) == (rcos is None), f"vec {vid} null mismatch"
         if cos is not None:
-            assert cos == pytest.approx(rcos, abs=1e-12)
+            assert cos == rcos, f"vec {vid}: {cos!r} != {rcos!r}"
     # the zero vector: all-NULL cosines keep the lowest cell
     assert got[n + 1][0] == min(r[0] for r in cents.select("cell").collect())
     assert got[n + 1][1] is None
@@ -907,3 +914,385 @@ def test_cursor_rides_final_commit_and_crash_replays(spark, tmp_path):
     )
     r3 = idx2.refresh()
     assert (r3["n_deleted"], r3["n_upserted"]) == (0, 0)
+
+
+# -- the one kernel: routing, scoring and assignment ---------------------
+
+
+def _same_double(a, b) -> bool:
+    """Bit-level equality of two nullable doubles (NaN equals NaN)."""
+    if a is None or b is None:
+        return a is None and b is None
+    if math.isnan(a) or math.isnan(b):
+        return math.isnan(a) and math.isnan(b)
+    return a == b and math.copysign(1, a) == math.copysign(1, b)
+
+
+def test_kernel_cosine_is_bit_identical_to_spark_cosine(spark):
+    """The kernel's left-to-right float64 cosine equals
+    functions.vectors.cosine bit for bit, and agrees on every NULL and
+    NaN: zero, NULL, ragged, NULL-element and NaN-element vectors."""
+    import numpy as np
+    import pyarrow as pa
+
+    from stupp_exclusion_etl_spark.functions.vectors import cosine
+    from stupp_exclusion_etl_spark.operators.ann_index import (
+        _cosines,
+        _parts,
+    )
+
+    # sizes large enough that a BLAS matmul or norm would differ from
+    # the left-to-right sums in some last bits
+    rng = np.random.default_rng(11)
+    vecs = [
+        rng.normal(size=DIM).astype(np.float32).tolist() for _ in range(500)
+    ]
+    vecs += [
+        [0.0] * DIM,                     # zero norm
+        None,                            # NULL row
+        vecs[0][:-1],                    # ragged
+        vecs[1][:3] + [None] + vecs[1][4:],  # NULL element
+        vecs[2][:2] + [float("nan")] + vecs[2][3:],  # NaN element
+        [1e-30] * DIM,                   # underflowing products
+        [3.0e38, -3.0e38] + [1.0] * (DIM - 2),  # overflowing norm
+    ]
+    queries = [
+        rng.normal(size=DIM).astype(np.float32).tolist() for _ in range(70)
+    ]
+    queries += [[0.0] * DIM, vecs[0][:-1], [float("nan")] * DIM]
+    rows = spark.createDataFrame(
+        list(enumerate(vecs)), "i int, v array<float>"
+    ).crossJoin(
+        spark.createDataFrame(
+            list(enumerate(queries)), "j int, q array<float>"
+        )
+    )
+    want = {
+        (r.i, r.j): r.c
+        for r in rows.select(
+            "i", "j", cosine(F.col("v"), F.col("q")).alias("c")
+        ).collect()
+    }
+    f32 = pa.list_(pa.float32())
+    a, b = _parts(pa.array(vecs, f32)), _parts(pa.array(queries, f32))
+    cos, null = _cosines(a, np.arange(len(vecs)), b, np.arange(len(queries)))
+    for (i, j), c in want.items():
+        got = None if null[i, j] else float(cos[i, j])
+        assert _same_double(got, c), (i, j, got, c)
+
+
+def test_kernel_round_matches_spark_round(spark):
+    """Kernel rounding equals Spark's round(x, 6) on doubles: exact
+    half-way decimals (HALF_UP, away from zero for negatives), values
+    a hair off a half, NaN/inf pass-through, negative results that
+    round to zero, and random doubles."""
+    import numpy as np
+
+    from stupp_exclusion_etl_spark.operators.ann_index import _round6
+
+    xs = []
+    for n in (0, 1, 2, 7, 123456, 499999, 999999, 1000000):
+        h = (n + 0.5) / 1e6
+        xs += [h, -h, np.nextafter(h, 0), np.nextafter(h, 1)]
+    xs += [0.1234565, -0.1234565, 0.9999995, -0.9999995, 1.0000005,
+           2.5e-7, -2.5e-7, 4.9999999e-7, -1e-9, -0.0, 0.0, 1e300,
+           -1.7e308, 5e-324, 123456789.0000005, 4503599627.3704965,
+           float("nan"), float("inf"), float("-inf")]
+    xs += np.random.default_rng(3).uniform(-1, 1, 200).tolist()
+    df = spark.createDataFrame([(i, float(x)) for i, x in enumerate(xs)],
+                               "i int, x double")
+    want = {
+        r.i: r.r
+        for r in df.select("i", F.round("x", 6).alias("r")).collect()
+    }
+    got = _round6(np.asarray(xs, dtype=np.float64))
+    for i, x in enumerate(xs):
+        assert _same_double(float(got[i]), want[i]), (x, got[i], want[i])
+
+
+def test_batch_topk_exact_under_heavy_ties(spark, tmp_path, monkeypatch):
+    """More than 3k candidates share one rounded score: the kernel's
+    top-k equals the reference window top-k (round(cosine, 6) DESC
+    NULLS LAST, id ASC) row for row, NULL-scoring zero vectors and a
+    zero query included — also when each cell is scored in many small
+    blocks whose partial top-ks are merged."""
+    from pyspark.sql.window import Window
+
+    from stupp_exclusion_etl_spark.functions.vectors import cosine
+    from stupp_exclusion_etl_spark.operators import ann_index
+
+    root = str(tmp_path)
+    same = _vec(0, 1)
+    rows = [
+        (i, [0.0] * DIM if i % 50 == 0
+         else _vec(i % N_CLUSTERS, i) if i % 7 == 0 else same, 0)
+        for i in range(1, 4001)
+    ]
+    assert sum(r[1] is same for r in rows) > 3000
+    corpus = AtomicParquetTable(spark, root + "/corpus", keys=["vec_id"])
+    corpus.upsert(
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<float>, ts long"
+        ),
+        [F.col("ts").desc()],
+    )
+    idx = PersistedIvfIndex(
+        spark, root + "/corpus", root + "/idx", k_cells=2, n_probe=2
+    )
+    idx.build()
+    qs = [(1, same), (2, _vec(2, 5)), (3, [0.0] * DIM)]
+    qdf = spark.createDataFrame(qs, "qid long, q array<float>")
+    got = sorted(tuple(r) for r in idx.topk_batch(qdf, k=12).collect())
+
+    w = Window.partitionBy("qid").orderBy(
+        F.col("cos_sim").desc_nulls_last(), F.col("vec_id")
+    )
+    ref = (
+        idx.assignments.read()
+        .crossJoin(qdf)
+        .select("qid", "vec_id", "cell",
+                F.round(cosine(F.col("embedding"), F.col("q")), 6)
+                .alias("cos_sim"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter("rn <= 12")
+        .drop("rn")
+    )
+    assert got == sorted(tuple(r) for r in ref.collect())
+    assert len(got) == 36
+    monkeypatch.setattr(ann_index, "_BLOCK", 100)  # 9-row blocks
+    assert got == sorted(
+        tuple(r) for r in idx.topk_batch(qdf, k=12).collect()
+    )
+
+
+def test_nan_element_vector_assigns_alike_at_any_k(spark, tmp_path):
+    """A NaN-element vector scores NaN against every centroid; NaN
+    ranks above every double, so it lands on the lowest cell with a
+    NaN cent_cos — the same answer with k <= 64 and k > 64 (the old
+    literal fold and Arrow routes disagreed), and the one the Spark
+    expressions give (array_max over the cosines). A NaN centroid
+    (its seed group held a NaN vector) likewise wins over every
+    finite cosine."""
+    from stupp_exclusion_etl_spark.functions.vectors import cosine
+
+    root = str(tmp_path)
+    corpus = _mk_corpus(spark, root + "/corpus", n=150)
+    corpus.upsert(
+        spark.createDataFrame(
+            [(3, [float("nan")] + _vec(3, 3)[1:], 1)],
+            "vec_id long, embedding array<float>, ts long",
+        ),
+        [F.col("ts").desc()],
+    )
+    probe = spark.createDataFrame(
+        [(900, [float("nan")] + _vec(1, 3)[1:]), (901, _vec(2, 5))],
+        "vec_id long, embedding array<float>",
+    )
+    for k in (4, 75):
+        idx = PersistedIvfIndex(
+            spark, root + "/corpus", root + f"/idx{k}", k_cells=k, n_probe=2
+        )
+        idx.build()
+        cents = sorted(
+            (r.cell, r.centroid) for r in idx.centroids.read().collect()
+        )
+        cs = F.array(
+            *[cosine(F.col("embedding"), F.lit(c)) for _i, c in cents]
+        )
+        ref = {
+            r.vec_id: (cents[r.pos - 1][0], r.best)
+            for r in probe.select(
+                "vec_id",
+                F.array_max(cs).alias("best"),
+                F.array_position(cs, F.array_max(cs)).alias("pos"),
+            ).collect()
+        }
+        got = {
+            r.vec_id: (r.cell, r.cent_cos)
+            for r in idx._assign(probe).collect()
+        }
+        assert got[900][0] == cents[0][0] and math.isnan(got[900][1]), got
+        assert got[901][0] == 3 and math.isnan(got[901][1]), got
+        for vid, (cell, cos) in got.items():
+            assert cell == ref[vid][0] and _same_double(cos, ref[vid][1])
+    assert corpus.read().count() == 150
+
+
+def test_capped_placement_serves_identical_rows(spark, tmp_path, monkeypatch):
+    """Above the driver byte budget the kernel runs in Arrow tasks
+    over the pruned read plus a per-query top-k merge: with the budget
+    below zero the rows equal the driver placement's, in the same rank
+    order, for the batch and the single-query serve."""
+    from stupp_exclusion_etl_spark.operators import ann_index
+
+    root = str(tmp_path)
+    _mk_corpus(spark, root + "/corpus", n=300)
+    idx = PersistedIvfIndex(
+        spark, root + "/corpus", root + "/idx", k_cells=N_CLUSTERS, n_probe=2
+    )
+    idx.build()
+    qs = [(j, _vec(j % N_CLUSTERS, 40 + j)) for j in range(6)]
+    qdf = spark.createDataFrame(qs, "qid long, q array<float>")
+    one = spark.createDataFrame([(qs[1][1],)], "q array<float>")
+
+    def serve():
+        return (
+            [tuple(r) for r in idx.topk_batch(qdf, k=7).collect()],
+            [tuple(r) for r in idx.topk(one, k=7).collect()],
+        )
+
+    driver = serve()
+    assert not _task_placed(idx.topk_batch(qdf, k=7))
+    monkeypatch.setattr(ann_index, "_DRIVER_PROBE_BYTES", -1)
+    assert _task_placed(idx.topk_batch(qdf, k=7))
+    # keep the merge's 8 shuffle partitions apart, as a large read
+    # would: the row order must come from the sort, not from a
+    # coalesced single partition
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        tasks = serve()
+    finally:
+        spark.conf.set(key, before)
+    assert tasks[0] == driver[0] and len(driver[0]) == 42
+    assert tasks[1] == driver[1] and len(driver[1]) == 7
+
+
+def _task_placed(df) -> bool:
+    return "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_probe_bytes_not_rows_choose_the_placement(spark, tmp_path, monkeypatch):
+    """The placement follows the probed read's BYTES: an index whose
+    probed cells hold as many rows as the sink's key-probe broadcast
+    cap (far below any row bound a vector read could take) is served
+    by Arrow tasks, not collected onto the driver."""
+    from stupp_exclusion_etl_spark.operators import ann_index
+
+    root = str(tmp_path)
+    _mk_corpus(spark, root + "/corpus", n=120)
+    idx = PersistedIvfIndex(
+        spark, root + "/corpus", root + "/idx", k_cells=N_CLUSTERS, n_probe=2
+    )
+    idx.build()
+    qdf = spark.createDataFrame(
+        [(j, _vec(j % N_CLUSTERS, 7 + j)) for j in range(3)],
+        "qid long, q array<float>",
+    )
+    small = idx.topk_batch(qdf, k=5)
+    assert not _task_placed(small)
+    real = idx.assignments.skipping_report
+    monkeypatch.setattr(
+        idx.assignments, "skipping_report",
+        lambda where, version=None: {
+            **real(where, version),
+            "rows_kept": ann_index._PROBE_BROADCAST_CAP,
+        },
+    )
+    big = idx.topk_batch(qdf, k=5)
+    assert _task_placed(big)
+    assert [tuple(r) for r in big.collect()] == [
+        tuple(r) for r in small.collect()
+    ]
+
+
+def test_fresh_handle_full_recall_equals_brute_force(spark, tmp_path):
+    """The escalation cap is the PERSISTED cell count: a fresh handle
+    on a target_cell_rows index (configured k_cells is only the
+    floor) escalates over every live cell, so recall_target=1.0
+    serves exactly numpy brute force."""
+    import warnings as _w
+
+    import numpy as np
+
+    root = str(tmp_path)
+    rows = [
+        (i, [float(((i * 37 + d * 101) % 17) - 8) for d in range(DIM)], 0)
+        for i in range(1, 301)
+    ]
+    corpus = AtomicParquetTable(spark, root + "/corpus", keys=["vec_id"])
+    corpus.upsert(
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<float>, ts long"
+        ),
+        [F.col("ts").desc()],
+    )
+    PersistedIvfIndex(
+        spark, root + "/corpus", root + "/idx", k_cells=4, n_probe=1,
+        target_cell_rows=30,
+    ).build()
+    fresh = PersistedIvfIndex(
+        spark, root + "/corpus", root + "/idx", k_cells=4, n_probe=1
+    )
+    qs = [(j, [float(((d * 53 + j * 11) % 15) - 7) for d in range(DIM)])
+          for j in range(1, 4)]
+    with _w.catch_warnings():
+        _w.simplefilter("ignore")
+        served = fresh.topk_batch(
+            spark.createDataFrame(qs, "qid long, q array<float>"),
+            k=10, recall_target=1.0,
+        ).collect()
+    x = np.asarray([r[1] for r in rows], dtype=np.float64)
+    ids = np.asarray([r[0] for r in rows])
+    for qid, qv in qs:
+        q = np.asarray(qv)
+        cos = (x @ q) / (np.linalg.norm(x, axis=1) * np.linalg.norm(q))
+        order = np.lexsort((ids, -np.round(cos, 6)))[:10]
+        want = {int(i) for i in ids[order]}
+        assert {r.vec_id for r in served if r.qid == qid} == want, qid
+
+
+def test_quality_recomputes_when_cent_cos_is_missing(spark, tmp_path):
+    """An index built before the stored cent_cos column: quality()
+    recomputes the cosines through the kernel against the centroids
+    instead of failing, and equals the stored-column metric."""
+    root = str(tmp_path)
+    _mk_corpus(spark, root + "/corpus", n=120)
+    idx = PersistedIvfIndex(
+        spark, root + "/corpus", root + "/idx", k_cells=N_CLUSTERS, n_probe=2
+    )
+    idx.build()
+    stored = idx.quality()
+    legacy = root + "/legacy"
+    AtomicParquetTable(spark, legacy + "/centroids", keys=["cell"]).upsert(
+        idx.centroids.read(), [F.col("ts").desc()]
+    )
+    AtomicParquetTable(
+        spark, legacy + "/assignments", keys=["vec_id"], cluster_by=["cell"]
+    ).upsert(idx.assignments.read().drop("cent_cos"), [F.col("ts").desc()])
+    old = PersistedIvfIndex(
+        spark, root + "/corpus", legacy, k_cells=N_CLUSTERS, n_probe=2
+    )
+    assert "cent_cos" not in old.assignments.read().columns
+    assert old.quality() == pytest.approx(stored, rel=1e-12, abs=0)
+
+
+def test_put_meta_skips_memo_after_foreign_meta_commit(spark, tmp_path):
+    """The meta memo is warmed only when this handle's commit is the
+    parent's direct successor: when another handle commits meta in
+    between, the next lookup reloads and sees the foreign value."""
+    root = str(tmp_path)
+    _mk_corpus(spark, root + "/corpus", n=60)
+    idx = PersistedIvfIndex(
+        spark, root + "/corpus", root + "/idx", k_cells=N_CLUSTERS, n_probe=2
+    )
+    idx.build()
+    assert idx._get_meta("baseline_quality") is not None
+    other = AtomicParquetTable(spark, root + "/idx/meta", keys=["key"])
+    upsert = idx.meta.upsert
+
+    def raced(df, order_by, **kw):
+        other.upsert(
+            spark.createDataFrame(
+                [("baseline_quality", 0.125, 10**6)],
+                "key string, val double, ts long",
+            ),
+            [F.col("ts").desc()],
+        )
+        return upsert(df, order_by, **kw)
+
+    idx.meta.upsert = raced
+    idx._put_meta({"applied_version": 42}, ts=10**6 + 1)
+    assert idx._get_meta("baseline_quality") == 0.125
+    assert idx._get_meta("applied_version") == 42.0
