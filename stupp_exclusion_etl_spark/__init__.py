@@ -11,7 +11,7 @@ Layout:
     functions/ — scalar & vector functions (coercion, text, hashing, vectors)
     operators/ — composable DataFrame operators (filters, joins, dedup, ...)
     sources/   — ingest/normalization (the reference's scrape-side semantics)
-    sinks/     — keyed upsert, partitioned & batched writes
+    sinks/     — the atomic keyed Parquet table (upsert, delete, layouts)
     streaming/ — structured-streaming window/watermark/session operators
     plans/     — the declared query surface (drives __spark_entry__.py)
 """

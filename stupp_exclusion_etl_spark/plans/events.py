@@ -202,9 +202,9 @@ def stream_tumbling_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_micro_batch_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's 20-record sink batching (A14,
-    reference __main__.py:61-66) as a deterministic batch assignment;
-    sinks.batched.micro_batches does the physical per-partition
-    chunking for real sinks."""
+    reference __main__.py:61-66) as a deterministic batch assignment.
+    The atomic sink commits each streamed micro-batch as one version
+    instead (sinks.atomic.streaming_upsert_sink)."""
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy((F.col("event_id") / 20).cast("long").alias("batch_id"))

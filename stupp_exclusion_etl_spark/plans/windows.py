@@ -137,7 +137,7 @@ def upsert_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed last-write-wins upsert (A15, reference __main__.py:8-24):
     keep the most recent record per key. Implemented via the dedup
     operator (window row_number==1); on a table format this is
-    MERGE INTO (see sinks.upsert)."""
+    MERGE INTO (see sinks.atomic.AtomicParquetTable.upsert)."""
     from stupp_exclusion_etl_spark.operators.dedup import keep_latest
 
     out = keep_latest(

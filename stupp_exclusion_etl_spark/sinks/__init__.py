@@ -1,1 +1,1 @@
-"""Write-path operators: keyed upsert, partitioned writes, batching."""
+"""Write path: the atomic keyed Parquet table (``atomic.AtomicParquetTable``)."""

@@ -2,9 +2,9 @@
 
 The reference's sink commits each batch transactionally (DynamoDB
 batch_write_item either lands or doesn't — reference __main__.py:8-24);
-``upsert_parquet``'s dynamic-partition-overwrite stand-in is correct
-but NOT atomic across partitions: a mid-job failure can leave a batch
-half-published (3 of 7 touched partitions rewritten). Table formats
+a dynamic-partition-overwrite stand-in is correct but NOT atomic
+across partitions: a mid-job failure can leave a batch half-published
+(3 of 7 touched partitions rewritten). Table formats
 (Delta/Iceberg) solve this with a commit log; none is available in
 this container, so this module implements the same idea directly on
 parquet — a miniature Iceberg:
@@ -41,7 +41,7 @@ races; production deployments back step 2 with a CAS primitive
 (DynamoDB lock table / S3 conditional PUT) exactly as Delta's
 LogStore does — the protocol is unchanged. All file I/O goes through
 the Hadoop FileSystem API so the same code runs on file:/, hdfs:/ and
-s3a:/ (the remote-FS discipline of sinks/upsert.py).
+s3a:/.
 
 Concurrency: optimistic with automatic rebase. Two writers racing to
 the same next version conflict on the create-if-absent commit
@@ -3541,7 +3541,7 @@ class AtomicParquetTable:
     ) -> int:
         """Last-write-wins MERGE of one batch, atomically published.
 
-        Same 100 TB shape as upsert_parquet: only touched partitions
+        The 100 TB shape: only touched partitions
         (new rows' partitions ∪ old partitions of upserted keys — so a
         key that moves partitions is removed from its old one) are
         re-merged and rewritten; both partition lists and the key list
@@ -3560,8 +3560,8 @@ class AtomicParquetTable:
         re-invoked with the SAME id, and because the id is recorded IN
         the atomically-published manifest, a replay after a successful
         commit is a no-op — data files and commit marker can never
-        disagree (the gap idempotent_batch_write's separate _SUCCESS
-        marker leaves open on plain parquet). Schema may widen across
+        disagree (the gap a separate _SUCCESS marker file leaves open
+        on plain parquet). Schema may widen across
         batches (unionByName(allowMissingColumns) + mergeSchema read).
 
         ``_probe`` lets a caller that already KNOWS the batch's

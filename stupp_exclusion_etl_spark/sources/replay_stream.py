@@ -17,11 +17,11 @@ exactly-once contract is structural:
   log here; the parquet replay has nothing to delete.
 
 Pairs with sources/paged.py (batch read + pushdown) and
-sinks/keyed_sink.py (micro-batched keyed upsert write) to round out the
-connector surface. At 100 TB the identical class fronts a real
-offset-bearing endpoint (queue, CDC feed, paged REST): ``read`` swaps
-the parquet slice for a fetch-from-cursor, and Spark's checkpoint makes
-the cursor durable.
+sinks/atomic.py's ``streaming_upsert_sink`` (exactly-once keyed upsert
+per micro-batch) to round out the connector surface. At 100 TB the
+identical class fronts a real offset-bearing endpoint (queue, CDC feed,
+paged REST): ``read`` swaps the parquet slice for a fetch-from-cursor,
+and Spark's checkpoint makes the cursor durable.
 """
 
 from __future__ import annotations

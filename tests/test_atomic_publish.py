@@ -615,6 +615,53 @@ def test_batch_id_makes_upsert_exactly_once(spark, tmp_path):
     assert (7, "B", "b7", 2) in _rows(t)
 
 
+@pytest.mark.parametrize(
+    "layout",
+    [{}, {"cluster_by": ["id"]}, {"bucket_by": 4}, {"index_by": ["v"]}],
+    ids=["plain", "cluster_by", "bucket_by", "index_by"],
+)
+def test_keep_latest_null_keys_and_uri_replay_per_layout(
+    spark, tmp_path, layout
+):
+    """Keep-latest holds on every layout, at a ``file://`` URI path:
+
+    - the FIRST batch dedups (a key twice lands one row) and NULL keys
+      form their own group that a later batch replaces;
+    - a replayed ``batch_id`` is a no-op even with different rows (the
+      marker is resolved through the path's own scheme, which
+      ``os.path`` cannot see);
+    - a late stale update never clobbers a newer row;
+    - a fresh handle on the same URI reads the same rows."""
+    path = "file://" + str(tmp_path / "uri_tbl")
+    assert not os.path.exists(path)  # the URI is opaque to os.path
+    schema = "id long, v string, ver long"
+    order = [F.col("ver").desc()]
+
+    def rows(t):
+        return {(r.id, r.v) for r in t.read().collect()}
+
+    t = AtomicParquetTable(spark, path, keys=["id"], **layout)
+    first = [(1, "a", 1), (2, "b", 1), (None, "c", 1), (2, "b2", 2)]
+    v0 = t.upsert(spark.createDataFrame(first, schema), order, batch_id=0)
+    assert rows(t) == {(1, "a"), (2, "b2"), (None, "c")}
+
+    replay = spark.createDataFrame([(9, "replay", 9)], schema)
+    assert t.upsert(replay, order, batch_id=0) == v0
+    assert rows(t) == {(1, "a"), (2, "b2"), (None, "c")}
+
+    inc = spark.createDataFrame([(None, "c2", 3), (1, "a2", 3)], schema)
+    t.upsert(inc, order, batch_id=1)
+    stale = spark.createDataFrame([(1, "a-stale", 2), (None, "c-stale", 1)], schema)
+    t.upsert(stale, order, batch_id=2)
+    want = {(1, "a2"), (2, "b2"), (None, "c2")}
+    assert rows(t) == want
+
+    fresh = AtomicParquetTable(spark, path, keys=["id"], **layout)
+    assert rows(fresh) == want
+    assert fresh.upsert(replay, order, batch_id=2) == t.current_version()
+    assert rows(fresh) == want
+
+
 def test_three_writer_interleave_no_batch_lost(spark, tmp_path):
     """N-writer stress (beyond the pairwise race): writer A stages,
     then B and C each commit fully (B's commit fires C's via its own

@@ -98,3 +98,77 @@ def test_every_register_module_is_imported():
             f"plans/__init__.py — unreachable from the driver: "
             f"{sorted(set(REGISTRY) - before)}"
         )
+
+
+#: package modules that only tests import, each with the reason it stays
+TEST_ONLY_MODULES = {
+    "functions.metrics": "df.observe metrics for the planned OpStats hook (ROADMAP #5)",
+    "sources.fixtures": "seeded ER/OF/SUR entities for the golden domain test",
+    "sources.formats": "CSV/JSON/ORC ingest adapters, checked by test_formats",
+    "streaming.typed_state": "transformWithStateInPandas operator, checked by test_streaming_stateful",
+}
+
+
+def test_every_package_module_is_reachable():
+    """Dead-module guard: every module under stupp_exclusion_etl_spark/
+    must be imported, transitively, from the registry import
+    (``stupp_exclusion_etl_spark.plans``), a ``perfbench/*.py`` script
+    or ``__spark_entry__.py`` — or sit on TEST_ONLY_MODULES with a
+    reason. Imports are read with ``ast`` (nothing is executed), lazy
+    in-function imports included, so a second implementation that only
+    its own tests call fails here instead of lingering."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    pkg = "stupp_exclusion_etl_spark"
+    modules: dict[str, Path] = {}
+    for f in (repo / pkg).rglob("*.py"):
+        parts = list(f.relative_to(repo).with_suffix("").parts)
+        if parts[-1] == "__init__":
+            parts.pop()
+        modules[".".join(parts)] = f
+
+    def imported(path: Path, name: str) -> set[str]:
+        is_pkg = path.name == "__init__.py"
+        out = set()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                out.update(a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    anchor = name.split(".")
+                    anchor = anchor[: len(anchor) - node.level + is_pkg]
+                    base = ".".join(anchor + ([base] if base else []))
+                out.add(base)
+                out.update(f"{base}.{a.name}" for a in node.names)
+        found = set()
+        for m in out:
+            # importing a.b.c also imports the packages a and a.b
+            parts = m.split(".")
+            found.update(
+                ".".join(parts[:i]) for i in range(1, len(parts) + 1)
+            )
+        return found & set(modules)
+
+    roots = [(repo / "__spark_entry__.py", "__spark_entry__")] + [
+        (f, f.stem) for f in sorted((repo / "perfbench").glob("*.py"))
+    ]
+    seen = {f"{pkg}.plans", pkg}
+    for path, name in roots:
+        seen |= imported(path, name)
+    todo = list(seen)
+    while todo:
+        cur = todo.pop()
+        for m in imported(modules[cur], cur) - seen:
+            seen.add(m)
+            todo.append(m)
+
+    unreached = {
+        m.removeprefix(pkg + ".") for m in modules if m not in seen
+    }
+    assert unreached == set(TEST_ONLY_MODULES), (
+        f"unreachable and unlisted: {sorted(unreached - set(TEST_ONLY_MODULES))}; "
+        f"listed but reachable: {sorted(set(TEST_ONLY_MODULES) - unreached)}"
+    )

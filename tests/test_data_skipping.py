@@ -21,6 +21,7 @@ from stupp_exclusion_etl_spark.sinks.atomic import (
     AtomicParquetTable,
     _enc_stat_value,
     _file_may_match,
+    _zvalue_column,
 )
 
 
@@ -377,6 +378,39 @@ def test_zorder_prunes_on_every_clustered_column(spark, tmp_path):
 
                 want = want.filter(_predicate_column(pred))
             assert got == want.count()
+
+
+def test_zvalue_column_matches_python_morton(spark):
+    """_zvalue_column is the engine's one z-order encoder; pin its bit
+    layout against a plain Python Morton code. Each column buckets as
+    min(max(floor((v-lo)/(hi-lo)*256), 0), 255) over the frame's
+    min/max, and bit b of column i lands at position b*k + i. A
+    constant column adds no bits but still counts in k."""
+    import random
+
+    rng = random.Random(7)
+    pts = [(rng.uniform(-50.0, 50.0), 3.0, rng.uniform(0.0, 1e6)) for _ in range(64)]
+    cols = ["x", "c", "y"]
+    df = spark.createDataFrame(pts, "x double, c double, y double")
+
+    k = len(cols)
+    lo_hi = [(min(p[i] for p in pts), max(p[i] for p in pts)) for i in range(k)]
+
+    def morton(p) -> int:
+        z = 0
+        for i, (lo, hi) in enumerate(lo_hi):
+            if hi <= lo:
+                continue
+            bucket = min(max(math.floor((p[i] - lo) / (hi - lo) * 256), 0), 255)
+            for b in range(8):
+                z |= ((bucket >> b) & 1) << (b * k + i)
+        return z
+
+    got = df.withColumn("z", _zvalue_column(df, cols)).collect()
+    assert len(got) == 64
+    for r in got:
+        p = (r.x, r.c, r.y)
+        assert r.z == morton(p), (p, r.z, morton(p))
 
 
 def test_zorder_invalid_order_rejected(spark, tmp_path):

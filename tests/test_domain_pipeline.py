@@ -1,7 +1,8 @@
 """Golden end-to-end test (SURVEY.md §5.4): the reference's full
 domain pipeline on the FIXTURES.md §B entities — scrape-shaped records
 through coercion, FK-chain joins, the interval-containment query
-surface the GSIs exist for, and the keyed partitioned upsert sink."""
+surface the GSIs exist for, and the atomic keyed table partitioned by
+status."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ from pyspark.sql import functions as F
 
 from stupp_exclusion_etl_spark.functions.coercion import typify_tag
 from stupp_exclusion_etl_spark.operators.joins import range_join_bucketed
-from stupp_exclusion_etl_spark.sinks.upsert import upsert_parquet
+from stupp_exclusion_etl_spark.sinks.atomic import AtomicParquetTable
 from stupp_exclusion_etl_spark.sources.fixtures import (
     exclusion_requests,
     objection_filings,
@@ -50,27 +51,30 @@ def test_full_er_of_sur_pipeline(spark, tmp_path):
 
     # Keyed upsert partitioned by the PublicStatus "GSI": re-delivering
     # a granted record must overwrite, not duplicate (A15 semantics).
-    path = str(tmp_path / "er_table")
-    slim = er.select("ID", "HTSUSCode", "PublicStatus", "PublishDate")
-    upsert_parquet(
-        slim, path, keys=["ID"], order_by=[F.col("PublishDate").desc()],
+    t = AtomicParquetTable(
+        spark, str(tmp_path / "er_table"), keys=["ID"],
         partition_by=["PublicStatus"],
     )
+    order = [F.col("PublishDate").desc()]
+    slim = er.select("ID", "HTSUSCode", "PublicStatus", "PublishDate")
+    t.upsert(slim, order)
     update = slim.filter(F.col("ID") == 7).withColumn(
         "PublicStatus", F.lit("Granted")
     ).withColumn("PublishDate", F.lit("2021-01-01"))
-    upsert_parquet(
-        update, path, keys=["ID"], order_by=[F.col("PublishDate").desc()],
-        partition_by=["PublicStatus"],
-    )
-    final = spark.read.parquet(path)
+    t.upsert(update, order)
+    final = t.read()
     assert final.count() == er.count()
     assert final.filter(F.col("ID") == 7).collect()[0].PublicStatus == "Granted"
 
-    # Equality query on the partition column prunes (what the GSI was for).
-    granted = final.filter(F.col("PublicStatus") == "Granted")
-    plan = granted._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(PublicStatus" in plan
+    # Equality query on the partition column prunes (what the GSI was
+    # for): only the Granted partition's files are kept.
+    where = [("PublicStatus", "=", "Granted")]
+    rep = t.skipping_report(where)
+    assert 0 < rep["files_kept"] < rep["files_total"], rep
+    granted = t.read(where=where)
+    assert granted.count() == final.filter(
+        F.col("PublicStatus") == "Granted"
+    ).count() > 0
 
 
 def test_coercion_on_scraped_values(spark):

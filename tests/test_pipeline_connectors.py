@@ -1,11 +1,9 @@
 """The connector surface composed end-to-end: custom streaming source →
-Structured Streaming aggregation → custom keyed upsert sink via
+Structured Streaming aggregation → atomic keyed upsert via
 foreachBatch. Proves the pieces interoperate, not just pass their own
 tests."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -14,17 +12,17 @@ from tests.conftest import SF_SMALL
 EVENTS = f"{SF_SMALL}/events.parquet"
 
 
-def test_replay_stream_through_keyed_sink(spark, tmp_path):
-    from stupp_exclusion_etl_spark.sinks.keyed_sink import (
-        register_keyed_upsert_sink,
+def test_replay_stream_through_atomic_sink(spark, tmp_path):
+    from stupp_exclusion_etl_spark.sinks.atomic import (
+        AtomicParquetTable,
+        streaming_upsert_sink,
     )
     from stupp_exclusion_etl_spark.sources.replay_stream import (
         register_replay_stream,
     )
 
     register_replay_stream(spark)
-    register_keyed_upsert_sink(spark)
-    sink_dir = str(tmp_path / "agg_table")
+    t = AtomicParquetTable(spark, str(tmp_path / "agg_table"), keys=["event_type"])
 
     stream = (
         spark.readStream.format("events_replay")
@@ -36,16 +34,12 @@ def test_replay_stream_through_keyed_sink(spark, tmp_path):
         F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_v")
     )
 
-    def upsert(batch_df, _batch_id):
-        # complete-mode batches carry the FULL aggregate each time;
-        # last-write-wins per key converges to the final answer
-        batch_df.coalesce(1).write.format("keyed_upsert").option(
-            "path", sink_dir
-        ).option("key", "event_type").mode("append").save()
-
+    # complete-mode batches carry the FULL aggregate each time, and a
+    # key's count only grows; last-write-wins on n converges to the
+    # final answer
     q = (
         agg.writeStream.outputMode("complete")
-        .foreachBatch(upsert)
+        .foreachBatch(streaming_upsert_sink(t, [F.col("n").desc()]))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
@@ -54,8 +48,7 @@ def test_replay_stream_through_keyed_sink(spark, tmp_path):
     finally:
         q.stop()
 
-    final = spark.read.parquet(os.path.join(sink_dir, "data.parquet"))
-    got = {r.ID: (r.n, r.sum_v) for r in final.collect()}
+    got = {r.event_type: (r.n, r.sum_v) for r in t.read().collect()}
     want = {
         r.event_type: (r.n, r.sum_v)
         for r in spark.read.parquet(EVENTS)
@@ -68,3 +61,5 @@ def test_replay_stream_through_keyed_sink(spark, tmp_path):
     }
     assert got == want
     assert len(got) >= 2
+    # one atomic version per non-empty micro-batch
+    assert t.current_version() >= 1

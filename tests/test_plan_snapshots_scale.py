@@ -36,9 +36,9 @@ import sys
 
 import pytest
 
-from tools.bench_scale10_lc import HEAVY
 from tools.plan_scale import (
     FORBIDDEN,
+    HEAVY,
     MUST_CONTAIN,
     MUST_NOT_CONTAIN,
     SCENARIOS,

@@ -1,303 +1,11 @@
-"""Streaming ingest through the keyed upsert sink (A14 × A15 × B14):
-``writeStream.foreachBatch`` applies each micro-batch via
-``upsert_parquet`` — the reference's scrape→batch→batch_write_item loop
-(reference __main__.py:50-66) as a continuous pipeline. Last-write-wins
-across micro-batches lands on the same keep-latest semantics the batch
-sink has, and the partitioned path keeps rewrites partition-scoped per
-batch."""
+"""Streaming ingest into the atomic keyed table (A14 × A15 × B14): the
+reference's scrape→batch→batch_write_item loop (reference
+__main__.py:50-66) as a continuous pipeline. Structured Streaming's
+checkpoint resumes from committed offsets, and every replayed slice
+publishes one atomic version whose end state equals batch
+keep-latest."""
 
 from __future__ import annotations
-
-import time
-
-from pyspark.sql import functions as F
-
-from tests.conftest import SF_SMALL
-
-from stupp_exclusion_etl_spark.sinks.upsert import upsert_parquet
-
-
-def _write_batch(spark, path, rows):
-    df = spark.createDataFrame(rows, "id long, status string, version long")
-    df.coalesce(1).write.mode("append").parquet(path)
-
-
-def test_streaming_foreach_batch_upsert(spark, tmp_path):
-    src = str(tmp_path / "src")
-    target = str(tmp_path / "target")
-
-    _write_batch(spark, src, [(1, "pending", 1), (2, "pending", 1)])
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-
-    def sink(batch_df, batch_id):
-        upsert_parquet(
-            batch_df, target, keys=["id"], order_by=[F.col("version").desc()]
-        )
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-        got = {r.id: (r.status, r.version) for r in spark.read.parquet(target).collect()}
-        assert got == {1: ("pending", 1), 2: ("pending", 1)}, got
-
-        # micro-batch 2: update key 1, insert key 3 — upsert, not append
-        _write_batch(spark, src, [(1, "granted", 2), (3, "pending", 1)])
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            q.processAllAvailable()
-            got = {
-                r.id: (r.status, r.version)
-                for r in spark.read.parquet(target).collect()
-            }
-            if 3 in got:
-                break
-            time.sleep(1)
-        assert got == {
-            1: ("granted", 2),
-            2: ("pending", 1),
-            3: ("pending", 1),
-        }, got
-
-        # a stale replay (version 1 for key 1) must NOT regress the row;
-        # key 4 rides along as the batch-processed marker
-        _write_batch(spark, src, [(1, "pending", 1), (4, "pending", 1)])
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            q.processAllAvailable()
-            got = {
-                r.id: (r.status, r.version)
-                for r in spark.read.parquet(target).collect()
-            }
-            if 4 in got:
-                break
-            time.sleep(1)
-        assert got[1] == ("granted", 2), got
-    finally:
-        q.stop()
-
-
-def test_incremental_rollup_maintenance_equals_batch(spark, tmp_path):
-    """IVM batch-equivalence: fold 4 micro-batches of partial aggregates
-    (per event_type sum/count/min/max over hourly slices of events)
-    through merge_rollup_parquet; the maintained table must equal the
-    direct one-shot aggregation — including avg DERIVED from maintained
-    sum/count, the quantity that silently drifts if avgs are merged
-    directly (the classic IVM bug this sink's contract forbids)."""
-    from stupp_exclusion_etl_spark.catalog import table
-    from stupp_exclusion_etl_spark.sinks.upsert import merge_rollup_parquet
-
-    path = str(tmp_path / "rollup")
-    ev = table(spark, SF_SMALL, "events").select(
-        "event_type", F.col("value").cast("double").alias("value"), "ts"
-    )
-    ev = ev.withColumn("bucket", F.pmod(F.hour("ts"), F.lit(4)))
-
-    for b in range(4):
-        partials = (
-            ev.filter(F.col("bucket") == b)
-            .groupBy("event_type")
-            .agg(
-                F.sum("value").alias("sum_value"),
-                F.count("*").alias("n"),
-                F.min("value").alias("min_value"),
-                F.max("value").alias("max_value"),
-            )
-        )
-        merge_rollup_parquet(
-            spark,
-            partials,
-            path,
-            keys=["event_type"],
-            measures={
-                "sum_value": "sum",
-                "n": "sum",
-                "min_value": "min",
-                "max_value": "max",
-            },
-        )
-
-    maintained = {
-        r.event_type: r.asDict()
-        for r in spark.read.parquet(path).collect()
-    }
-    direct = {
-        r.event_type: r.asDict()
-        for r in ev.groupBy("event_type")
-        .agg(
-            F.sum("value").alias("sum_value"),
-            F.count("*").alias("n"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.avg("value").alias("avg_value"),
-        )
-        .collect()
-    }
-    assert set(maintained) == set(direct)
-    for k, d in direct.items():
-        m = maintained[k]
-        assert m["n"] == d["n"], k
-        assert abs(m["sum_value"] - d["sum_value"]) < 1e-6, k
-        assert m["min_value"] == d["min_value"], k
-        assert m["max_value"] == d["max_value"], k
-        assert abs(m["sum_value"] / m["n"] - d["avg_value"]) < 1e-9, k
-
-
-def test_partitioned_rollup_scoped_merge(spark, tmp_path):
-    """Partition-scoped IVM: rollup partitioned by event_type; a batch
-    touching ONE partition must (a) keep the maintained table equal to
-    the direct aggregation and (b) leave untouched partitions'
-    files byte-identical — proof the merge neither read nor rewrote
-    them (dynamic partition overwrite, partition_by ⊆ keys)."""
-    import os
-
-    from stupp_exclusion_etl_spark.catalog import table
-    from stupp_exclusion_etl_spark.sinks.upsert import merge_rollup_parquet
-
-    path = str(tmp_path / "rollup_part")
-    ev = table(spark, SF_SMALL, "events").select(
-        "event_type",
-        F.hour("ts").alias("hour"),
-        F.col("value").cast("double").alias("value"),
-    )
-    measures = {"sum_value": "sum", "n": "sum"}
-
-    def partials(df):
-        return df.groupBy("event_type", "hour").agg(
-            F.sum("value").alias("sum_value"), F.count("*").alias("n")
-        )
-
-    types = sorted(r[0] for r in ev.select("event_type").distinct().collect())
-    assert len(types) >= 2
-    # batch 1: everything; batch 2: only the first event_type
-    merge_rollup_parquet(
-        spark, partials(ev), path,
-        keys=["event_type", "hour"], measures=measures,
-        partition_by=["event_type"],
-    )
-
-    def file_state(t):
-        d = os.path.join(path, f"event_type={t}")
-        return {
-            f: os.path.getmtime(os.path.join(d, f))
-            for f in os.listdir(d) if f.endswith(".parquet")
-        }
-
-    before = {t: file_state(t) for t in types[1:]}
-    batch2 = ev.filter(F.col("event_type") == types[0])
-    merge_rollup_parquet(
-        spark, partials(batch2), path,
-        keys=["event_type", "hour"], measures=measures,
-        partition_by=["event_type"],
-    )
-    # untouched partitions: exact same files, same mtimes
-    assert {t: file_state(t) for t in types[1:]} == before
-
-    maintained = {
-        (r.event_type, r.hour): (r.sum_value, r.n)
-        for r in spark.read.parquet(path).collect()
-    }
-    doubled = ev.unionByName(batch2)
-    direct = {
-        (r.event_type, r.hour): (r.sum_value, r.n)
-        for r in partials(doubled).collect()
-    }
-    assert set(maintained) == set(direct)
-    for k, (s, n) in direct.items():
-        assert maintained[k][1] == n, k
-        assert abs(maintained[k][0] - s) < 1e-6, k
-
-
-def test_foreach_batch_multi_sink_fanout(spark, tmp_path):
-    """The production multi-sink pattern: ONE stream, each micro-batch
-    persisted once and fanned out to two sinks — an additive IVM rollup
-    (merge_rollup_parquet) and an append-only deduplicated event log.
-    Both sinks must agree with one-shot batch computations afterward:
-    fan-out must not double-read or drop a batch."""
-    from stupp_exclusion_etl_spark.catalog import table
-    from stupp_exclusion_etl_spark.sinks.upsert import merge_rollup_parquet
-    from stupp_exclusion_etl_spark.streaming.windows import events_stream
-
-    sf = SF_SMALL
-    rollup = str(tmp_path / "rollup")
-    log = str(tmp_path / "log")
-
-    def handle(batch_df, _batch_id):
-        batch_df.persist()
-        try:
-            partials = batch_df.groupBy("event_type").agg(
-                F.count("*").alias("n")
-            )
-            merge_rollup_parquet(
-                spark, partials, rollup, ["event_type"], {"n": "sum"}
-            )
-            (
-                batch_df.dropDuplicates(["event_id"])
-                .select("event_id", "event_type")
-                .write.mode("append")
-                .parquet(log)
-            )
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        events_stream(spark, sf)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    if q.isActive:
-        q.stop()
-
-    ev = table(spark, sf, "events")
-    want = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-    got = {r.event_type: r.n for r in spark.read.parquet(rollup).collect()}
-    assert got == want
-    # the bounded source has unique event_ids, so the dedup'd log must
-    # hold exactly the distinct ids
-    n_log = spark.read.parquet(log).count()
-    assert n_log == ev.select("event_id").distinct().count()
-
-
-def test_idempotent_batch_write_skips_replay(spark, tmp_path):
-    """A replayed micro-batch (same batch_id, possibly different
-    observed rows after upstream retry) must be a no-op: first write
-    lands, replay is skipped, totals unchanged, and the batch_id
-    partition column is queryable on read."""
-    from stupp_exclusion_etl_spark.sinks.upsert import idempotent_batch_write
-
-    path = str(tmp_path / "log")
-    b0 = spark.range(10).select(F.col("id").alias("event_id"))
-    assert idempotent_batch_write(b0, path, 0) is True
-    replay = spark.range(99).select(F.col("id").alias("event_id"))
-    assert idempotent_batch_write(replay, path, 0) is False
-    assert idempotent_batch_write(b0, path, 1) is True
-    got = spark.read.parquet(path)
-    assert got.count() == 20
-    assert got.filter(F.col("batch_id") == 0).count() == 10
-
-
-def test_idempotent_batch_write_uri_path(spark, tmp_path):
-    """The replay-skip probe must resolve the path's own scheme (Hadoop
-    FileSystem API), not the driver's local os.path view — exercised
-    with an explicit file:/ URI, which os.path.exists cannot resolve
-    (it would see a literal 'file:' directory and always answer False,
-    silently degrading skip-replay to rewrite-every-replay)."""
-    import os
-
-    from stupp_exclusion_etl_spark.sinks.upsert import idempotent_batch_write
-
-    path = "file://" + str(tmp_path / "urilog")
-    assert not os.path.exists(path)  # the URI is opaque to os.path
-    b0 = spark.range(7).select(F.col("id").alias("event_id"))
-    assert idempotent_batch_write(b0, path, 0) is True
-    assert idempotent_batch_write(b0, path, 0) is False  # replay skipped
-    assert spark.read.parquet(path).count() == 7
 
 
 def test_stream_restart_from_checkpoint_no_duplication(spark, tmp_path):
@@ -334,40 +42,6 @@ def test_stream_restart_from_checkpoint_no_duplication(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 80, "restart reprocessed or dropped files"
     assert got.select("id").distinct().count() == 80
-
-
-def test_incremental_join_view_equals_batch(spark, tmp_path):
-    """Join IVM: maintain J = orders ⋈ lineitem-on-orderkey through 3
-    interleaved delta batches (left-only, right-only, both) and require
-    exact row-multiset equality with the one-shot join of everything —
-    the ΔL⋈ΔR double-count bug would show here immediately."""
-    from stupp_exclusion_etl_spark.catalog import table
-    from stupp_exclusion_etl_spark.sinks.upsert import merge_join_parquet
-
-    state = str(tmp_path / "jview")
-    o = table(spark, SF_SMALL, "orders").select(
-        F.col("o_orderkey").alias("k"), "o_orderstatus"
-    )
-    li = table(spark, SF_SMALL, "lineitem").select(
-        F.col("l_orderkey").alias("k"), "l_linenumber", "l_quantity"
-    )
-    o1, o2 = o.filter("k % 2 = 0"), o.filter("k % 2 = 1")
-    l1, l2, l3 = (
-        li.filter("l_linenumber = 1"),
-        li.filter("l_linenumber = 2"),
-        li.filter("l_linenumber >= 3"),
-    )
-    # batch 1: left+right; batch 2: right only; batch 3: left+right
-    merge_join_parquet(spark, state, o1, l1, ["k"])
-    merge_join_parquet(spark, state, None, l2, ["k"])
-    merge_join_parquet(spark, state, o2, l3, ["k"])
-
-    view = spark.read.parquet(f"{state}/J.parquet")
-    direct = o.join(li, "k")
-    cols = ["k", "o_orderstatus", "l_linenumber", "l_quantity"]
-    got = sorted(map(tuple, view.select(*cols).collect()))
-    want = sorted(map(tuple, direct.select(*cols).collect()))
-    assert len(got) == len(want) and got == want
 
 
 def test_stream_atomic_upsert_commits_every_micro_batch(spark):

@@ -31,24 +31,60 @@ import json
 import os
 import sys
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from tests.plan_guard import normalize  # noqa: E402
-from tools.bench_scale10_lc import HEAVY  # noqa: E402
 
 SF1 = "/tmp/scaled/sf1"
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SKEW_DIR = "/tmp/skew/sf0.1"
 SNAPSHOT_PATH = os.path.join(REPO, "tests", "plan_snapshots_scale.json")
 
+#: the heavy set whose final adaptive plans are pinned at sf1
+HEAVY = [
+    "pipeline_near_dedup",
+    "dedup_groups_cc",
+    "dedup_groups_cc_star",
+    "dedup_minhash_lsh",
+    "graph_pagerank",
+    "text_lang_id_learned",
+    "join_fk_chain",
+    "upsert_keep_latest",
+    "atomic_upsert_read",
+    "atomic_merge_read",
+    "dedup_embedding_cosine",
+    "sim_knn_join",
+    # r12: the bucketed 1-exchange merge and the persisted-index
+    # lifecycle, each a real multi-commit write workload at 15M keys /
+    # 200k vectors over real executor JVMs
+    "atomic_bucketed_merge",
+    "sim_index_incremental",
+    # r13: batched index-backed serving over the whole query stripe
+    # and the token-window dup-span removal (the gram shuffle is the
+    # 100 TB risk surface — N x token volume)
+    "sim_index_batch_topk",
+    "text_dup_span_removal",
+    # r14: the iterative full-frame trainer (3 groupBy passes over
+    # every document — the trajectory family's scale shape) and the
+    # learn+apply tokenizer pipeline (one corpus pass to the vocab,
+    # then vocab-bounded merge jobs — BPE's corpus-independence claim
+    # gets empirical sf10 evidence)
+    "ml_kmeans_doc_features",
+    "ml_bpe_apply_tokenize",
+]
+
 #: row-at-a-time Python and cartesian products must never appear in a
 #: FINAL adaptive plan either (the compile-time invariant, re-checked
 #: after AQE re-planning)
 FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
 
-#: skew-detection confs for the skew probe — test-scale thresholds,
-#: same rationale as tools/bench_skew.py (defaults fire at 100 TB).
+#: skew-detection confs for the skew probe — test-scale thresholds
+#: (the defaults fire only at 100 TB).
 #: AQE only SPLITS a skewed partition into chunks of at least
 #: advisoryPartitionSizeInBytes, so the advisory size must sit WELL
 #: below the hot partition's compressed shuffle bytes (~50-70 KB for
@@ -63,6 +99,58 @@ _SKEW_CONF = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8k",
     "spark.sql.files.maxPartitionBytes": "131072",
 }
+
+
+# Fact tables are written with small row groups: AQE splits a skewed
+# reduce partition by MAP-OUTPUT RANGES, so a single-row-group file
+# (= one effective mapper at this scale) can never be skew-split and
+# OptimizeSkewedJoin silently declines. At 100 TB there are thousands
+# of mappers and this is a non-issue; at 2.7 MB it was the whole
+# reason the skew probe failed (found empirically this round).
+ROW_GROUP = 10_000
+
+
+def gen_skew(src: str, out: str) -> None:
+    """Write a zipf-style skewed copy of ``src`` to ``out``: 20% of
+    events go to user 0, 20% of orders to customer 1, and 20% of
+    documents become one giant near-duplicate cluster (shared base
+    text plus a per-doc tail)."""
+    os.makedirs(out, exist_ok=True)
+    for t in ("region", "nation", "customer", "supplier", "part",
+              "lineitem", "embeddings"):
+        pq.write_table(pq.read_table(f"{src}/{t}.parquet"),
+                       f"{out}/{t}.parquet")
+
+    ev = pq.read_table(f"{src}/events.parquet")
+    eid = np.asarray(ev["event_id"].combine_chunks())
+    uid = np.asarray(ev["user_id"].combine_chunks()).copy()
+    uid[eid % 5 == 0] = 0  # hot user: 20% of all events
+    ev = ev.set_column(ev.column_names.index("user_id"), "user_id",
+                       pa.array(uid, type=ev["user_id"].type))
+    pq.write_table(ev, f"{out}/events.parquet", row_group_size=ROW_GROUP)
+
+    o = pq.read_table(f"{src}/orders.parquet")
+    okey = np.asarray(o["o_orderkey"].combine_chunks())
+    ckey = np.asarray(o["o_custkey"].combine_chunks()).copy()
+    ckey[okey % 5 == 0] = 1  # hot customer: 20% of all orders
+    o = o.set_column(o.column_names.index("o_custkey"), "o_custkey",
+                     pa.array(ckey, type=o["o_custkey"].type))
+    pq.write_table(o, f"{out}/orders.parquet", row_group_size=ROW_GROUP)
+
+    d = pq.read_table(f"{src}/documents.parquet")
+    ids = d["doc_id"].to_pylist()
+    texts = d["text"].to_pylist()
+    base = next(t for t in texts if t and len(t) > 200)
+    new_texts = [
+        f"{base} tail{i}" if (i % 5 == 0) else t
+        for i, t in zip(ids, texts)
+    ]
+    d = d.set_column(d.column_names.index("text"), "text",
+                     pa.array(new_texts, type=d["text"].type))
+    n = [None if x is None else len(x) for x in new_texts]
+    d = d.set_column(d.column_names.index("n_chars"), "n_chars",
+                     pa.array(n, type=d["n_chars"].type))
+    pq.write_table(d, f"{out}/documents.parquet", row_group_size=1000)
 
 
 def final_adaptive_plan(df) -> str:
@@ -98,8 +186,6 @@ def _skew_probe_df(spark):
 def scenario_aqe_skew_probe(spark) -> str:
     """Hot-key join final plan under skew-detection confs + no
     broadcast (forced SMJ so the skew machinery is on the hook)."""
-    from tools.bench_skew import gen_skew
-
     if not os.path.exists(os.path.join(SKEW_DIR, "orders.parquet")):
         gen_skew(SF01, SKEW_DIR)
     saved = {}

@@ -40,7 +40,7 @@ def main() -> None:
     def njobs() -> int:
         return jsc.dagScheduler().numTotalJobs()
 
-    # warm up (same as bench.py)
+    # warm up: one plan build and one Python worker start
     REGISTRY["point_lookup"].fn(spark, sf_dir).count()
     spark.range(64).repartition(8).mapInPandas(lambda it: it, "id long").count()
 
