@@ -46,9 +46,11 @@ Serving and assignment run ONE numpy kernel (below) over flat Arrow
 values. A query batch is collected (zero jobs on a LocalRelation; a
 batch is serving-sized by contract), routed on the driver against the
 memoized centroids, and its probed cells are read once, chunk/file-
-pruned — the only Spark job; the top-k returns as a LocalRelation
-frame. A probed read above ``_DRIVER_PROBE_BYTES`` is scored in Arrow
-tasks instead, then merged per query: only the placement differs,
+pruned, by the sink's driver scan; the top-k returns as a LocalRelation
+frame, so serving a local table runs no Spark job (a table off the
+local filesystem collects its probed read in one). A probed read above
+the sink's driver byte budget (``atomic._DRIVER_SCAN_BYTES``) is scored
+in Arrow tasks instead, then merged per query: only the placement differs,
 never the arithmetic. Build and refresh assign through the kernel in a
 map-only Arrow pass, so every path agrees on NaN, NULL and ties.
 """
@@ -86,12 +88,6 @@ _BATCH_SAMPLE_QUERIES = 8
 
 #: Values per kernel scoring block (_score): 8 MB of float64 pairs.
 _BLOCK = 1 << 20
-
-#: Serving runs the kernel on the driver while the probed read is at
-#: most this many bytes (_probe_bytes), else in Arrow tasks: the measured
-#: crossover on 4 local cores at 32-768 dimensions, far below
-#: spark.driver.maxResultSize.
-_DRIVER_PROBE_BYTES = 32 << 20
 
 _META_APPLIED = "applied_version"
 _META_TRAINED = "trained_version"
@@ -899,35 +895,26 @@ class PersistedIvfIndex:
             raise ValueError("index not built")
         return a if cells else a.limit(0)
 
-    def _probe_bytes(self, cells: list, cand, n_queries: int) -> float:
-        """Driver bytes of serving ``cells`` there: the probed read (an
-        upper bound from the kept files' row stats, zero jobs) at the
-        stored vector width plus the queries; no stats: unbounded."""
-        where = [("cell", "in", cells)]
-        rep = self.assignments.skipping_report(where) if cells else {}
-        rows = rep.get("rows_kept", 0)
-        if rows is None:
-            return float("inf")
-        d = int(self._centroids()[1][2].max())
-        vec_t = cand.schema[self.vec_col].dataType.elementType
-        item = 4 if isinstance(vec_t, T.FloatType) else 8
-        return float(rows * (d * item + 16) + n_queries * d * 8)
-
     def _serve(self, qids, q, routes, k: int, qid_field=None) -> DataFrame:
         """Top-k of every query over the candidate rows of its routed
         cells: (qid, id, cell, cos_sim), or (id, cell, cos_sim) without
-        ``qid_field``. ONE Spark job — the pruned read — then the
-        kernel on the driver, returned as a LocalRelation frame. Above
-        the driver byte budget (_probe_bytes) the kernel runs in Arrow
-        tasks over the same read instead, a per-query top-k window
-        merges the tasks' partial top-ks, and a sort restores the
-        driver placement's (query, rank) row order."""
+        ``qid_field``. While the probed cells' files fit the sink's
+        byte budget their rows come to the driver (``_driver_read``: a
+        pyarrow scan, or one collect job for a table off the local
+        filesystem) and the kernel scores them there, returned as a
+        LocalRelation frame. Above
+        the budget the kernel runs in Arrow tasks over the pruned
+        FileScan instead, a per-query top-k window merges the tasks'
+        partial top-ks, and a sort restores the driver placement's
+        (query, rank) row order."""
         by_cell = {c: np.flatnonzero((routes == c).any(axis=1))
                    for c in np.unique(routes).tolist()}
-        cand = self._probed(sorted(by_cell)).select(
-            self.id_col, "cell", self.vec_col
-        )
-        fields = [cand.schema[self.id_col], cand.schema["cell"],
+        cells = sorted(by_cell)
+        scan = self.assignments._driver_read([("cell", "in", cells)])
+        if scan is None:
+            cand = self._probed(cells).select(self.id_col, "cell", self.vec_col)
+        src = cand.schema if scan is None else scan[1]
+        fields = [src[self.id_col], src["cell"],
                   T.StructField("cos_sim", T.DoubleType())]
         qid_pa = None
         if qid_field is not None:
@@ -946,10 +933,10 @@ class PersistedIvfIndex:
                 cols.insert(0, qid_pa.take(qi))
             return cols, qi
 
-        est = self._probe_bytes(sorted(by_cell), cand, len(q[3]))
-        if est <= _DRIVER_PROBE_BYTES:
-            t = cand.toArrow()
-            cols, _qi = hits(*(c.combine_chunks() for c in t.columns))
+        if scan is not None:
+            t = scan[0]
+            cols, _qi = hits(*(t.column(c).combine_chunks()
+                               for c in (self.id_col, "cell", self.vec_col)))
             out = pa.Table.from_arrays(cols, schema=to_arrow_schema(schema))
             return self.spark.createDataFrame(out, schema)
 

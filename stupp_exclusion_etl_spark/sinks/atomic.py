@@ -55,7 +55,9 @@ the new snapshot otherwise — so no batch is ever lost
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import re
 import uuid
@@ -1192,6 +1194,10 @@ def _normalize_predicate(pred: tuple) -> tuple[str, str, list]:
     return col, op, (list(v) if op == "in" else [v])
 
 
+_COMPARE = {"=": operator.eq, "<": operator.lt, "<=": operator.le,
+            ">": operator.gt, ">=": operator.ge}
+
+
 def _predicate_column(pred: tuple) -> Column:
     """The exact-semantics Spark filter for one predicate — applied on
     top of the pruned scan so skipping can only ever remove work,
@@ -1206,10 +1212,163 @@ def _predicate_column(pred: tuple) -> Column:
         # SQL semantics: x IN () is false for every row; Column.isin()
         # with zero args would raise instead
         return c.isin(*vals) if vals else F.lit(False)
-    v = vals[0]
-    return {
-        "=": c == v, "<": c < v, "<=": c <= v, ">": c > v, ">=": c >= v
-    }[op]
+    # one Column operator: each costs a py4j round trip
+    return _COMPARE[op](c, vals[0])
+
+
+# ----------------------------------------------------------------------
+# Driver placement of predicated reads
+# ----------------------------------------------------------------------
+
+#: Driver placement of predicated reads (``_driver_scan``): while the
+#: kept files hold at most this many bytes (the manifest's per-file
+#: sizes), pyarrow reads them on the driver instead of a Spark job
+#: scanning them. The IVF probe scores such a read on the driver; on 4
+#: local cores that wins up to ~30 MB and Arrow tasks win from ~40 MB,
+#: and a selective read(where) still wins at 75 MB (CHANGES.md).
+_DRIVER_SCAN_BYTES = 32 << 20
+
+#: read(where) serves the driver scan as a LocalRelation while the rows
+#: the prefilter keeps hold at most this many Arrow bytes. Catalyst
+#: filters a LocalRelation on one driver thread and ships it whole to
+#: any job above it, so a broad read is faster as a FileScan: on 4
+#: local cores a count over it loses from ~0.8 MB of rows (10k rows of
+#: 10 columns), a collect still wins at 1.6 MB (CHANGES.md).
+_LOCAL_RELATION_BYTES = 512 << 10
+
+#: Spark types whose Arrow form createDataFrame carries back exactly
+#: (no session time zone, collation or char padding involved)
+_DRIVER_TYPES = ("boolean", "tinyint", "smallint", "int", "bigint",
+                 "float", "double", "string", "binary", "date")
+_PART_INT_RANGE = {"tinyint": 1 << 7, "smallint": 1 << 15,
+                   "int": 1 << 31, "bigint": 1 << 63}
+
+
+def _fits_driver(man: dict, rel: list[str]) -> bool:
+    """Whether the files ``rel`` have recorded manifest sizes adding
+    up to at most ``_DRIVER_SCAN_BYTES``."""
+    stats = man.get("stats", {})
+    sizes = [(stats.get(f) or {}).get("bytes") for f in rel]
+    return None not in sizes and sum(sizes) <= _DRIVER_SCAN_BYTES
+
+
+def _driver_type(dt):
+    """``dt`` with every level nullable, as a FileScan reports it, or
+    None when the driver scan cannot carry it exactly."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.ArrayType):
+        el = _driver_type(dt.elementType)
+        return None if el is None else T.ArrayType(el, True)
+    if isinstance(dt, T.DecimalType) or dt.simpleString() in _DRIVER_TYPES:
+        return dt
+    return None
+
+
+@functools.lru_cache(maxsize=64)
+def _driver_schema(ddl: str, partition_by: tuple):
+    """The schema a FileScan of this table reports — data columns in
+    DDL order, then the partition columns, every field nullable — or
+    None when a column's type (or a partition column's, parsed from
+    its directory name) is outside what the driver scan carries.
+    Cached per DDL: parsing one costs a JVM round trip."""
+    from pyspark.sql import types as T
+
+    fields = {f.name: f for f in T.StructType.fromDDL(ddl).fields}
+    order = [n for n in fields if n not in partition_by]
+    order += [n for n in partition_by if n in fields]
+    out = []
+    for n in order:
+        dt = _driver_type(fields[n].dataType)
+        if dt is None or (
+            n in partition_by
+            and dt.simpleString() not in ("string", *_PART_INT_RANGE)
+        ):
+            return None
+        out.append(T.StructField(n, dt, True))
+    return T.StructType(out)
+
+
+def _partition_values(part_dir: str, schema) -> dict:
+    """Typed partition values of one Hive dir, the way Spark parses
+    them under a declared schema; ValueError where Spark would refuse
+    the value."""
+    from urllib.parse import unquote
+
+    out = {}
+    for seg in part_dir.split("/") if part_dir else ():
+        name, _, raw = seg.partition("=")
+        if name not in schema.names:
+            continue
+        t = schema[name].dataType.simpleString()
+        if raw == "__HIVE_DEFAULT_PARTITION__":
+            out[name] = None
+        elif t == "string":
+            out[name] = unquote(raw)
+        else:
+            if not re.fullmatch(r"[+-]?[0-9]+", raw):
+                raise ValueError(raw)
+            v = int(raw)
+            if not -_PART_INT_RANGE[t] <= v < _PART_INT_RANGE[t]:
+                raise ValueError(raw)
+            out[name] = v
+    return out
+
+
+def _literal_kind(v) -> str | None:
+    if isinstance(v, bool):  # before int: bool IS an int
+        return None
+    if isinstance(v, int):
+        return "i" if -(1 << 63) <= v < (1 << 63) else None
+    if isinstance(v, float):
+        return None if v != v else "f"  # NaN sorts above all in Spark
+    if isinstance(v, str):
+        return "s"
+    return None
+
+
+def _prefilter_mask(table, where: list[tuple]):
+    """A pyarrow row mask that keeps at least every row the
+    predicates' Spark filters keep: rows on float columns that are NaN
+    stay (Spark sorts NaN above every double and makes it equal to
+    itself), and a predicate whose literal type does not match its
+    column masks nothing (Spark's implicit casts decide it). None when
+    no predicate masks."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    mask = None
+    for pred in where:
+        col, op, vals = _normalize_predicate(pred)
+        arr = table.column(col)
+        if op in ("is_null", "not_null"):
+            m = pc.is_null(arr) if op == "is_null" else pc.is_valid(arr)
+        else:
+            t = arr.type
+            kind = ("i" if pa.types.is_integer(t)
+                    else "f" if pa.types.is_floating(t)
+                    else "s" if pa.types.is_string(t)
+                    or pa.types.is_large_string(t) else None)
+            if kind is None or any(_literal_kind(v) != kind for v in vals):
+                continue
+            at = {"i": pa.int64(), "f": pa.float64(), "s": pa.string()}[kind]
+            arr = pc.cast(arr, at)
+            if op == "in" and kind == "f":
+                # is_in hashes bits, so -0.0 would miss 0.0
+                m = pc.is_in(arr, value_set=pa.array([], at))
+                for v in vals:
+                    m = pc.or_(m, pc.equal(arr, pa.scalar(v, at)))
+            elif op == "in":
+                m = pc.is_in(arr, value_set=pa.array(vals, at))
+            else:
+                fn = {"=": pc.equal, "<": pc.less, "<=": pc.less_equal,
+                      ">": pc.greater, ">=": pc.greater_equal}[op]
+                m = fn(arr, pa.scalar(vals[0], at))
+            if kind == "f":
+                m = pc.or_kleene(m, pc.is_nan(arr))
+        m = pc.fill_null(m, False)
+        mask = m if mask is None else pc.and_(mask, m)
+    return mask
 
 
 # ----------------------------------------------------------------------
@@ -1352,10 +1511,26 @@ class AtomicParquetTable:
 
     # -- snapshot resolution ------------------------------------------
 
+    @functools.cached_property
+    def _local_root(self) -> str | None:
+        """The table directory as a local path when fs.defaultFS puts
+        it on the local filesystem, else None: resolved once per
+        handle, so version listing and the driver scan skip the JVM."""
+        if not _qualify_uri(self.spark, self.path).startswith("file:"):
+            return None
+        return _local_fs_path(self.path)
+
     def current_version(self) -> int | None:
+        if self._local_root is not None:
+            try:
+                names = os.listdir(f"{self._local_root}/{MANIFEST_DIR}")
+            except FileNotFoundError:
+                names = []
+        else:
+            names = _list_names(self.spark, f"{self.path}/{MANIFEST_DIR}")
         versions = [
             int(n[1:-5])
-            for n in _list_names(self.spark, f"{self.path}/{MANIFEST_DIR}")
+            for n in names
             if n.startswith("v") and n.endswith(".json")
         ]
         return max(versions) if versions else None
@@ -1780,7 +1955,17 @@ class AtomicParquetTable:
         the scan (metadata-only; no footer is opened for a skipped
         file), then applies the same predicates as a real Spark filter
         so results are exact even where stats couldn't prune. Files
-        without stats (pre-stats manifests) are never skipped."""
+        without stats (pre-stats manifests) are never skipped.
+
+        A predicated read has two placements after that pruning. When
+        the kept files' manifest sizes add up to at most
+        ``_DRIVER_SCAN_BYTES``, pyarrow reads them on the driver
+        (``_driver_scan``), and if the rows its prefilter keeps fit in
+        ``_LOCAL_RELATION_BYTES`` the frame is a LocalRelation under
+        the same Spark filters, so collecting it runs no Spark job.
+        Otherwise, and for column types the Arrow round trip does not
+        carry exactly, it is a FileScan. Both give the same schema and
+        rows; an unpredicated read is always a FileScan."""
         if as_of_timestamp_ms is not None:
             if version is not None:
                 raise ValueError(
@@ -1791,22 +1976,15 @@ class AtomicParquetTable:
             version = self.current_version()
             if version is None:
                 return None
-        # predicated reads assemble only the chunks whose record
-        # summaries admit the predicates (skipped chunks provably hold
-        # no matching file); unpredicated reads assemble everything
-        man = (
-            self._manifest_where(version, where)
-            if where
-            else self._manifest_for_read(version)
+        man, rel = self._kept(version, where)
+        scan = (
+            self._driver_scan(man, rel, where, _LOCAL_RELATION_BYTES)
+            if where and rel
+            else None
         )
-        rel = [
-            f
-            for part_files in man["partitions"].values()
-            for f in part_files
-        ]
-        if where:
-            rel = self._prune_files(man, rel, where)
-        if not rel:
+        if scan is not None:
+            df = self.spark.createDataFrame(*scan)
+        elif not rel:
             df = self.spark.createDataFrame([], man["schema_ddl"])
         else:
             # explicit manifest schema, NOT footer mergeSchema:
@@ -1824,9 +2002,106 @@ class AtomicParquetTable:
             )
         for pred in where or ():
             df = df.filter(_predicate_column(pred))
-        if where and rel:
+        if where and rel and scan is None:
             df = self._maybe_broadcast_hint(df, man, rel, where)
         return df
+
+    def _kept(self, version: int, where: list[tuple] | None):
+        """(manifest, live files a ``where`` keeps) of one version."""
+        # predicated reads assemble only the chunks whose record
+        # summaries admit the predicates (skipped chunks provably hold
+        # no matching file); unpredicated reads assemble everything
+        man = (
+            self._manifest_where(version, where)
+            if where
+            else self._manifest_for_read(version)
+        )
+        rel = [
+            f
+            for part_files in man["partitions"].values()
+            for f in part_files
+        ]
+        if where:
+            rel = self._prune_files(man, rel, where)
+        return man, rel
+
+    def _driver_read(self, where: list[tuple]):
+        """The head snapshot's ``read(where)`` rows as (Arrow table,
+        Spark schema) for callers that compute on the driver, or None
+        before the first commit or when the kept files' manifest bytes
+        are over ``_DRIVER_SCAN_BYTES``. The rows come from
+        ``_driver_scan`` (prefiltered, no cap on the rows kept); where
+        it declines (a table off the local filesystem, a type it does
+        not carry) they are the FileScan's, collected by one job."""
+        version = self.current_version()
+        if version is None:
+            return None
+        man, rel = self._kept(version, where)
+        if not _fits_driver(man, rel):
+            return None
+        scan = self._driver_scan(man, rel, where)
+        if scan is None:
+            df = self.read(version=version, where=where)
+            scan = df.toArrow(), df.schema
+        return scan
+
+    def _driver_scan(
+        self, man: dict, rel: list[str], where: list[tuple],
+        max_rows_bytes: int | None = None,
+    ):
+        """(Arrow table, Spark schema) of the kept files ``rel``, read
+        by pyarrow on the driver, or None when they do not fit
+        ``_fits_driver``, a file is not on the local filesystem, a
+        column's type is one the driver scan does not carry, a
+        predicate names a column not spelled as in the schema (Spark
+        resolves names case-insensitively), or the rows kept outgrow
+        ``max_rows_bytes`` of Arrow. Each file is cast to the manifest
+        schema (widened ints, NULL-filled missing columns) with its
+        partition values parsed from the dir, and its rows go through
+        ``_prefilter_mask``: a superset of the predicates' matches, so
+        the Spark filters on top still decide every row."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = _driver_schema(man["schema_ddl"], tuple(self.partition_by))
+        if (
+            schema is None
+            or self._local_root is None
+            or not _fits_driver(man, rel)
+            or any(_normalize_predicate(p)[0] not in schema.names
+                   for p in where)
+        ):
+            return None
+        arrow_schema = to_arrow_schema(schema)
+        file_part = {
+            f: part for part, files in man["partitions"].items() for f in files
+        }
+        tables = [arrow_schema.empty_table()]
+        kept_bytes = 0
+        try:
+            for f in rel:
+                t = pq.read_table(f"{self._local_root}/{DATA_DIR}/{f}")
+                parts = _partition_values(file_part[f], schema)
+                cols = []
+                for fld in arrow_schema:
+                    if fld.name in parts:
+                        cols.append(pa.array(
+                            [parts[fld.name]] * t.num_rows, fld.type
+                        ))
+                    elif fld.name in t.column_names:
+                        cols.append(t.column(fld.name).cast(fld.type))
+                    else:
+                        cols.append(pa.nulls(t.num_rows, fld.type))
+                t = pa.Table.from_arrays(cols, schema=arrow_schema)
+                mask = _prefilter_mask(t, where)
+                tables.append(t if mask is None else t.filter(mask))
+                kept_bytes += tables[-1].nbytes
+                if max_rows_bytes is not None and kept_bytes > max_rows_bytes:
+                    return None
+        except (pa.ArrowNotImplementedError, ValueError, OSError):
+            return None  # a cast Spark may treat differently: FileScan
+        return pa.concat_tables(tables), schema
 
     def table_at(
         self,
@@ -3579,7 +3854,6 @@ class AtomicParquetTable:
             if last is not None and batch_id <= last:
                 return parent  # replayed micro-batch: already committed
         txn = uuid.uuid4().hex[:16]
-        existing = self.read()
         bk_raw, probe_small = (
             _probe
             if _probe is not None
@@ -3593,7 +3867,7 @@ class AtomicParquetTable:
                 _probe=_probe,
             )
 
-        if existing is None:
+        if parent is None:
             if self.bucket_count:
                 merged = keep_latest(
                     new_data.repartition(self.bucket_count, *self.keys),
@@ -3615,7 +3889,8 @@ class AtomicParquetTable:
 
         if self.bucket_count:
             return self._bucketed_upsert(
-                existing, new_data, order_by, parent, txn, batch_keys,
+                self.read(version=parent), new_data, order_by, parent, txn,
+                batch_keys,
                 remerge, max_commit_retries, batch_id,
             )
 
@@ -3629,6 +3904,7 @@ class AtomicParquetTable:
         if scoped is not None:
             return scoped
 
+        existing = self.read(version=parent)
         if not self.partition_by:
             pman = self._manifest(parent)
             merged = keep_latest(
@@ -3705,11 +3981,10 @@ class AtomicParquetTable:
         as upsert's — a delete-only CDC consumer (the index lifecycle's
         delete-churn refresh) records its applied position atomically
         IN the delete's own commit record."""
-        existing = self.read()
-        if existing is None:
-            raise ValueError(f"no table at {self.path}")
         parent = self.current_version()
-        if batch_id is not None and parent is not None:
+        if parent is None:
+            raise ValueError(f"no table at {self.path}")
+        if batch_id is not None:
             last = self._manifest_light(parent).get("batch_id")
             if last is not None and batch_id <= last:
                 return parent  # replayed batch: already committed
@@ -3741,6 +4016,7 @@ class AtomicParquetTable:
                 max_commit_retries, batch_id=batch_id,
             )
 
+        existing = self.read(version=parent)
         if not self.partition_by:
             if not probe_small:
                 pman = self._manifest(parent)

@@ -1123,7 +1123,7 @@ def test_capped_placement_serves_identical_rows(spark, tmp_path, monkeypatch):
     over the pruned read plus a per-query top-k merge: with the budget
     below zero the rows equal the driver placement's, in the same rank
     order, for the batch and the single-query serve."""
-    from stupp_exclusion_etl_spark.operators import ann_index
+    from stupp_exclusion_etl_spark.sinks import atomic
 
     root = str(tmp_path)
     _mk_corpus(spark, root + "/corpus", n=300)
@@ -1143,7 +1143,12 @@ def test_capped_placement_serves_identical_rows(spark, tmp_path, monkeypatch):
 
     driver = serve()
     assert not _task_placed(idx.topk_batch(qdf, k=7))
-    monkeypatch.setattr(ann_index, "_DRIVER_PROBE_BYTES", -1)
+    # a table off the local filesystem keeps the driver placement: its
+    # probed rows come from one collect of the FileScan
+    monkeypatch.setitem(idx.assignments.__dict__, "_local_root", None)
+    assert not _task_placed(idx.topk_batch(qdf, k=7))
+    assert serve() == driver
+    monkeypatch.setattr(atomic, "_DRIVER_SCAN_BYTES", -1)
     assert _task_placed(idx.topk_batch(qdf, k=7))
     # keep the merge's 8 shuffle partitions apart, as a large read
     # would: the row order must come from the sort, not from a
@@ -1164,11 +1169,11 @@ def _task_placed(df) -> bool:
 
 
 def test_probe_bytes_not_rows_choose_the_placement(spark, tmp_path, monkeypatch):
-    """The placement follows the probed read's BYTES: an index whose
-    probed cells hold as many rows as the sink's key-probe broadcast
-    cap (far below any row bound a vector read could take) is served
-    by Arrow tasks, not collected onto the driver."""
-    from stupp_exclusion_etl_spark.operators import ann_index
+    """The placement follows the probed files' BYTES in the manifest,
+    against the sink's one driver budget: a budget one byte below them
+    serves from Arrow tasks, a budget equal to them from the driver,
+    with identical rows."""
+    from stupp_exclusion_etl_spark.sinks import atomic
 
     root = str(tmp_path)
     _mk_corpus(spark, root + "/corpus", n=120)
@@ -1182,14 +1187,17 @@ def test_probe_bytes_not_rows_choose_the_placement(spark, tmp_path, monkeypatch)
     )
     small = idx.topk_batch(qdf, k=5)
     assert not _task_placed(small)
-    real = idx.assignments.skipping_report
-    monkeypatch.setattr(
-        idx.assignments, "skipping_report",
-        lambda where, version=None: {
-            **real(where, version),
-            "rows_kept": ann_index._PROBE_BROADCAST_CAP,
-        },
+    routes = idx._route(idx._queries(qdf, "q")[2], idx.n_probe)
+    where = [("cell", "in", sorted(set(routes.ravel().tolist())))]
+    man = idx.assignments._manifest(idx.assignments.current_version())
+    kept = idx.assignments._prune_files(
+        man, [f for fl in man["partitions"].values() for f in fl], where
     )
+    nbytes = sum(man["stats"][f]["bytes"] for f in kept)
+    assert nbytes > 0
+    monkeypatch.setattr(atomic, "_DRIVER_SCAN_BYTES", nbytes)
+    assert not _task_placed(idx.topk_batch(qdf, k=5))
+    monkeypatch.setattr(atomic, "_DRIVER_SCAN_BYTES", nbytes - 1)
     big = idx.topk_batch(qdf, k=5)
     assert _task_placed(big)
     assert [tuple(r) for r in big.collect()] == [

@@ -21,6 +21,7 @@ from stupp_exclusion_etl_spark.sinks.atomic import (
     _STAT_MAX_STR,
     _enc_stat_value,
     _file_may_match,
+    _prefilter_mask,
 )
 
 _OPS = ["=", "<", "<=", ">", ">=", "in", "is_null", "not_null"]
@@ -153,3 +154,105 @@ def test_string_pruning_never_loses_a_match(case):
     dropped bounds must never turn into wrong pruning."""
     values, op, lits = case
     _check_soundness(values, op, lits, "s")
+
+
+# -- the driver scan's row prefilter ----------------------------------
+#
+# read(where) on the driver placement masks rows with pyarrow before
+# Spark's own filters run over the LocalRelation. The mask may keep
+# extra rows, never drop one: every row _spark_matches keeps must
+# survive it, and a literal whose type does not match the column must
+# mask nothing, since Spark's implicit casts decide that predicate.
+
+_KIND_OF = {"i": int, "f": float, "s": str}
+
+
+def _literal_matches(lit, kind: str) -> bool:
+    if isinstance(lit, bool) or lit is None:
+        return False
+    if kind == "f" and isinstance(lit, float) and math.isnan(lit):
+        return False  # NaN literal: Spark keeps rows pyarrow would not
+    return type(lit) is _KIND_OF[kind]
+
+
+def _check_prefilter(values, op, literals, arrow_type, kind: str) -> None:
+    import pyarrow as pa
+
+    arr = pa.array(values, arrow_type)
+    stored = arr.to_pylist()  # float32 columns hold the rounded value
+    if op in ("is_null", "not_null"):
+        pred, used = ("c", op), []
+    else:
+        used = literals if op == "in" else literals[:1]
+        pred = ("c", op, literals if op == "in" else literals[0])
+    mask = _prefilter_mask(pa.table({"c": arr}), [pred])
+    if not all(_literal_matches(lit, kind) for lit in used):
+        assert mask is None, (values, op, literals)
+        return
+    kept = mask.to_pylist()
+    for i, v in enumerate(stored):
+        if _spark_matches(v, op, literals, kind == "f"):
+            assert kept[i], (
+                f"prefilter dropped a matching row: values={stored} "
+                f"op={op} literals={literals} row={i}"
+            )
+
+
+_zeros = st.sampled_from([0.0, -0.0])
+_pf_floats = st.one_of(_floats, _zeros)
+_pf_strings = st.one_of(st.text(alphabet="abzé€", max_size=4), st.just(""))
+_mismatched = st.one_of(
+    st.none(), st.booleans(), _ints, _pf_floats, _pf_strings,
+)
+
+
+def _prefilter_case(elem):
+    return st.tuples(
+        st.lists(st.one_of(st.none(), elem), min_size=0, max_size=12),
+        st.sampled_from(_OPS),
+        st.one_of(
+            st.lists(elem, min_size=1, max_size=4),
+            st.lists(_mismatched, min_size=1, max_size=3),
+        ),
+    )
+
+
+def _ops_literals(op, lits, draw_empty: bool):
+    # `in` also takes the empty list (SQL x IN (): no row matches)
+    return [] if op == "in" and draw_empty else lits
+
+
+@settings(max_examples=300, deadline=None)
+@given(_prefilter_case(_ints), st.sampled_from(["int32", "int64"]),
+       st.booleans())
+def test_int_prefilter_never_drops_a_match(case, width, empty_in):
+    import pyarrow as pa
+
+    values, op, lits = case
+    _check_prefilter(values, op, _ops_literals(op, lits, empty_in),
+                     getattr(pa, width)(), "i")
+
+
+@settings(max_examples=300, deadline=None)
+@given(_prefilter_case(_pf_floats), st.sampled_from(["float32", "float64"]),
+       st.booleans())
+def test_float_prefilter_never_drops_a_match(case, width, empty_in):
+    """NaN rows, ±0.0, ±inf and float32 storage: the mask compares in
+    float64 and always keeps NaN rows; NaN literals mask nothing."""
+    import pyarrow as pa
+
+    values, op, lits = case
+    _check_prefilter(values, op, _ops_literals(op, lits, empty_in),
+                     getattr(pa, width)(), "f")
+
+
+@settings(max_examples=300, deadline=None)
+@given(_prefilter_case(_pf_strings), st.booleans())
+def test_string_prefilter_never_drops_a_match(case, empty_in):
+    """Byte order of UTF-8 equals code point order, which is what
+    Spark's binary string comparison and Python's str ordering use."""
+    import pyarrow as pa
+
+    values, op, lits = case
+    _check_prefilter(values, op, _ops_literals(op, lits, empty_in),
+                     pa.string(), "s")
