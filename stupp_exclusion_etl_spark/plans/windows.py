@@ -607,8 +607,8 @@ def atomic_changes_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("A15", "A16", "C16"),
 )
 def atomic_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end drive of the MERGE INTO statement facade
-    (sinks.atomic.merge_into, VERDICT r6 task #8): an initial insert,
+    """End-to-end drive of MERGE INTO on the atomic table
+    (AtomicParquetTable.merge_into, VERDICT r6 task #8): an initial insert,
     then one MERGE whose source both UPDATES its matched keys
     (re-priced) and INSERTS its unmatched ones, then a
     WHEN MATCHED DELETE merge removing every key ≡ 0 (mod 3) — each a
@@ -619,10 +619,7 @@ def atomic_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Money totals rounded to 2 (engine-order double sums)."""
     import tempfile
 
-    from stupp_exclusion_etl_spark.sinks.atomic import (
-        AtomicParquetTable,
-        merge_into,
-    )
+    from stupp_exclusion_etl_spark.sinks.atomic import AtomicParquetTable
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
@@ -634,18 +631,15 @@ def atomic_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["o_orderkey"],
         partition_by=["o_orderpriority"],
     )
-    merge_into(t, o.filter(k % 10 < 6), on=["o_orderkey"])
-    merge_into(
-        t,
+    t.merge_into(o.filter(k % 10 < 6))
+    t.merge_into(
         o.filter((k % 10 >= 4) & (k % 10 <= 8)).withColumn(
             "o_totalprice", F.round(F.col("o_totalprice") * 1.2, 4)
         ),
-        on=["o_orderkey"],
         when_matched="update",
         when_not_matched="insert",
     )
-    merge_into(
-        t,
+    t.merge_into(
         o.filter(k % 3 == 0).select("o_orderkey"),
         when_matched="delete",
         when_not_matched="skip",

@@ -17,7 +17,8 @@ Layout::
 
 Protocol:
 
-1. The merged output for the batch's touched partitions is written by
+1. The merged output for the files a batch rewrites (its scope: the
+   touched buckets, key ranges or partitions) is written by
    a normal Spark job into a private staging dir (``_staged/<txn>``),
    then each file is moved into ``data/`` under a txn-unique name.
    Nothing in ``data/`` is ever overwritten or (outside GC) deleted,
@@ -142,9 +143,7 @@ def _union_ddl(parent_ddl: str, new_ddl: str) -> str:
     schemas carry a column the WIDER numeric type wins (a merged frame
     built only from pre-widening int files must not narrow a bigint
     manifest column back — the same drift class, for types instead of
-    presence), genuinely new columns append — mirroring how the
-    partition-scoped path inherits the full-table schema by unioning
-    with ``self.read()``."""
+    presence), genuinely new columns append."""
     from pyspark.sql import types as T
 
     pf = list(T.StructType.fromDDL(parent_ddl)) if parent_ddl else []
@@ -328,12 +327,12 @@ _BLOOM_K = 4  # hash functions (md5 hex 8-char slices)
 #
 # Each commit-record chunk entry carries the chunk's covered partition
 # dirs and a bloom over its FILE NAMES, so the carry-forward decision
-# for both partition-scoped and file-scoped (merge) commits is made
-# WITHOUT opening carried chunks: a chunk whose partitions miss the
-# touched set — or whose bloom proves every retired file absent —
-# carries forward unread. Bloom false positives only cost an extra
-# chunk read (the chunk is then found unchanged and still carried by
-# name); false negatives are impossible (built from the exact names).
+# of a rewrite commit is made WITHOUT opening carried chunks: a chunk
+# whose partitions miss the touched set — or whose bloom proves every
+# retired file absent — carries forward unread. Bloom false positives
+# only cost an extra chunk read (the chunk is then found unchanged and
+# still carried by name); false negatives are impossible (built from
+# the exact names).
 # Chunks are uuid-named, written BEFORE the record's CAS publish
 # (invisible until it), shared across versions (restore() republishes
 # a snapshot by referencing its chunk names — O(1) metadata), and
@@ -1985,26 +1984,36 @@ class AtomicParquetTable:
         if scan is not None:
             df = self.spark.createDataFrame(*scan)
         elif not rel:
-            df = self.spark.createDataFrame([], man["schema_ddl"])
+            df = self._empty_read(man["schema_ddl"])
         else:
-            # explicit manifest schema, NOT footer mergeSchema:
-            # untouched partitions carry files written under older
-            # schemas — missing columns null-fill, and numerically
-            # WIDENED columns (int->bigint after _union_ddl evolution)
-            # promote per-file, which footer merging refuses outright
-            # (Spark 4 parquet readers support widening promotion
-            # under a declared read schema)
-            df = (
-                self.spark.read
-                .schema(man["schema_ddl"])
-                .option("basePath", f"{self.path}/{DATA_DIR}")
-                .parquet(*[f"{self.path}/{DATA_DIR}/{f}" for f in rel])
-            )
+            df = self._scan(man, rel)
         for pred in where or ():
             df = df.filter(_predicate_column(pred))
         if where and rel and scan is None:
             df = self._maybe_broadcast_hint(df, man, rel, where)
         return df
+
+    def _read_order(self, schema_ddl: str) -> str:
+        """``schema_ddl`` with its columns in the order a FileScan of
+        the table reports them: data columns in DDL order, then the
+        partition columns."""
+        from pyspark.sql import types as T
+
+        fields = T.StructType.fromDDL(schema_ddl).fields
+        pb = self.partition_by
+        order = [f for f in fields if f.name not in pb]
+        order += [f for n in pb for f in fields if f.name == n]
+        return ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in order
+        )
+
+    def _empty_read(self, schema_ddl: str) -> DataFrame:
+        """A read that keeps no file: no rows, the columns in read
+        order. ``limit(0)`` optimizes to an empty LocalRelation, so
+        collecting it runs no Spark job."""
+        return self.spark.createDataFrame(
+            [], self._read_order(schema_ddl)
+        ).limit(0)
 
     def _kept(self, version: int, where: list[tuple] | None):
         """(manifest, live files a ``where`` keeps) of one version."""
@@ -3122,11 +3131,11 @@ class AtomicParquetTable:
             return df
         return df.repartition(n, *self.keys)
 
-    # -- file-scoped merge (stats-pruned rewrite set) ------------------
+    # -- key-range scope (stats-pruned rewrite set) --------------------
 
     #: distinct batch cluster-key values collected driver-side to probe
-    #: file ranges; above this the batch is "large" and the partition-
-    #: scoped merge (no per-key metadata) is the better plan anyway
+    #: file ranges; above this the batch is "large" and the partition
+    #: or whole-table scope (no per-key metadata) is the better plan
     FILE_SCOPE_KEY_CAP = 65536
 
     def _candidate_files(
@@ -3233,104 +3242,6 @@ class AtomicParquetTable:
         cand = self._candidate_files(man, vals)
         return (None, None) if cand is None else (cand, man)
 
-    def _file_scoped_upsert(
-        self,
-        new_data: DataFrame,
-        order_by: list[Column],
-        batch_id: int | None,
-        parent: int,
-        txn: str,
-        batch_keys: DataFrame,
-        remerge: Callable[[int], int],
-        retries: int,
-    ) -> int | None:
-        """MERGE that rewrites FILES, not partitions: when the table is
-        clustered by a key column, the stats index bounds which live
-        files can hold a batch key, and only those are read, re-merged
-        with the batch, and retired from the manifest — every other
-        file carries forward untouched. This is what makes small keyed
-        upserts into a huge (even unpartitioned) table metadata-scale:
-        the rewrite is O(files overlapping the batch's key range), not
-        O(partition) or O(table). New files are range-clustered among
-        themselves; table-wide range disjointness degrades across
-        commits until compact() re-clusters globally, exactly Delta's
-        behavior. Returns None when inapplicable (no key-aligned
-        cluster column, batch too large to probe driver-side, NULL
-        keys, no usable stats) — caller falls back to the
-        partition-scoped merge."""
-        cand, man = self._probe_candidates(new_data, parent)
-        if cand is None:
-            return None
-        cand_paths = [
-            f"{self.path}/{DATA_DIR}/{f}" for fs in cand.values() for f in fs
-        ]
-        if cand_paths:
-            overlap = (
-                self.spark.read
-                .schema(man["schema_ddl"])
-                .option("basePath", f"{self.path}/{DATA_DIR}")
-                .parquet(*cand_paths)
-            )
-            merged = keep_latest(
-                self._merge_sized(
-                    overlap.unionByName(
-                        new_data, allowMissingColumns=True
-                    ),
-                    [f for fl in cand.values() for f in fl],
-                    man.get("stats", {}),
-                ),
-                self.keys,
-                order_by,
-            )
-        else:
-            merged = keep_latest(new_data, self.keys, order_by)
-        by_part = self._stage_and_move(merged, txn)
-        touched = set(cand) | set(by_part)
-        # the merged frame saw only candidate files + batch; union with
-        # the table schema so untouched wider files keep their columns
-        return self._commit_or_rebase(
-            parent, by_part, touched,
-            _union_ddl(man["schema_ddl"], _ddl(merged)), batch_keys,
-            remerge, retries, batch_id, replaced_files=cand,
-        )
-
-    def _file_scoped_delete(
-        self,
-        parent: int,
-        txn: str,
-        batch_keys: DataFrame,
-        remerge: Callable[[int], int],
-        retries: int,
-        batch_id: int | None = None,
-    ) -> int | None:
-        """Keyed delete with a file-scoped rewrite set: only files
-        whose cluster-key range can hold a doomed key are read,
-        anti-joined, and retired — on a key-clustered table a targeted
-        delete (the right-to-be-forgotten case) touches a handful of
-        files no matter how large the table. None ⇒ fall back to the
-        partition-scoped delete."""
-        cand, man = self._probe_candidates(batch_keys, parent)
-        if cand is None:
-            return None
-        if not cand:
-            return parent  # no live file can hold a doomed key: no-op
-        cand_paths = [
-            f"{self.path}/{DATA_DIR}/{f}" for fs in cand.values() for f in fs
-        ]
-        overlap = (
-            self.spark.read
-            .schema(man["schema_ddl"])
-            .option("basePath", f"{self.path}/{DATA_DIR}")
-            .parquet(*cand_paths)
-        )
-        kept = overlap.join(batch_keys, self.keys, "left_anti")
-        by_part = self._stage_and_move(kept, txn)
-        touched = set(cand) | set(by_part)
-        return self._commit_or_rebase(
-            parent, by_part, touched, man["schema_ddl"], batch_keys,
-            remerge, retries, batch_id, replaced_files=cand,
-        )
-
     # -- hash-bucket layout (VERDICT r11 task #5) ----------------------
 
     _BUCKET_RE = re.compile(r"part-(\d+)-")
@@ -3425,191 +3336,30 @@ class AtomicParquetTable:
                     out.setdefault(part, set()).add(f)
         return out
 
-    def _bucketed_upsert(
-        self,
-        existing: DataFrame,
-        new_data: DataFrame,
-        order_by: list[Column],
-        parent: int,
-        txn: str,
-        batch_keys: DataFrame,
-        remerge: Callable[[int], int],
-        retries: int,
-        batch_id: int | None,
-    ) -> int:
-        """MERGE on a hash-bucketed table: ONE exchange total. The
-        union of (touched buckets' files + batch) repartitions by
-        pmod(hash(keys), B) — exactly the clustering the keep-latest
-        window needs, so Catalyst inserts no further exchange, and the
-        write inherits the same partitioning so there is no
-        stage-time repartitionByRange either (the clustered path pays
-        that second shuffle). Untouched buckets' files carry forward
-        by name; a batch touching k buckets rewrites only those
-        buckets' files — and re-merging a bucket wholly is
-        self-compacting (each touched bucket comes out as one file).
-        When the parent record doesn't claim this layout (legacy
-        history, post-compact), or claims it under DIFFERENT key
-        dtypes than this batch's merge would hash with (a bucket key
-        widening int→bigint flips every hash), the whole table
-        re-merges once and the commit (re-)adopts the claim under the
-        merged dtypes."""
-        B = self.bucket_count
-        pl = self._manifest_light(parent)
-        man = self._manifest(parent)
-        claimed_kt = self._claimed_key_types(pl)
-        merged_kt = self._layout_key_types(
-            _union_ddl(man["schema_ddl"], _ddl(new_data))
-        )
-        if self._layout_live(pl) and claimed_kt == merged_kt:
-            cand = self._bucket_candidates(
-                man, self._batch_buckets(new_data, claimed_kt)
-            )
-            cand_paths = [
-                f"{self.path}/{DATA_DIR}/{f}"
-                for fs in cand.values()
-                for f in fs
-            ]
-            if cand_paths:
-                overlap = (
-                    self.spark.read
-                    .schema(man["schema_ddl"])
-                    .option("basePath", f"{self.path}/{DATA_DIR}")
-                    .parquet(*cand_paths)
-                )
-                src = overlap.unionByName(
-                    new_data, allowMissingColumns=True
-                )
-            else:
-                src = new_data
-            merged = keep_latest(
-                src.repartition(B, *self.keys), self.keys, order_by
-            )
-            by_part = self._stage_and_move(merged, txn)
-            return self._commit_or_rebase(
-                parent, by_part, set(cand) | set(by_part),
-                _union_ddl(man["schema_ddl"], _ddl(merged)), batch_keys,
-                remerge, retries, batch_id, replaced_files=cand,
-                file_buckets=self._staged_buckets(by_part),
-                claim_layout=True,
-            )
-        merged = keep_latest(
-            existing.unionByName(new_data, allowMissingColumns=True)
-            .repartition(B, *self.keys),
-            self.keys, order_by,
-        )
-        by_part = self._stage_and_move(merged, txn)
-        return self._commit_or_rebase(
-            parent, by_part, {""}, _ddl(merged), batch_keys, remerge,
-            retries, batch_id,
-            file_buckets=self._staged_buckets(by_part),
-            claim_layout=True,
-        )
-
-    def _bucketed_delete(
-        self,
-        parent: int,
-        txn: str,
-        batch_keys: DataFrame,
-        doomed: DataFrame,
-        remerge: Callable[[int], int],
-        retries: int,
-        batch_id: int | None = None,
-    ) -> int:
-        """Keyed delete scoped to the doomed keys' buckets; rewritten
-        buckets stay bucket-routed so the layout claim survives."""
-        B = self.bucket_count
-        pl = self._manifest_light(parent)
-        man = self._manifest(parent)
-        # the kept-rows rewrite hashes with the parent SCHEMA's key
-        # dtypes, so bucket-scoped work additionally needs the claim's
-        # dtypes to equal them (always true for claims our writer
-        # commits; a mismatch degrades to the full-candidate path)
-        layout_live = (
-            self._layout_live(pl)
-            and self._claimed_key_types(pl)
-            == self._layout_key_types(man["schema_ddl"])
-        )
-        if layout_live:
-            cand = self._bucket_candidates(
-                man, self._batch_buckets(doomed, self._claimed_key_types(pl))
-            )
-        else:
-            cand = {
-                part: set(files)
-                for part, files in man["partitions"].items()
-            }
-        cand_paths = [
-            f"{self.path}/{DATA_DIR}/{f}"
-            for fs in cand.values()
-            for f in fs
-        ]
-        if not cand_paths:
-            return parent  # no live file can hold a doomed key
-        overlap = (
-            self.spark.read
-            .schema(man["schema_ddl"])
-            .option("basePath", f"{self.path}/{DATA_DIR}")
-            .parquet(*cand_paths)
-        )
-        kept = overlap.join(doomed, self.keys, "left_anti").repartition(
-            B, *self.keys
-        )
-        by_part = self._stage_and_move(kept, txn)
-        return self._commit_or_rebase(
-            parent, by_part, set(cand) | set(by_part),
-            man["schema_ddl"], batch_keys, remerge, retries, batch_id,
-            replaced_files=cand,
-            file_buckets=self._staged_buckets(by_part),
-            claim_layout=True,
-        )
-
     # -- partition-dir naming (must byte-match Spark's writer) --------
 
-    def _collect_touched(self, parts_df: DataFrame) -> tuple[list, set[str]]:
-        """Collect a bounded partition-value frame as (typed rows,
-        Hive-escaped dir strings). The dir strings are derived the way
-        Spark's own file writer derives them — value cast to string BY
-        SPARK (the write path's Cast-to-string, so booleans are
-        'true', timestamps use the session formatting), then
-        Catalyst's ExternalCatalogUtils escaping (NULL/'' →
-        __HIVE_DEFAULT_PARTITION__, ':' '=' '%' … percent-escaped) —
-        so a manifest key always matches the staged dir name and a
-        replaced partition can never be carried forward stale."""
+    def _collect_touched(self, parts_df: DataFrame) -> set[str]:
+        """Collect a bounded partition-value frame as Hive-escaped dir
+        strings. They are derived the way Spark's own file writer
+        derives them — value cast to string BY SPARK (the write path's
+        Cast-to-string, so booleans are 'true', timestamps use the
+        session formatting), then Catalyst's ExternalCatalogUtils
+        escaping (NULL/'' → __HIVE_DEFAULT_PARTITION__, ':' '=' '%' …
+        percent-escaped) — so a manifest key always matches the staged
+        dir name and a replaced partition can never be carried forward
+        stale."""
         pb = self.partition_by
         rows = parts_df.select(
-            *pb, *[F.col(c).cast("string").alias(f"__s_{c}") for c in pb]
+            *[F.col(c).cast("string").alias(c) for c in pb]
         ).collect()
         esc = (
             self.spark._jvm.org.apache.spark.sql.catalyst.catalog
             .ExternalCatalogUtils
         )
-        dirs = {
-            "/".join(
-                esc.getPartitionPathString(c, r[f"__s_{c}"]) for c in pb
-            )
+        return {
+            "/".join(esc.getPartitionPathString(c, r[c]) for c in pb)
             for r in rows
         }
-        typed = [tuple(r[c] for c in pb) for r in rows]
-        return typed, dirs
-
-    def _touched_semi_join(self, existing: DataFrame, typed_rows: list,
-                           schema) -> DataFrame:
-        """existing ⋉ touched partition values, null-SAFE on the
-        partition columns (a NULL partition value reads back as NULL
-        and must still select its partition's rows for the re-merge —
-        a plain equi-join would silently drop it)."""
-        pb = self.partition_by
-        # LocalRelation literal frame: the broadcast build below then
-        # collects driver-side instead of running a Spark job per
-        # commit (see _local_df)
-        touched_df = _local_df(self.spark, typed_rows, schema)
-        ex = existing.alias("__ex")
-        td = F.broadcast(touched_df.alias("__td"))
-        cond = None
-        for c in pb:
-            clause = F.col(f"__ex.{c}").eqNullSafe(F.col(f"__td.{c}"))
-            cond = clause if cond is None else (cond & clause)
-        return ex.join(td, cond, "left_semi")
 
     # -- optimistic-concurrency rebase --------------------------------
 
@@ -3691,21 +3441,13 @@ class AtomicParquetTable:
         carries, and committing our stale merge beside it would leave
         a duplicate (or resurrect a deleted) key."""
         man = self._manifest(cur)
-        files = [
-            f"{self.path}/{DATA_DIR}/{f}"
-            for p in parts
-            for f in man["partitions"].get(p, ())
-        ]
+        files = [f for p in parts for f in man["partitions"].get(p, ())]
         if not files:
             return False
-        other = (
-            self.spark.read.schema(man["schema_ddl"])
-            .option("basePath", f"{self.path}/{DATA_DIR}")
-            .parquet(*files)
-            .select(*self.keys)
-        )
         return (
-            other.join(batch_keys, self.keys, "left_semi")
+            self._scan(man, files)
+            .select(*self.keys)
+            .join(batch_keys, self.keys, "left_semi")
             .limit(1)
             .count()
             > 0
@@ -3715,41 +3457,37 @@ class AtomicParquetTable:
         self,
         parent: int | None,
         by_part: dict[str, list[str]],
-        touched_dirs: set[str],
+        scope: dict[str, set[str]],
         schema_ddl: str,
         batch_keys: DataFrame,
         remerge: Callable[[int], int],
         retries: int,
         batch_id: int | None = None,
-        replaced_files: dict[str, set[str]] | None = None,
         file_buckets: dict[str, int] | None = None,
         claim_layout: bool = False,
     ) -> int:
-        """Commit, and on a lost version race REBASE instead of
-        failing — no batch is ever lost (reference __main__.py:8-24:
-        every batch_write_item lands). Two rebase shapes, like Delta's
-        commit retry:
+        """Commit the staged files in place of the ``scope`` files, and
+        on a lost version race REBASE instead of failing — no batch is
+        ever lost (reference __main__.py:8-24: every batch_write_item
+        lands). Two rebase shapes, like Delta's commit retry:
 
-        - **fast-forward**: the intervening commits replaced disjoint
-          partitions AND none of their rewritten partitions contains
-          one of this batch's keys → the already-staged files are
-          still a correct merge; re-point the manifest at the new head
-          (zero data rewrite, one manifest write).
+        - **fast-forward**: the intervening commits changed no
+          partition this commit retires files from or writes to, AND
+          none of their changed partitions contains one of this
+          batch's keys → the already-staged files are still a correct
+          merge; re-point the manifest at the new head (zero data
+          rewrite, one manifest write).
         - **re-merge**: real overlap → recompute the whole merge
           against the current snapshot via `remerge` (the staged files
           from the failed attempt become unreferenced orphans; gc's
           age threshold reaps them later).
         """
-        # file-scoped commits retire files, not partitions: touched_dirs
-        # then only drives the disjointness check below, never
-        # _commit's whole-partition replacement
-        rp = set() if replaced_files is not None else touched_dirs
+        touched = set(scope) | set(by_part)
         while True:
             try:
                 v = self._commit(
-                    parent, by_part, rp, schema_ddl, batch_id,
-                    replaced_files, file_buckets=file_buckets,
-                    claim_layout=claim_layout,
+                    parent, by_part, set(), schema_ddl, batch_id, scope,
+                    file_buckets=file_buckets, claim_layout=claim_layout,
                 )
                 if self.auto_compact is not None:
                     # opportunistic housekeeping AFTER the data commit:
@@ -3792,7 +3530,7 @@ class AtomicParquetTable:
                 retries -= 1
                 cur = self.current_version()
                 changed = self._changed_parts(parent, cur)
-                if not (changed & touched_dirs) and not self._keys_in_parts(
+                if not (changed & touched) and not self._keys_in_parts(
                     cur, changed, batch_keys
                 ):
                     # fast-forward onto the new head; its live files
@@ -3805,6 +3543,195 @@ class AtomicParquetTable:
                     continue
                 return remerge(retries)
 
+    # -- the rewrite core under upsert, delete_keys and merge_into -----
+
+    def _scan(self, man: dict, files: list[str]) -> DataFrame:
+        """FileScan of live ``files`` by path under the manifest
+        schema. An explicit schema, NOT footer mergeSchema: files
+        written under older schemas null-fill missing columns, and
+        numerically WIDENED columns (int->bigint after _union_ddl
+        evolution) promote per file, which footer merging refuses
+        outright. basePath parses partition values from the dirs, so a
+        partition's rows, NULL partition values included, come back
+        whole."""
+        return (
+            self.spark.read
+            .schema(man["schema_ddl"])
+            .option("basePath", f"{self.path}/{DATA_DIR}")
+            .parquet(*[f"{self.path}/{DATA_DIR}/{f}" for f in files])
+        )
+
+    def _scope(
+        self,
+        parent: int | None,
+        batch_keys: DataFrame,
+        probe: DataFrame,
+        rows: DataFrame | None,
+    ) -> tuple[dict[str, set[str]], dict | None]:
+        """(scope, parent manifest): the live files ``{partition:
+        {file}}`` one rewrite reads and retires. The scope holds every
+        file that may hold a batch key, and on partitioned tables every
+        file of a partition the written ``rows`` land in. Picked once,
+        the first that applies:
+
+        1. bucket layout: the files of the buckets ``probe``'s keys
+           hash to, when the parent claims this layout under the key
+           dtypes the merge hashes with; otherwise every file, and the
+           commit re-adopts the claim;
+        2. key-clustered tables: the files whose key range and bloom
+           admit one of ``probe``'s key values (_probe_candidates);
+        3. partitioned tables: every file of the partitions the
+           ``rows`` land in or that hold a batch key;
+        4. every live file."""
+        if parent is None:
+            return {}, None
+        if not self.bucket_count:
+            cand, man = self._probe_candidates(probe, parent)
+            if cand is not None:
+                return cand, man
+        man = self._manifest(parent)
+        live = {p: set(fl) for p, fl in man["partitions"].items()}
+        if self.bucket_count:
+            pl = self._manifest_light(parent)
+            kt = self._claimed_key_types(pl)
+            written = (
+                man["schema_ddl"]
+                if rows is None
+                else _union_ddl(man["schema_ddl"], _ddl(rows))
+            )
+            if self._layout_live(pl) and kt == self._layout_key_types(written):
+                buckets = self._batch_buckets(probe, kt)
+                return self._bucket_candidates(man, buckets), man
+            return live, man
+        pb = self.partition_by
+        if not pb:
+            return live, man
+        parts = None
+        if rows is not None:
+            parts = rows.select(*pb).distinct()
+        if live:
+            held = (
+                self._scan(man, [f for fl in live.values() for f in fl])
+                .select(*self.keys, *pb)
+                .join(batch_keys, self.keys, "left_semi")
+                .select(*pb)
+                .distinct()
+            )
+            parts = (
+                held if parts is None
+                else parts.unionByName(held).distinct()
+            )
+        if parts is None:
+            return {}, man
+        return {
+            d: live.get(d, set()) for d in self._collect_touched(parts)
+        }, man
+
+    def _rewrite(
+        self,
+        parent: int | None,
+        batch_keys: DataFrame,
+        probe: DataFrame,
+        rows: DataFrame | None,
+        merge: Callable[..., DataFrame | None],
+        remerge: Callable[[int], int],
+        retries: int,
+        batch_id: int | None,
+    ) -> int:
+        """One keyed rewrite, the core under upsert, delete_keys and
+        merge_into: pick the file scope once (_scope), read those files
+        by path, hand them to the caller's ``merge(scoped, sized)``
+        (``scoped`` is None when the scope holds no file), stage the
+        result, and commit it in place of exactly the scope's files.
+
+        ``sized`` is the exchange a merge that shuffles by key puts
+        under that shuffle: ``repartition(B, keys)`` on bucketed tables
+        (the keep-latest window then needs no other exchange, and the
+        staged files are the buckets), otherwise ``_merge_sized`` over
+        the scope's files. A merge that returns None has nothing to
+        write or remove: the parent version stands."""
+        scope, man = self._scope(parent, batch_keys, probe, rows)
+        files = [f for fl in scope.values() for f in fl]
+        B = self.bucket_count
+
+        def sized(df: DataFrame) -> DataFrame:
+            if B:
+                return df.repartition(B, *self.keys)
+            return self._merge_sized(
+                df, files, (man or {}).get("stats", {})
+            )
+
+        merged = merge(self._scan(man, files) if files else None, sized)
+        if merged is None:
+            return parent
+        by_part = self._stage_and_move(merged, uuid.uuid4().hex[:16])
+        # the merged frame saw only the scope + batch; union with the
+        # table schema so untouched wider files keep their columns,
+        # in read order (partition columns last), as a merge reports
+        schema = (
+            _ddl(merged) if man is None
+            else _union_ddl(
+                self._read_order(man["schema_ddl"]), _ddl(merged)
+            )
+        )
+        return self._commit_or_rebase(
+            parent, by_part, scope, schema, batch_keys, remerge, retries,
+            batch_id,
+            file_buckets=self._staged_buckets(by_part) if B else None,
+            claim_layout=bool(B),
+        )
+
+    def _merge_clauses(
+        self,
+        src: DataFrame | None,
+        batch_keys: DataFrame,
+        probe_small: bool,
+        when_matched: str,
+        when_not_matched: str,
+    ) -> Callable[..., DataFrame | None]:
+        """The ``merge(scoped, sized)`` of a clause-wise MERGE (see
+        merge_into; delete_keys is its delete/skip case): the scoped
+        rows minus the batch keys when matched rows go, plus the
+        source rows the clauses write. Matched keys are looked up in
+        the scope, which holds every file that may hold a batch key.
+        Only a table-scale anti-join shuffles by key, so only it goes
+        through ``sized``; bucketed tables route the whole output."""
+        keys = self.keys
+
+        def merge(scoped, sized):
+            kept = scoped
+            if scoped is not None and when_matched != "skip":
+                if not probe_small and not self.bucket_count:
+                    kept = sized(kept)
+                kept = kept.join(batch_keys, keys, "left_anti")
+            new = None
+            if when_matched == "update" and when_not_matched == "insert":
+                # (src ⋉ matched) ∪ (src ▷ matched) ≡ src: no join
+                new = src
+            elif when_matched == "update" or when_not_matched == "insert":
+                how = "left_semi" if when_matched == "update" else "left_anti"
+                if scoped is not None:
+                    mk = (
+                        scoped.select(*keys)
+                        .join(batch_keys, keys, "left_semi")
+                        .distinct()
+                    )
+                    new = src.join(
+                        F.broadcast(mk) if probe_small else mk, keys, how
+                    )
+                elif how == "left_anti":
+                    new = src
+            if kept is None and new is None:
+                return None  # nothing written, nothing removed
+            out = (
+                new if kept is None
+                else kept if new is None
+                else kept.unionByName(new, allowMissingColumns=True)
+            )
+            return sized(out) if self.bucket_count else out
+
+        return merge
+
     def upsert(
         self,
         new_data: DataFrame,
@@ -3816,13 +3743,15 @@ class AtomicParquetTable:
     ) -> int:
         """Last-write-wins MERGE of one batch, atomically published.
 
-        The 100 TB shape: only touched partitions
+        One rewrite (_rewrite): the scope is the touched buckets'
+        files on a bucketed table, the files whose key range can hold
+        a batch key on a key-clustered one, the touched partitions
         (new rows' partitions ∪ old partitions of upserted keys — so a
-        key that moves partitions is removed from its old one) are
-        re-merged and rewritten; both partition lists and the key list
-        are batch-sized broadcast semi-joins; untouched partitions'
-        files are carried forward in the manifest without being read
-        or rewritten. Returns the committed version.
+        key that moves partitions is removed from its old one) on a
+        partitioned one, else the whole table. Those files are re-read,
+        keep-latest merged with the batch and retired; every other
+        file carries forward in the manifest without being read or
+        rewritten. Returns the committed version.
 
         A lost commit race is rebased, not raised (fast-forward when
         the competing commit is disjoint by partition AND key, full
@@ -3853,7 +3782,6 @@ class AtomicParquetTable:
             last = self._manifest_light(parent).get("batch_id")
             if last is not None and batch_id <= last:
                 return parent  # replayed micro-batch: already committed
-        txn = uuid.uuid4().hex[:16]
         bk_raw, probe_small = (
             _probe
             if _probe is not None
@@ -3867,100 +3795,15 @@ class AtomicParquetTable:
                 _probe=_probe,
             )
 
-        if parent is None:
-            if self.bucket_count:
-                merged = keep_latest(
-                    new_data.repartition(self.bucket_count, *self.keys),
-                    self.keys, order_by,
-                )
-                by_part = self._stage_and_move(merged, txn)
-                return self._commit_or_rebase(
-                    parent, by_part, set(), _ddl(merged), batch_keys,
-                    remerge, max_commit_retries, batch_id,
-                    file_buckets=self._staged_buckets(by_part),
-                    claim_layout=True,
-                )
-            merged = keep_latest(new_data, self.keys, order_by)
-            by_part = self._stage_and_move(merged, txn)
-            return self._commit_or_rebase(
-                parent, by_part, set(), _ddl(merged), batch_keys, remerge,
-                max_commit_retries, batch_id,
+        def merge(scoped, sized):
+            src = (
+                new_data if scoped is None
+                else scoped.unionByName(new_data, allowMissingColumns=True)
             )
+            return keep_latest(sized(src), self.keys, order_by)
 
-        if self.bucket_count:
-            return self._bucketed_upsert(
-                self.read(version=parent), new_data, order_by, parent, txn,
-                batch_keys,
-                remerge, max_commit_retries, batch_id,
-            )
-
-        # key-clustered tables take the stats-pruned FILE-scoped merge
-        # when the batch is probe-sized — rewrite scope becomes the
-        # files overlapping the batch's key range, not whole partitions
-        scoped = self._file_scoped_upsert(
-            new_data, order_by, batch_id, parent, txn, batch_keys,
-            remerge, max_commit_retries,
-        )
-        if scoped is not None:
-            return scoped
-
-        existing = self.read(version=parent)
-        if not self.partition_by:
-            pman = self._manifest(parent)
-            merged = keep_latest(
-                self._merge_sized(
-                    existing.unionByName(
-                        new_data, allowMissingColumns=True
-                    ),
-                    [
-                        f
-                        for fl in pman["partitions"].values()
-                        for f in fl
-                    ],
-                    pman.get("stats", {}),
-                ),
-                self.keys,
-                order_by,
-            )
-            by_part = self._stage_and_move(merged, txn)
-            return self._commit_or_rebase(
-                parent, by_part, {""}, _ddl(merged), batch_keys, remerge,
-                max_commit_retries, batch_id,
-            )
-
-        pb = self.partition_by
-        new_parts = new_data.select(*pb).distinct()
-        old_parts_of_keys = (
-            existing.select(*self.keys, *pb)
-            .join(batch_keys, self.keys, "left_semi")
-            .select(*pb)
-            .distinct()
-        )
-        parts_df = new_parts.unionByName(old_parts_of_keys).distinct()
-        typed_rows, touched_dirs = self._collect_touched(parts_df)
-        relevant = self._touched_semi_join(
-            existing, typed_rows, new_parts.schema
-        )
-        pman = self._manifest(parent)
-        merged = keep_latest(
-            self._merge_sized(
-                relevant.unionByName(new_data, allowMissingColumns=True),
-                [
-                    f
-                    for part in touched_dirs
-                    for f in pman["partitions"].get(part, ())
-                ],
-                pman.get("stats", {}),
-            ),
-            self.keys,
-            order_by,
-        )
-        by_part = self._stage_and_move(merged, txn)
-        # staged output only contains partitions with surviving rows;
-        # touched partitions absent from it were emptied → dropped by
-        # _commit's replaced_parts handling.
-        return self._commit_or_rebase(
-            parent, by_part, touched_dirs, _ddl(merged), batch_keys, remerge,
+        return self._rewrite(
+            parent, batch_keys, new_data, new_data, merge, remerge,
             max_commit_retries, batch_id,
         )
 
@@ -3971,16 +3814,19 @@ class AtomicParquetTable:
         _probe: tuple[DataFrame, bool] | None = None,
     ) -> int:
         """Atomic keyed delete (MERGE's WHEN MATCHED DELETE half / the
-        right-to-be-forgotten primitive): rewrite ONLY partitions that
-        contain a doomed key (broadcast semi-join finds them, anti-join
-        rewrites), publish one manifest. Fully-emptied partitions drop
-        out of the manifest; untouched partitions carry forward without
-        a read or rewrite. Lost commit races rebase like upsert's.
-        Returns the committed version. ``_probe``: see upsert().
-        ``batch_id``: the same replayed-micro-batch idempotence cursor
-        as upsert's — a delete-only CDC consumer (the index lifecycle's
-        delete-churn refresh) records its applied position atomically
-        IN the delete's own commit record."""
+        right-to-be-forgotten primitive): one rewrite (_rewrite) whose
+        scope is the files that may hold a doomed key — their buckets,
+        their key range, their partitions, or the whole table, as for
+        upsert — anti-joined against the keys and retired in one
+        manifest. A fully-emptied partition drops out of the manifest;
+        every other file carries forward without a read or rewrite,
+        and a delete whose scope holds no file commits nothing. Lost
+        commit races rebase like upsert's. Returns the committed
+        version. ``_probe``: see upsert(). ``batch_id``: the same
+        replayed-micro-batch idempotence cursor as upsert's — a
+        delete-only CDC consumer (the index lifecycle's delete-churn
+        refresh) records its applied position atomically IN the
+        delete's own commit record."""
         parent = self.current_version()
         if parent is None:
             raise ValueError(f"no table at {self.path}")
@@ -3988,14 +3834,12 @@ class AtomicParquetTable:
             last = self._manifest_light(parent).get("batch_id")
             if last is not None and batch_id <= last:
                 return parent  # replayed batch: already committed
-        txn = uuid.uuid4().hex[:16]
         bk_raw, probe_small = (
             _probe
             if _probe is not None
             else _probe_prepared_keys(doomed_keys, self.keys)
         )
         batch_keys = F.broadcast(bk_raw) if probe_small else bk_raw
-        doomed = batch_keys
 
         def remerge(retries: int) -> int:
             return self.delete_keys(
@@ -4003,67 +3847,11 @@ class AtomicParquetTable:
                 batch_id=batch_id, _probe=_probe,
             )
 
-        scoped = self._file_scoped_delete(
-            parent, txn, batch_keys, remerge, max_commit_retries,
-            batch_id=batch_id,
+        merge = self._merge_clauses(
+            None, batch_keys, probe_small, "delete", "skip"
         )
-        if scoped is not None:
-            return scoped
-
-        if self.bucket_count:
-            return self._bucketed_delete(
-                parent, txn, batch_keys, doomed, remerge,
-                max_commit_retries, batch_id=batch_id,
-            )
-
-        existing = self.read(version=parent)
-        if not self.partition_by:
-            if not probe_small:
-                pman = self._manifest(parent)
-                existing = self._merge_sized(
-                    existing,
-                    [
-                        f
-                        for fl in pman["partitions"].values()
-                        for f in fl
-                    ],
-                    pman.get("stats", {}),
-                )
-            kept = existing.join(doomed, self.keys, "left_anti")
-            by_part = self._stage_and_move(kept, txn)
-            return self._commit_or_rebase(
-                parent, by_part, {""}, _ddl(kept), batch_keys, remerge,
-                max_commit_retries, batch_id,
-            )
-
-        pb = self.partition_by
-        parts_df = (
-            existing.select(*self.keys, *pb)
-            .join(doomed, self.keys, "left_semi")
-            .select(*pb)
-            .distinct()
-        )
-        typed_rows, touched_dirs = self._collect_touched(parts_df)
-        if not typed_rows:
-            return parent  # nothing to delete; current version stands
-        relevant = self._touched_semi_join(
-            existing, typed_rows, existing.select(*pb).schema
-        )
-        if not probe_small:
-            pman = self._manifest(parent)
-            relevant = self._merge_sized(
-                relevant,
-                [
-                    f
-                    for part in touched_dirs
-                    for f in pman["partitions"].get(part, ())
-                ],
-                pman.get("stats", {}),
-            )
-        kept = relevant.join(doomed, self.keys, "left_anti")
-        by_part = self._stage_and_move(kept, txn)
-        return self._commit_or_rebase(
-            parent, by_part, touched_dirs, _ddl(kept), batch_keys, remerge,
+        return self._rewrite(
+            parent, batch_keys, batch_keys, None, merge, remerge,
             max_commit_retries, batch_id,
         )
 
@@ -4079,7 +3867,7 @@ class AtomicParquetTable:
         Delta/Iceberg statement idiom (``WHEN MATCHED THEN UPDATE /
         DELETE, WHEN NOT MATCHED THEN INSERT``) as ONE atomic commit,
         generalizing upsert (update+insert) and delete_keys
-        (delete+skip):
+        (delete+skip). The ON condition is the table key:
 
         - ``when_matched``: ``"update"`` (source row replaces the
           target row), ``"delete"``, or ``"skip"``.
@@ -4088,30 +3876,27 @@ class AtomicParquetTable:
           carrying several rows per key to one (keep_latest); without
           it the source must be key-unique, as SQL MERGE requires.
 
-        Same 100 TB shape as upsert: the matched-key probe is one
-        broadcast semi-join against the table (batch-sized output:
-        matched keys + their current partitions), every per-batch
-        frame stays broadcast-sized, and only partitions holding a
-        written or removed row are re-merged — untouched partitions'
-        files carry forward by manifest entry. Lost commit races
-        rebase exactly like upsert's. Returns the committed version
-        (current version unchanged when the merge is a no-op)."""
+        One rewrite (_rewrite) with the same four scopes as upsert,
+        probed with the source's keys: the scope's rows minus the
+        matched keys, plus the rows the clauses write, replace the
+        scope's files; a bucketed table keeps its layout claim.
+        Lost commit races rebase exactly like upsert's. Returns the
+        committed version (current version unchanged when the merge
+        is a no-op)."""
         if when_matched not in ("update", "delete", "skip"):
             raise ValueError(f"when_matched: {when_matched!r}")
         if when_not_matched not in ("insert", "skip"):
             raise ValueError(f"when_not_matched: {when_not_matched!r}")
+        parent = self.current_version()
+        if parent is None and when_not_matched != "insert":
+            raise ValueError(f"no table at {self.path}")
+        if when_matched == "skip" and when_not_matched == "skip":
+            return parent
         src = (
             keep_latest(source, self.keys, order_by)
             if order_by is not None
             else source
         )
-        parent = self.current_version()
-        existing = self.read()
-        txn = uuid.uuid4().hex[:16]
-        # one memoized probe count decides BOTH hints: matched_keys is
-        # a subset of batch_keys, so counting the (join-derived, hence
-        # uncacheable) matched side would re-evaluate the semi-join
-        # for nothing
         bk_raw, probe_small = _probe_prepared_keys(src, self.keys)
         batch_keys = F.broadcast(bk_raw) if probe_small else bk_raw
 
@@ -4120,122 +3905,13 @@ class AtomicParquetTable:
                 source, when_matched, when_not_matched, order_by, retries
             )
 
-        if existing is None:
-            if when_not_matched != "insert":
-                raise ValueError(f"no table at {self.path}")
-            merged = src
-            by_part = self._stage_and_move(merged, txn)
-            return self._commit_or_rebase(
-                parent, by_part, set(), _ddl(merged), batch_keys, remerge,
-                max_commit_retries,
-            )
-
-        pb = self.partition_by
-        # one broadcast semi-join pass finds matched keys AND the
-        # partitions currently holding them (both batch-sized)
-        matched_probe = existing.select(*self.keys, *pb).join(
-            batch_keys, self.keys, "left_semi"
+        writes = when_matched == "update" or when_not_matched == "insert"
+        merge = self._merge_clauses(
+            src, batch_keys, probe_small, when_matched, when_not_matched
         )
-        mk_raw = matched_probe.select(*self.keys).distinct()
-        matched_keys = F.broadcast(mk_raw) if probe_small else mk_raw
-        # a "delete"/"skip" source may carry ONLY the key columns, so
-        # new_rows (full-schema writes) is built strictly from the
-        # clauses that write. UPDATE+INSERT (the full-upsert merge)
-        # writes (src ⋉ matched) ∪ (src ▷ matched) ≡ src — so that
-        # plan carries NO matched-keys join at all (guide §1.2:
-        # remove work the answer doesn't need; matched_keys is itself
-        # a semi-join + distinct over the table, re-evaluated by
-        # every consumer).
-        new_rows = None
-        if when_matched == "update":
-            if when_not_matched == "insert":
-                new_rows = src
-            else:
-                new_rows = src.join(matched_keys, self.keys, "left_semi")
-        elif when_not_matched == "insert":
-            new_rows = src.join(matched_keys, self.keys, "left_anti")
-        remove_matched = when_matched in ("update", "delete")
-
-        def _merge(kept: DataFrame) -> DataFrame:
-            out = (
-                kept
-                if new_rows is None
-                else kept.unionByName(new_rows, allowMissingColumns=True)
-            )
-            return out
-
-        if not pb:
-            if remove_matched and not probe_small:
-                # table-scale source ⇒ the anti-join is an SMJ whose
-                # sort must not inherit the session's global shuffle
-                # sizing — derive the task count from the manifest
-                pman = self._manifest(parent)
-                existing = self._merge_sized(
-                    existing,
-                    [
-                        f
-                        for fl in pman["partitions"].values()
-                        for f in fl
-                    ],
-                    pman.get("stats", {}),
-                )
-            # anti-join the BATCH keys, not the derived matched set:
-            # batch keys absent from the table remove nothing, so the
-            # result is identical and the matched_keys subplan
-            # (semi-join + distinct, re-run per consumer) drops out of
-            # the rewrite entirely
-            kept = (
-                existing.join(batch_keys, self.keys, "left_anti")
-                if remove_matched
-                else existing
-            )
-            merged = _merge(kept)
-            by_part = self._stage_and_move(merged, txn)
-            return self._commit_or_rebase(
-                parent, by_part, {""}, _ddl(merged), batch_keys, remerge,
-                max_commit_retries,
-            )
-
-        parts_df = (
-            new_rows.select(*pb).distinct()
-            if new_rows is not None
-            else existing.select(*pb).limit(0)
-        )
-        if remove_matched:
-            parts_df = parts_df.unionByName(
-                matched_probe.select(*pb).distinct()
-            ).distinct()
-        typed_rows, touched_dirs = self._collect_touched(parts_df)
-        if not typed_rows:
-            return parent  # no row written or removed anywhere: no-op
-        relevant = self._touched_semi_join(
-            existing, typed_rows, existing.select(*pb).schema
-        )
-        if remove_matched and not probe_small:
-            # see the unpartitioned branch: manifest-sized sort tasks
-            # for the table-scale anti-join
-            pman = self._manifest(parent)
-            relevant = self._merge_sized(
-                relevant,
-                [
-                    f
-                    for part in touched_dirs
-                    for f in pman["partitions"].get(part, ())
-                ],
-                pman.get("stats", {}),
-            )
-        # see the unpartitioned branch: anti-join the batch keys —
-        # identical kept set, no matched_keys subplan in the rewrite
-        kept = (
-            relevant.join(batch_keys, self.keys, "left_anti")
-            if remove_matched
-            else relevant
-        )
-        merged = _merge(kept)
-        by_part = self._stage_and_move(merged, txn)
-        return self._commit_or_rebase(
-            parent, by_part, touched_dirs, _ddl(merged), batch_keys, remerge,
-            max_commit_retries,
+        return self._rewrite(
+            parent, batch_keys, batch_keys, src if writes else None,
+            merge, remerge, max_commit_retries, None,
         )
 
     def last_batch_id(self) -> int | None:
@@ -4797,31 +4473,6 @@ class AtomicParquetTable:
             "skipped_young": skipped_young,
             "live_files": len(live),
         }
-
-
-def merge_into(
-    target: AtomicParquetTable,
-    source: DataFrame,
-    on: list[str] | None = None,
-    when_matched: str = "update",
-    when_not_matched: str = "insert",
-    order_by: list[Column] | None = None,
-) -> int:
-    """Statement-shaped MERGE facade, the call signature users of
-    Delta's ``MERGE INTO target USING source ON ... WHEN MATCHED THEN
-    UPDATE|DELETE WHEN NOT MATCHED THEN INSERT`` expect::
-
-        merge_into(t, batch, on=["k"], when_matched="update")
-
-    ``on`` must equal the table's key (the table IS keyed; merging on
-    a different condition would break its last-write-wins invariant).
-    Delegates to AtomicParquetTable.merge_into — one atomic commit,
-    partition-scoped rewrite, rebase on lost commit races."""
-    if on is not None and list(on) != list(target.keys):
-        raise ValueError(
-            f"merge_into: on={on} must equal the table key {target.keys}"
-        )
-    return target.merge_into(source, when_matched, when_not_matched, order_by)
 
 
 def streaming_upsert_sink(table: AtomicParquetTable, order_by: list[Column]):

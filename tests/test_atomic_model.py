@@ -142,8 +142,11 @@ def _assert_read_equals(df, expected: dict[int, dict], ctx: str) -> None:
             },
             "auto_gc": {"keep_versions": 8, "min_age_seconds": 0},
         },
+        {"bucket_by": 4},  # the bucket scope: touched buckets only
+        {"partition_by": ["p"]},  # the partition scope, no key probe
     ],
-    ids=["flat", "partitioned_clustered_indexed", "auto_maintained"],
+    ids=["flat", "partitioned_clustered_indexed", "auto_maintained",
+         "bucketed", "partitioned"],
 )
 def test_random_walk_matches_model(spark, tmp_path, cfg):
     rng = random.Random(20260815)

@@ -296,17 +296,14 @@ def test_schema_evolution_across_snapshots(spark, table):
 
 
 def test_merge_into_update_insert_delete_clauses(spark, table):
-    """MERGE INTO facade over the atomic table: every clause combo
+    """MERGE INTO over the atomic table: every clause combo
     maps to one atomic partition-scoped commit with SQL MERGE
     semantics — matched update replaces the row, unmatched insert
     lands, matched-skip leaves the target row, not-matched-skip drops
     the source row, matched delete removes (key-only source ok)."""
-    from stupp_exclusion_etl_spark.sinks.atomic import merge_into
-
     # update (key 2) + insert (key 6) in one commit
-    v = merge_into(
-        table, _df(spark, [(2, "A", "a2-m", 9), (6, "D", "d1", 9)]),
-        on=["k"],
+    v = table.merge_into(
+        _df(spark, [(2, "A", "a2-m", 9), (6, "D", "d1", 9)]),
     )
     assert v == 1
     assert _rows(table) == sorted(
@@ -315,16 +312,16 @@ def test_merge_into_update_insert_delete_clauses(spark, table):
     )
 
     # matched-skip: key 2 untouched; unmatched key 7 still inserts
-    merge_into(
-        table, _df(spark, [(2, "A", "NO", 9), (7, "B", "b7", 9)]),
+    table.merge_into(
+        _df(spark, [(2, "A", "NO", 9), (7, "B", "b7", 9)]),
         when_matched="skip",
     )
     got = _rows(table)
     assert (2, "A", "a2-m", 9) in got and (7, "B", "b7", 9) in got
 
     # not-matched-skip: update key 1 only; key 8 dropped
-    merge_into(
-        table, _df(spark, [(1, "A", "a1-m", 9), (8, "C", "NO", 9)]),
+    table.merge_into(
+        _df(spark, [(1, "A", "a1-m", 9), (8, "C", "NO", 9)]),
         when_not_matched="skip",
     )
     got = _rows(table)
@@ -333,8 +330,8 @@ def test_merge_into_update_insert_delete_clauses(spark, table):
 
     # matched delete with a KEY-ONLY source (3 was B's only row)
     v_before = table.current_version()
-    merge_into(
-        table, spark.createDataFrame([(3,), (99,)], "k int"),
+    table.merge_into(
+        spark.createDataFrame([(3,), (99,)], "k int"),
         when_matched="delete", when_not_matched="skip",
     )
     got = _rows(table)
@@ -344,25 +341,18 @@ def test_merge_into_update_insert_delete_clauses(spark, table):
 
     # all-miss delete: no-op, version unchanged
     v_now = table.current_version()
-    merge_into(
-        table, spark.createDataFrame([(99,)], "k int"),
+    table.merge_into(
+        spark.createDataFrame([(99,)], "k int"),
         when_matched="delete", when_not_matched="skip",
     )
     assert table.current_version() == v_now
     assert v_now == v_before + 1
 
-    # ON must equal the table key
-    with pytest.raises(ValueError, match="table key"):
-        merge_into(table, _df(spark, [(1, "A", "x", 0)]), on=["part"])
-
 
 def test_merge_into_source_dedup_with_order_by(spark, table):
     """A source with several rows per key reduces via order_by before
     merging (SQL MERGE's uniqueness requirement, resolved)."""
-    from stupp_exclusion_etl_spark.sinks.atomic import merge_into
-
-    merge_into(
-        table,
+    table.merge_into(
         _df(spark, [(2, "A", "stale", 1), (2, "A", "fresh", 5)]),
         order_by=[F.col("ts").desc()],
     )

@@ -153,6 +153,27 @@ def test_churn_oracle_parity_and_bucket_scoped_rewrites(spark, table):
     assert table.read(where=[("k", "=", 77)]).count() == 0
 
 
+def test_merge_into_keeps_the_layout_claim(spark, table):
+    """merge_into rewrites only the touched buckets and keeps the
+    layout claim, so the next point upsert is bucket-scoped too."""
+    light0 = table._manifest_light(table.current_version())
+    table.merge_into(
+        _mk(spark, [(5, -5.0, 1), (300, -300.0, 1)]),
+        when_matched="update", when_not_matched="insert",
+    )
+    light1 = table._manifest_light(table.current_version())
+    assert light1["layout"] == light0["layout"]
+    man1 = table._manifest(table.current_version())
+    files1 = {f for fl in man1["partitions"].values() for f in fl}
+    table.upsert(_mk(spark, [(77, -77.0, 2)]), [F.col("ts").desc()])
+    man2 = table._manifest(table.current_version())
+    files2 = {f for fl in man2["partitions"].values() for f in fl}
+    b77 = spark_bucket(77, "bigint", B)
+    assert {man1["stats"][f]["bucket"] for f in files1 - files2} == {b77}
+    got = {r.k: r.v for r in table.read().collect()}
+    assert (got[5], got[77], got[300], len(got)) == (-5.0, -77.0, -300.0, 201)
+
+
 def test_point_probe_prunes_files_and_chunks_by_bucket(spark, tmp_path):
     t = AtomicParquetTable(
         spark, str(tmp_path / "p"), keys=["k"], bucket_by=B

@@ -232,3 +232,24 @@ def test_column_names_resolve_like_spark(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [(5, 5.0)]
     with pytest.raises(AnalysisException):
         t.read(where=[("nope", "=", 5)]).collect()
+
+
+def test_read_that_keeps_no_file_matches_a_normal_read(spark, tmp_path):
+    """Pruning that keeps no file still reports the columns in the
+    FileScan order (partition columns last), and collecting the empty
+    frame starts no Spark job."""
+    t = AtomicParquetTable(
+        spark, str(tmp_path / "e"), keys=["k"], partition_by=["part"]
+    )
+    t.upsert(
+        spark.createDataFrame(
+            [(1, "A", 1.0), (2, "B", 2.0)], "k int, part string, v double"
+        ),
+        [F.col("v").desc()],
+    )
+    empty = t.read(where=[("part", "=", "Z")])
+    assert empty.columns == t.read().columns == ["k", "v", "part"]
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.dagScheduler().numTotalJobs()
+    assert empty.collect() == []
+    assert sc.dagScheduler().numTotalJobs() == before

@@ -64,6 +64,23 @@ def test_narrow_upsert_replaces_only_overlapping_files(spark, table):
     assert set(man["stats"]) == set(after)
 
 
+def test_merge_into_replaces_only_overlapping_files(spark, table):
+    """merge_into takes the same file scope as upsert: an update of
+    ten keys inside one file's range retires that file alone."""
+    before = _files(table)
+    table.merge_into(
+        _mk(spark, [(k, -1.0, "upd", 1) for k in range(10, 20)]),
+        when_matched="update", when_not_matched="skip",
+    )
+    replaced = set(before) - set(_files(table))
+    assert len(replaced) == 1, replaced
+    r = table.read()
+    assert r.count() == 1000
+    assert sorted(x.k for x in r.filter(F.col("s") == "upd").collect()) == (
+        list(range(10, 20))
+    )
+
+
 def test_out_of_range_insert_carries_every_file(spark, table):
     before = _files(table)
     v = table.upsert(
@@ -246,6 +263,7 @@ def test_file_scoped_merge_keeps_widened_schema(spark, table):
     assert "note" in empty.columns
 
 
+@pytest.mark.slow  # eight commits over two tables: soak-shaped
 def test_bloom_tightens_candidates_after_range_degradation(spark, tmp_path):
     """Key-column blooms sharpen the file-scoped rewrite set where
     range stats have degraded: commit interleaved batches so EVERY
