@@ -10,6 +10,7 @@ partition pruning (SURVEY.md A1-A5).
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,6 +28,30 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Inferred schema per (session, local file, size, mtime): Spark infers
+#: a parquet schema with a Spark job of its own (a task reads the
+#: footer) on every ``spark.read.parquet``, and a plan reads its tables
+#: again on every build.
+_SCHEMAS: dict = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``; a local file read before in this
+    session, unchanged since, gets its inferred schema passed in, so
+    the read starts no inference job."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (spark, path, st.st_size, st.st_mtime_ns)
+    if key not in _SCHEMAS:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -63,7 +88,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "cast(ts div 1000 as decimal(20,0)) / 1000000)"
             ),
         )
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

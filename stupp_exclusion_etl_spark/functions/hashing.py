@@ -41,11 +41,6 @@ def minhash_params(n: int) -> list[tuple[int, int]]:
     return out
 
 
-def md5_base_long(value: Column) -> Column:
-    """First 15 md5 hex chars as a long (60-bit, engine-portable)."""
-    return F.conv(F.substring(F.md5(value), 1, 15), 16, 10).cast("long")
-
-
 def md5_prefix_int(value: Column, hex_digits: int = 4) -> Column:
     """First `hex_digits` hex chars of md5 as an integer (≤15 digits so
     it fits a signed long)."""

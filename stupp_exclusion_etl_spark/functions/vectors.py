@@ -2,18 +2,14 @@
 
 Embeddings are `array<float>` columns. All math is expressed with
 higher-order Catalyst functions (zip_with / aggregate) upcast to double
-— JVM-side, codegen'd, no Python. A vectorized pandas-UDF variant is
-provided for wide batch scoring where Arrow transfer + numpy BLAS wins
-(hundreds of dims × millions of rows).
+— JVM-side, codegen'd, no Python. The IVF index's numpy kernel
+(operators/ann_index.py) sums in the same order as ``cosine``.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -36,29 +32,3 @@ def cosine(a: Column, b: Column) -> Column:
     double division). NULL sorts last under desc ordering, so zero
     vectors simply never rank."""
     return F.try_divide(dot(a, b), norm2(a) * norm2(b))
-
-
-def cosine_pandas():
-    """Arrow-vectorized cosine for the numpy fast path (lazy: pandas_udf
-    creation needs an active SparkSession). Zero vectors score NULL,
-    matching cosine()'s try_divide contract — returning numpy's raw NaN
-    would INVERT it, since Spark orders NaN greater than every double
-    (NaN ranks first in desc top-k and passes >= thresholds)."""
-
-    @pandas_udf("double")
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        av = np.stack(a.to_numpy())
-        bv = np.stack(b.to_numpy())
-        num = (av * bv).sum(axis=1)
-        den = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = num / den
-        # nullable Float64 so non-finite → true NULL through Arrow (a
-        # plain float series would silently turn None back into NaN)
-        res = pd.array(out, dtype="Float64")
-        res[~np.isfinite(out)] = pd.NA
-        return pd.Series(res, dtype="Float64")
-
-    return _udf

@@ -1,36 +1,52 @@
 """Deduplication operators (SURVEY.md §2 B9 + north-star dedup family).
 
-Exact dedup, keep-latest (the reference's upsert-by-key semantics,
-reference __main__.py:8-24), MinHash+LSH, SimHash, n-gram Jaccard, and
+Keep-latest (the reference's upsert-by-key semantics, reference
+__main__.py:8-24), MinHash+LSH, SimHash, n-gram Jaccard, and
 embedding-cosine near-dup. Every sketch uses the engine-portable md5
 primitives from functions.hashing so results are oracle-checkable.
 
-Scale design:
-- MinHash signatures are computed in ONE hash aggregate (n_hashes agg
-  expressions over exploded shingles) → a single shuffle on doc id.
-- Candidate pairs come from an equi-join on (band, band_key) — never a
-  cartesian. Pathologically hot buckets (boilerplate docs) are capped
-  with `max_bucket` to bound join fan-out, the standard LSH skew guard.
-- Jaccard verification joins only candidate pairs, not all pairs.
+Near-dedup is one kernel over Arrow arrays of (id, text) (``near_dedup``;
+``minhash_signatures``, ``minhash_lsh_pairs`` and
+``connected_components_star`` are its stages):
+
+1. 3-word shingle sets over Java-``\\s`` tokens (functions.text.tokens);
+2. 12 affine MinHashes over the md5-60 base, in int64;
+3. LSH band keys (4 bands × 3) and the in-bucket candidate pairs, with
+   a ``max_bucket`` cap on degenerate (boilerplate) buckets;
+4. exact shingle-set Jaccard on the candidates only, and union-find
+   components labelled by their min id.
+
+It has two placements. While the input plan's size estimate fits
+``_DRIVER_DEDUP_BYTES`` it runs on the driver: one ``toArrow()`` collect
+in, a LocalRelation out. Otherwise the same per-document function runs
+in ``mapInArrow`` tasks, the band grouping is one Spark exchange, and
+components run the same union-find per partition before star
+contraction contracts what is left.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import itertools
+import re
+import sys
+from collections import Counter, defaultdict
+
+import numpy as np
+import pyarrow as pa
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
-from stupp_exclusion_etl_spark.functions.hashing import (
-    MINHASH_P,
-    md5_base_long,
-    minhash_params,
-)
+from stupp_exclusion_etl_spark.functions.hashing import MINHASH_P, minhash_params
 from stupp_exclusion_etl_spark.functions.text import shingles, tokens
 
-
-def dedup_exact(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Exact dedup = hash groupBy on the key columns (dropDuplicates)."""
-    return df.dropDuplicates(keys) if keys else df.dropDuplicates()
+# Arrow tasks run this module's kernel: pickle it by value, so an
+# executor needs no import path to the package (as operators.ann_index).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def keep_latest(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
@@ -45,31 +61,341 @@ def keep_latest(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataF
     )
 
 
-def canonical_repr(df: DataFrame, group_col: Column, id_col: str) -> DataFrame:
-    """Deterministic exact-dedup representative: min id per group key.
-    Unlike dropDuplicates (arbitrary survivor) this is reproducible and
-    therefore oracle-testable."""
-    return df.groupBy(group_col.alias("group_key")).agg(F.min(id_col).alias(id_col))
-
-
 def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(id, shingle) rows. Tokens are materialized as a column BEFORE
     shingling: higher-order-function lambdas re-evaluate inline child
     expressions per element, so shingling over an inline split() is
     O(tokens²) regex work per document (~100× slower, measured).
     Also repartitions on the id: a small-bytes parquet arrives as one
-    partition, while the md5 sketch work is CPU-bound — spread it
-    across cores; the groupBy(id) downstream then reuses this
-    partitioning instead of shuffling again. The partition count is
-    EXPLICIT (not AQE-advisory): AQE sizes partitions by shuffle-map
-    bytes, and the expensive part here — explode + md5 per shingle —
-    happens after the exchange, so AQE would coalesce a few MB of text
-    onto one core and serialize the sketch."""
+    partition, while the explode is CPU-bound — spread it across cores;
+    a groupBy(id) downstream then reuses this partitioning instead of
+    shuffling again. The partition count is EXPLICIT (not
+    AQE-advisory): AQE sizes partitions by shuffle-map bytes, and the
+    expensive part happens after the exchange, so AQE would coalesce a
+    few MB of text onto one core."""
     toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
     n = df.sparkSession.sparkContext.defaultParallelism
     return toked.repartition(n, id_col).select(
         F.col(id_col), F.explode(shingles(F.col("__toks"), k)).alias("s")
     )
+
+
+# -- the near-dedup kernel ----------------------------------------------------
+
+#: Driver placement of the near-dedup kernel: while the input plan's
+#: optimized ``stats().sizeInBytes`` is at most this, one ``toArrow()``
+#: collect feeds the kernel on the driver and the result is a
+#: LocalRelation; above it the kernel runs in ``mapInArrow`` tasks. On
+#: 4 local cores the two placements of pipeline_near_dedup break even
+#: near a 2.5 MB estimate (about 11 MB of text; CHANGES.md).
+_DRIVER_DEDUP_BYTES = 2 << 20
+
+#: Java's ``\s`` — what Spark's split(text, '\\s+') cuts on. Python's
+#: str.split() also cuts on \x1c-\x1f, \x85, \xa0 and \u2028, which
+#: Spark keeps inside tokens.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _shingle_set(text: str | None, k: int) -> set[str]:
+    """functions.text.shingles(tokens(text), k) as a set: a text under
+    k tokens is one whole-text shingle, a text without tokens none."""
+    toks = [t for t in _JAVA_WS.split(text) if t] if text else []
+    if len(toks) < k:
+        return {" ".join(toks)} if toks else set()
+    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+
+def _doc_sets(ids: list, texts: list, k: int) -> tuple[list[int], list[set]]:
+    """(a row of each id, the id's shingle set), in id order. Rows of
+    one id pool their shingles; NULL ids and ids without a shingle are
+    left out, as the Spark explode and group-by left them out."""
+    sets, row = {}, {}
+    for r, (i, t) in enumerate(zip(ids, texts)):
+        sh = _shingle_set(t, k) if i is not None else None
+        if sh:
+            row.setdefault(i, r)
+            sets.setdefault(i, set()).update(sh)
+    order = sorted(sets)
+    return [row[i] for i in order], [sets[i] for i in order]
+
+
+def _signatures(sets: list[set], hashes: list[tuple[int, int]]) -> np.ndarray:
+    """(len(sets), len(hashes)) int64 MinHash signatures:
+    h_c = min over a set of (a_c·(md5base(s) % P) + b_c) % P, with
+    md5base the first 15 hex digits (60 bits) of md5, as the oracle's
+    plans.dedup._MD5_BASE decodes them.
+    a, b and the reduced base are below P < 2^30, so every value stays
+    below 2^61 and int64 is exact."""
+    if not sets:
+        return np.empty((0, len(hashes)), np.int64)
+    lens = np.fromiter(map(len, sets), np.int64, len(sets))
+    hb = np.fromiter(
+        (
+            (int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 4)
+            % MINHASH_P
+            for st in sets
+            for s in st
+        ),
+        np.int64,
+        int(lens.sum()),
+    )
+    starts = np.cumsum(lens) - lens
+    sig = np.empty((len(sets), len(hashes)), np.int64)
+    for c, (a, b) in enumerate(hashes):
+        sig[:, c] = np.minimum.reduceat((a * hb + b) % MINHASH_P, starts)
+    return sig
+
+
+def _band_pairs(sig: np.ndarray, band_size: int, max_bucket: int | None) -> list:
+    """Row pairs (i < j) whose signatures agree on every hash of at
+    least one band, counting only buckets of 2..max_bucket rows."""
+    cap = max_bucket or (1 << 31)
+    pairs = set()
+    for lo in range(0, sig.shape[1] // band_size * band_size, band_size):
+        buckets = defaultdict(list)
+        for r, key in enumerate(map(tuple, sig[:, lo:lo + band_size].tolist())):
+            buckets[key].append(r)
+        for rows in buckets.values():
+            if 2 <= len(rows) <= cap:
+                pairs.update(itertools.combinations(rows, 2))
+    return sorted(pairs)
+
+
+def _overlap(a: set, b: set, threshold: float) -> tuple | None:
+    """(|a∩b|, |a|, |b|) when the exact Jaccard of two shingle sets
+    reaches ``threshold`` (a double division, as Spark's), else None."""
+    n = len(a & b)
+    return (n, len(a), len(b)) if n / (len(a) + len(b) - n) >= threshold else None
+
+
+def _union_find(a: list, b: list) -> dict:
+    """node → the min node of its component, over the edges (a[i], b[i])."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    for x, y in zip(a, b):
+        x, y = find(x), find(y)
+        if x != y:
+            parent[max(x, y)] = min(x, y)
+    return {x: find(x) for x in parent}
+
+
+def _take(arr: pa.Array, rows: list[int]) -> pa.Array:
+    return arr.take(pa.array(rows, pa.int64()))
+
+
+def _kernel(ids: pa.Array, texts: pa.Array, stage: str, k: int, hashes: list,
+            band_size: int, max_bucket: int | None, threshold: float) -> dict:
+    """The whole near-dedup chain up to ``stage`` over (id, text) rows,
+    as the stage's output columns (``near_dedup``)."""
+    idv = ids.to_pylist()
+    rows, sets = _doc_sets(idv, texts.to_pylist(), k)
+    sig = _signatures(sets, hashes)
+    if stage == "signatures":
+        return {"id": _take(ids, rows), **{f"h{c}": sig[:, c] for c in range(len(hashes))}}
+    pairs = _band_pairs(sig, band_size, max_bucket)
+    if stage == "pairs":
+        return {"id1": _take(ids, [rows[i] for i, _ in pairs]),
+                "id2": _take(ids, [rows[j] for _, j in pairs])}
+    ver = [(i, j, *o) for i, j in pairs if (o := _overlap(sets[i], sets[j], threshold))]
+    if stage == "verified":
+        cols = list(zip(*ver)) or [()] * 5
+        return {"id1": _take(ids, [rows[i] for i in cols[0]]),
+                "id2": _take(ids, [rows[j] for j in cols[1]]),
+                **{c: pa.array(v, pa.int64()) for c, v in zip(("n_inter", "na", "nb"), cols[2:])}}
+    # survivors: the rows whose id is the min id of its component (the
+    # kernel's positions are in id order, so the min position) or in
+    # no verified pair
+    root = _union_find([v[0] for v in ver], [v[1] for v in ver])
+    size = Counter(root.values())
+    at = {idv[r]: p for p, r in enumerate(rows)}
+    pos = [at.get(i) for i in idv]
+    keep = [r for r, p in enumerate(pos) if root.get(p, p) == p]
+    return {"id": _take(ids, keep), "group_id": _take(ids, keep),
+            "n_members": pa.array([size.get(pos[r], 1) for r in keep], pa.int64())}
+
+
+def _stage_schema(stage: str, id_t: T.DataType, n_hashes: int) -> T.StructType:
+    cols = {
+        "signatures": ["id"] + [f"h{c}" for c in range(n_hashes)],
+        "pairs": ["id1", "id2"],
+        "verified": ["id1", "id2", "n_inter", "na", "nb"],
+        "survivors": ["id", "group_id", "n_members"],
+    }[stage]
+    return T.StructType([
+        T.StructField(c, id_t if c in ("id", "id1", "id2", "group_id") else T.LongType())
+        for c in cols
+    ])
+
+
+def _on_driver(df: DataFrame) -> bool:
+    """Whether ``df``'s optimized-plan size estimate fits
+    ``_DRIVER_DEDUP_BYTES`` (plan statistics only, no job)."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(str(size)) <= _DRIVER_DEDUP_BYTES
+
+
+def _pooled(batches) -> list[pa.Array] | None:
+    """One partition's batches as whole columns (None when empty)."""
+    batches = list(batches)
+    if not batches:
+        return None
+    return [pa.concat_arrays([b.column(c) for b in batches])
+            for c in range(batches[0].num_columns)]
+
+
+def _sketch_batches(batches, k: int, hashes: list):
+    """mapInArrow body: the kernel's per-document step over a partition
+    that holds every row of its ids: (id, signature, shingles)."""
+    cols = _pooled(batches)
+    if cols is None:
+        return
+    ids, texts = cols
+    rows, sets = _doc_sets(ids.to_pylist(), texts.to_pylist(), k)
+    yield pa.RecordBatch.from_arrays(
+        [_take(ids, rows),
+         pa.array(_signatures(sets, hashes).tolist(), pa.list_(pa.int64())),
+         pa.array([sorted(s) for s in sets], pa.list_(pa.string()))],
+        ["id", "sig", "sh"],
+    )
+
+
+def _verify_batches(batches, threshold: float):
+    """mapInArrow body: the kernel's Jaccard step over candidate rows
+    (id1, id2, shingles1, shingles2)."""
+    for b in batches:
+        id1, id2, sa, sb = b.columns
+        keep, stats = [], []
+        for r, (a, c) in enumerate(zip(sa.to_pylist(), sb.to_pylist())):
+            if (o := _overlap(set(a), set(c), threshold)) is not None:
+                keep.append(r)
+                stats.append(o)
+        counts = list(zip(*stats)) or [(), (), ()]
+        yield pa.RecordBatch.from_arrays(
+            [_take(id1, keep), _take(id2, keep), *(pa.array(v, pa.int64()) for v in counts)],
+            ["id1", "id2", "n_inter", "na", "nb"],
+        )
+
+
+def _contract_batches(batches):
+    """mapInArrow body: union-find over one partition's edges (s < l),
+    emitted as a star — (root, node) for every node but the root."""
+    cols = _pooled(batches)
+    if cols is None:
+        return
+    root = _union_find(cols[0].to_pylist(), cols[1].to_pylist())
+    kids = [x for x, r in root.items() if x != r]
+    yield pa.RecordBatch.from_arrays(
+        [pa.array([root[x] for x in kids], cols[0].type), pa.array(kids, cols[0].type)],
+        ["s", "l"],
+    )
+
+
+def _task_stage(docs: DataFrame, stage: str, k: int, hashes: list,
+                band_size: int, max_bucket: int | None, threshold: float) -> DataFrame:
+    """The kernel's stages as a Spark plan: the per-document step in
+    mapInArrow tasks after a repartition on the id (so an id's rows
+    meet), one band-bucket exchange, and the Jaccard step in mapInArrow
+    tasks over the candidates joined to their shingle sets."""
+    id_t = docs.schema["id"].dataType
+    n = docs.sparkSession.sparkContext.defaultParallelism
+    sk = docs.repartition(n, "id").mapInArrow(
+        functools.partial(_sketch_batches, k=k, hashes=hashes),
+        T.StructType([
+            T.StructField("id", id_t),
+            T.StructField("sig", T.ArrayType(T.LongType())),
+            T.StructField("sh", T.ArrayType(T.StringType())),
+        ]),
+    )
+    sigs = sk.select("id", *[F.col("sig")[c].alias(f"h{c}") for c in range(len(hashes))])
+    if stage == "signatures":
+        return sigs
+    # One aggregation per bucket, then the pairs expand inside the
+    # bucket array: one shuffle, and the bucket-size cap is a filter.
+    buckets = (
+        lsh_bands(sigs, "id", len(hashes), band_size)
+        .groupBy("band", "band_key")
+        .agg(F.array_sort(F.collect_set("id")).alias("ids"))
+        .filter(F.size("ids").between(2, max_bucket or (1 << 31)))
+    )
+    pairs = buckets.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    F.col("ids"),
+                    lambda x, i: F.transform(
+                        F.slice(F.col("ids"), i + 2, F.size("ids")),
+                        lambda y: F.struct(x.alias("id1"), y.alias("id2")),
+                    ),
+                )
+            )
+        ).alias("p")
+    ).select("p.id1", "p.id2").distinct()
+    if stage == "pairs":
+        return pairs
+    verified = (
+        pairs.join(sk.select(F.col("id").alias("id1"), F.col("sh").alias("sa")), "id1")
+        .join(sk.select(F.col("id").alias("id2"), F.col("sh").alias("sb")), "id2")
+        .select("id1", "id2", "sa", "sb")
+        .mapInArrow(functools.partial(_verify_batches, threshold=threshold),
+                    _stage_schema("verified", id_t, 0))
+    )
+    if stage == "verified":
+        return verified
+    groups = connected_components_star(verified).select(
+        F.col("doc_id").alias("id"), "group_id",
+        F.count(F.lit(1)).over(W.partitionBy("group_id")).alias("n"),
+    )
+    return (
+        docs.select("id")
+        .join(groups, "id", "left")
+        .filter(F.col("group_id").isNull() | (F.col("id") == F.col("group_id")))
+        .select("id", F.col("id").alias("group_id"),
+                F.coalesce("n", F.lit(1)).cast("long").alias("n_members"))
+    )
+
+
+def near_dedup(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    stage: str = "survivors",
+    n_hashes: int = 12,
+    band_size: int = 3,
+    shingle_k: int = 3,
+    max_bucket: int | None = 1000,
+    threshold: float = 0.4,
+) -> DataFrame:
+    """MinHash-LSH near-dedup of ``df``'s (id, text) rows, up to ``stage``:
+
+    - ``signatures``: (id, h0..h{n_hashes-1}) per id with a shingle;
+    - ``pairs``: LSH candidates (id1 < id2) colliding in ≥ 1 band of
+      ``band_size`` hashes; buckets over ``max_bucket`` ids are dropped;
+    - ``verified``: candidates with exact shingle-set Jaccard ≥
+      ``threshold``, as integer (id1, id2, n_inter, na, nb) so a caller
+      rounds n_inter / (na + nb - n_inter) in Spark;
+    - ``survivors``: (id, group_id, n_members) — every row whose id is
+      the min id of its verified component (group_id = id, n_members
+      the component's size) or in no verified pair (n_members 1).
+
+    Placement is by ``_on_driver`` (module docstring); both placements
+    run the same kernel functions and give the same rows."""
+    docs = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    args = (shingle_k, minhash_params(n_hashes), band_size, max_bucket, threshold)
+    if _on_driver(docs):
+        t = docs.toArrow()
+        cols = _kernel(t.column("id").combine_chunks(), t.column("text").combine_chunks(),
+                       stage, *args)
+        schema = _stage_schema(stage, docs.schema["id"].dataType, n_hashes)
+        out = df.sparkSession.createDataFrame(pa.table(cols), schema)
+    else:
+        out = _task_stage(docs, stage, *args)
+    return out.withColumnRenamed("id", id_col)
 
 
 def minhash_signatures(
@@ -81,34 +407,12 @@ def minhash_signatures(
 ) -> DataFrame:
     """MinHash signature per document: h_i = min over shingles of
     (a_i·md5base(shingle) + b_i) mod p — ONE md5 per shingle plus
-    n_hashes codegen'd affine maps (the standard Carter-Wegman
-    construction; 12× less hashing than n independent salted md5s).
-
-    Formulation: explode shingles → 12 affine `min` aggregates per doc.
-    The explode/agg pipeline stays inside whole-stage codegen, and the
-    groupBy reuses _exploded_shingles' hash partitioning on the id, so
-    there is NO exchange between explode and aggregate — at 100 TB the
-    only shuffle in the LSH pipeline remains the band-bucket
-    aggregation. An array-HOF alternative (transform + array_min over a
-    per-row shingle array, zero shuffles on paper) measured 6× SLOWER
-    at sf0.1 (5.4s vs 0.9s): HigherOrderFunction lambdas are
-    interpreted per element outside codegen, which dwarfs the shuffle
-    they avoid. Measured, not guessed — keep the explode.
-
-    Zero-shingle (empty/whitespace) docs are excluded from the LSH
-    universe by the explode itself (no rows): an all-NULL signature
-    would put every such doc in one degenerate band bucket. Mirrors the
-    oracle, where UNNEST of an empty shingle list yields no rows."""
-    ex = _exploded_shingles(df, id_col, text_col, shingle_k)
-    hb = ex.select(
-        F.col(id_col), (md5_base_long(F.col("s")) % MINHASH_P).alias("__hb")
-    )
-    return hb.groupBy(id_col).agg(
-        *[
-            F.min((F.lit(a) * F.col("__hb") + F.lit(b)) % MINHASH_P).alias(f"h{i}")
-            for i, (a, b) in enumerate(minhash_params(n_hashes))
-        ]
-    )
+    n_hashes affine maps (the standard Carter-Wegman construction).
+    Zero-shingle (empty/whitespace) docs have no row: an all-NULL
+    signature would put every such doc in one degenerate band bucket.
+    Mirrors the oracle, where UNNEST of an empty shingle list yields no
+    rows. The kernel's first two steps (``near_dedup``)."""
+    return near_dedup(df, id_col, text_col, "signatures", n_hashes, shingle_k=shingle_k)
 
 
 def lsh_bands(sigs: DataFrame, id_col: str, n_hashes: int, band_size: int) -> DataFrame:
@@ -142,32 +446,11 @@ def minhash_lsh_pairs(
     max_bucket: int | None = 1000,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id1 < id2) that collide in ≥1 LSH
-    band. `max_bucket` drops degenerate buckets to bound fan-out."""
-    sigs = minhash_signatures(df, id_col, text_col, n_hashes, shingle_k)
-    bands = lsh_bands(sigs, id_col, n_hashes, band_size)
-    # One aggregation per bucket, then expand pairs inside the bucket
-    # array: cheaper than a self-join (one shuffle, no lineage
-    # recomputation) and the bucket-size guard is a free filter.
-    # Sound because LSH buckets are small by design; `max_bucket` caps
-    # the quadratic expansion on degenerate (boilerplate) buckets.
-    buckets = bands.groupBy("band", "band_key").agg(
-        F.array_sort(F.collect_set(F.col(id_col))).alias("ids")
+    band. `max_bucket` drops degenerate buckets to bound fan-out. The
+    kernel's first three steps (``near_dedup``)."""
+    return near_dedup(
+        df, id_col, text_col, "pairs", n_hashes, band_size, shingle_k, max_bucket
     )
-    sized = buckets.filter(F.size("ids").between(2, max_bucket or (1 << 31)))
-    pairs = sized.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size("ids")),
-                        lambda y: F.struct(x.alias("id1"), y.alias("id2")),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return pairs.select(F.col("p.id1").alias("id1"), F.col("p.id2").alias("id2")).distinct()
 
 
 def simhash16_token_values(text: Column) -> Column:
@@ -201,15 +484,6 @@ def simhash16_from_values(vals: Column) -> Column:
     for b in range(16):
         fp = fp + F.when(bit_balance(b) > 0, F.lit(1 << b)).otherwise(F.lit(0))
     return fp
-
-
-def simhash16(text: Column) -> Column:
-    """16-bit SimHash over whitespace tokens, as a single expression.
-    Convenience form only: used inline, the md5 transform sits inside
-    all 16 bit aggregates and is re-evaluated by each. Hot paths should
-    project simhash16_token_values first and apply simhash16_from_values
-    in a second select (as plans.dedup.dedup_simhash does)."""
-    return simhash16_from_values(simhash16_token_values(text))
 
 
 def ngram_jaccard_pairs(
@@ -484,85 +758,25 @@ def embedding_neardup_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame, id1: str = "id1", id2: str = "id2", max_iter: int = 20
-) -> DataFrame:
-    """Connected components over a candidate-pair edge list: every node
-    gets ``group_id`` = min id reachable through pairs — the canonical
-    representative of its near-dup cluster (the step that turns
-    pairwise LSH/Jaccard output into per-document dedup decisions).
-
-    Min-label propagation: each round every node takes the min of its
-    own and its neighbors' labels; converges in O(component diameter)
-    rounds, and near-dup clusters are dense and shallow (diameter 2-4),
-    so a handful of rounds closes real corpora. Each round is one
-    equi-join + one groupBy over the EDGE list only — the transitive
-    closure is never materialized (the test oracle's recursive CTE does
-    that, viable only at test scale). Lineage is truncated per round
-    (localCheckpoint) so round N's plan doesn't replay rounds 1..N-1.
-    At extreme skew (one viral boilerplate cluster) switch to
-    large-star/small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"), whose rounds also rebalance high-degree
-    nodes; the fixed-point loop and stopping rule stay identical."""
-    from pyspark.sql import Observation
-
-    edges = (
-        pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
-        .unionByName(pairs.select(F.col(id2).alias("src"), F.col(id1).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = edges.join(
-            labels, edges["dst"] == labels["node"]
-        ).groupBy("src").agg(F.min("label").alias("nl"))
-        # Convergence flag is computed IN the label-update select (labels
-        # only ever decrease, so chg := new < old) and COUNTED as an
-        # observed metric on the round's own checkpoint pass — zero
-        # extra jobs, where the former take-1 scan paid one per round.
-        obs = Observation()
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                "label",
-                F.least("label", F.coalesce("nl", "label")).alias("new_label"),
-            )
-            .select(
-                "node",
-                F.col("new_label").alias("label"),
-                (F.col("new_label") < F.col("label")).alias("chg"),
-            )
-            .observe(obs, F.sum(F.col("chg").cast("long")).alias("n_chg"))
-            .localCheckpoint(eager=True)
-        )
-        converged = int(obs.get["n_chg"] or 0) == 0
-        labels = new_labels.drop("chg")
-        if converged:
-            break
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("group_id"))
-
-
 def connected_components_star(
     pairs: DataFrame, id1: str = "id1", id2: str = "id2", max_iter: int = 30
 ) -> DataFrame:
-    """Connected components via the alternating large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the skew-safe sibling of ``connected_components``: where
-    min-label propagation needs O(component diameter) rounds and keeps
-    every edge live, star contraction converges in O(log n) rounds and
+    """Connected components over an edge list: (doc_id, group_id = min
+    id reachable) for every node of a non-loop edge of `pairs` — the
+    step that turns pairwise LSH/Jaccard output into per-document dedup
+    decisions.
+
+    While the edge list's size estimate fits ``_DRIVER_DEDUP_BYTES`` it
+    is collected once and labelled by the kernel's union-find on the
+    driver (a LocalRelation). Above it, each partition's edges first
+    run the same union-find (``_contract_batches``) and leave one star
+    per local component; the alternating large-star/small-star
+    contraction (Kiveris et al., "Connected Components in MapReduce and
+    Beyond") then joins those stars. It converges in O(log n) rounds and
     each round REWRITES the edge list toward a star, so a viral
     boilerplate cluster (one doc near-duplicated a million times)
     collapses onto its minimum in a few rounds instead of funneling a
-    million labels through one key every round. Same contract as
-    connected_components: (doc_id, group_id = min id reachable), nodes
-    that appear in `pairs` only.
+    million labels through one key every round.
 
     Per round, two window aggregations over the edge list (no
     self-joins): large-star connects every neighbor larger than u to
@@ -571,21 +785,32 @@ def connected_components_star(
     neighborhood over the canonical (small, large) orientation.
     Convergence = round leaves the canonical edge set unchanged
     (count + anti-join emptiness — exact, not a checksum); lineage is
-    truncated per round with localCheckpoint like the sibling."""
+    truncated per round with localCheckpoint."""
     from pyspark.sql import Observation
 
+    edges = (
+        pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .select(F.least("a", "b").alias("s"), F.greatest("a", "b").alias("l"))
+    )
+    id_t = edges.schema["s"].dataType
+    if _on_driver(edges):
+        t = edges.toArrow()
+        root = _union_find(t.column("s").to_pylist(), t.column("l").to_pylist())
+        typ = t.schema.field("s").type
+        return pairs.sparkSession.createDataFrame(
+            pa.table({"doc_id": pa.array(list(root), typ),
+                      "group_id": pa.array(list(root.values()), typ)}),
+            T.StructType([T.StructField("doc_id", id_t), T.StructField("group_id", id_t)]),
+        )
+    edges = edges.mapInArrow(_contract_batches, edges.schema)
     # Edge counts ride each checkpoint's own materialization pass as
     # observed metrics (zero extra jobs); the former shape paid a
     # count job (and an initial isEmpty probe) per round over the
     # just-checkpointed blocks.
     obs0 = Observation()
     edges = (
-        pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("s"), F.greatest("a", "b").alias("l")
-        )
-        .distinct()
+        edges.distinct()
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
@@ -635,7 +860,7 @@ def connected_components_star(
         # only trips on pathological inputs worth surfacing.
         raise ValueError(
             f"connected_components_star did not converge in {max_iter} "
-            "rounds; raise max_iter or use connected_components"
+            "rounds; raise max_iter"
         )
     # Fixed point is a star forest: every non-root appears exactly once
     # as `l` pointing at its root `s`; roots label themselves.

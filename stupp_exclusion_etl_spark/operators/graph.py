@@ -50,7 +50,8 @@ def pagerank(edges: DataFrame, iters: int = 5, damping: float = 0.85) -> DataFra
     pass as two shuffles over the EDGE list; no adjacency ever sits on
     the driver, whose only state is the node count N. localCheckpoint
     truncates lineage so round k does not replay rounds 1..k-1 (the
-    same loop discipline as connected_components). At 100 TB:
+    same loop discipline as operators.dedup.connected_components_star's
+    task placement). At 100 TB:
     pre-partition the edge table by src to make the join side
     zero-exchange, and a viral in-degree hub is just a skewed
     hash-agg key — AQE skew handling applies, no code change.
@@ -86,7 +87,8 @@ def pagerank(edges: DataFrame, iters: int = 5, damping: float = 0.85) -> DataFra
     # edge blocks — no replay, and none of the per-round eager
     # materializations the loop used to pay (iters extra jobs, each a
     # full rank-frame copy). Loops that DO act per round (convergence
-    # checks, e.g. connected_components) still checkpoint per round.
+    # checks, e.g. connected_components_star's star contraction) still
+    # checkpoint per round.
     for _ in range(iters):
         ranks = (
             ew.join(ranks, ew["src"] == ranks["node"])

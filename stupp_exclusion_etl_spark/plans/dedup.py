@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 from stupp_exclusion_etl_spark.catalog import table
 from stupp_exclusion_etl_spark.functions.text import fingerprint
 from stupp_exclusion_etl_spark.operators.dedup import (
+    connected_components_star,
     minhash_lsh_pairs,
+    near_dedup,
     ngram_jaccard_pairs,
     simhash16_from_values,
     simhash16_token_values,
@@ -103,12 +105,8 @@ def dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(12)+LSH(4 bands × 3) candidate near-dup pairs over
-    3-word shingles. One shuffle for signatures, one equi-join on
-    (band, band_key) for candidates — never a cartesian (operators.dedup).
-
-    No spread() wrapper: minhash_signatures repartitions internally, so
-    an upstream spread was a second full corpus exchange — the r2
-    1.88x regression (VERDICT r2, What's wrong #3)."""
+    3-word shingles, from the near-dedup kernel (operators.dedup):
+    in-bucket pairs, never a cartesian."""
     d = table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
         d, "doc_id", "text", n_hashes=_N_HASHES, band_size=_BAND_SIZE, shingle_k=3
@@ -276,20 +274,16 @@ _MINHASH_PAIRS_CTES = f"""
 )
 def dedup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUP assignment: MinHash-LSH candidate pairs →
-    connected components (operators.dedup.connected_components,
-    min-label propagation, O(diameter) rounds of edge-list joins) →
-    (doc_id, group_id = min id in cluster). The oracle materializes the
-    true transitive closure with a recursive CTE — viable only at test
-    scale, which is exactly why the engine side propagates labels
-    instead."""
-    from stupp_exclusion_etl_spark.operators.dedup import connected_components
-
-    # No spread(): minhash_signatures repartitions internally.
+    connected components (operators.dedup.connected_components_star:
+    the kernel's union-find on the driver, star contraction over
+    per-partition union-find stars in tasks) → (doc_id, group_id = min
+    id in cluster). The oracle materializes the true transitive closure
+    with a recursive CTE — viable only at test scale."""
     d = table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
         d, "doc_id", "text", n_hashes=_N_HASHES, band_size=_BAND_SIZE, shingle_k=3
     )
-    return connected_components(pairs).select(
+    return connected_components_star(pairs).select(
         F.col("doc_id").cast("long"), F.col("group_id").cast("long")
     )
 
@@ -311,25 +305,12 @@ def dedup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("B9",),
 )
 def dedup_groups_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same group assignment as dedup_groups_cc, computed by the
-    alternating large-star/small-star contraction
-    (operators.dedup.connected_components_star) instead of min-label
-    propagation: O(log n) rounds independent of component diameter, and
-    each round shrinks hot components toward their star — the variant
-    to reach for when one boilerplate cluster dominates a 100 TB
-    corpus. Oracle is the identical recursive-CTE transitive closure,
-    so both engines AND both algorithms are pinned to one answer."""
-    from stupp_exclusion_etl_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    d = table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", n_hashes=_N_HASHES, band_size=_BAND_SIZE, shingle_k=3
-    )
-    return connected_components_star(pairs).select(
-        F.col("doc_id").cast("long"), F.col("group_id").cast("long")
-    )
+    """The same group assignment as dedup_groups_cc, kept under the
+    star name: connected_components_star is the engine's one
+    connected-components operator, so both plans are that operator
+    over the same candidate pairs, pinned by the identical
+    recursive-CTE oracle."""
+    return dedup_groups_cc(spark, sf_dir)
 
 
 @register(
@@ -368,35 +349,19 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH proposes candidate pairs (sub-quadratic, bucket-capped), then
     exact shingle-set Jaccard verifies each candidate and keeps pairs
     >= 0.4 — LSH's false positives are filtered, and the exact-Jaccard
-    work is bounded by CANDIDATE count, never corpus². At 100 TB the
-    candidate list is many orders of magnitude smaller than the corpus
-    cross product; the verification joins are equi-joins on doc id /
-    shingle, all hash-partitioned. This is the composition the README's
-    "exact Jaccard runs only on candidates" design note promises."""
-    from stupp_exclusion_etl_spark.operators.dedup import _exploded_shingles
-
+    work is bounded by CANDIDATE count, never corpus². Both steps are
+    the near-dedup kernel (operators.dedup.near_dedup), which returns
+    the integer counts; the ratio is rounded here, in Spark, so the
+    rounding is Spark's."""
     d = table(spark, sf_dir, "documents")
-    cand = minhash_lsh_pairs(
-        d, "doc_id", "text", n_hashes=_N_HASHES, band_size=_BAND_SIZE, shingle_k=3
-    ).select(F.col("id1").cast("long"), F.col("id2").cast("long"))
-    ex = _exploded_shingles(d, "doc_id", "text", 3).distinct()
-    n = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    e1 = ex.select(F.col("doc_id").alias("id1"), F.col("s"))
-    e2 = ex.select(F.col("doc_id").alias("id2"), F.col("s"))
-    inter = (
-        cand.join(e1, "id1")
-        .join(e2, ["id2", "s"])
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    v = near_dedup(
+        d, "doc_id", "text", "verified",
+        n_hashes=_N_HASHES, band_size=_BAND_SIZE, shingle_k=3, threshold=0.4,
     )
-    na = n.select(F.col("doc_id").alias("id1"), F.col("n_sh").alias("na"))
-    nb = n.select(F.col("doc_id").alias("id2"), F.col("n_sh").alias("nb"))
     jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
-    return (
-        inter.join(na, "id1")
-        .join(nb, "id2")
-        .filter(jac >= 0.4)
-        .select("id1", "id2", F.round(jac, 6).alias("jaccard"))
+    return v.select(
+        F.col("id1").cast("long"), F.col("id2").cast("long"),
+        F.round(jac, 6).alias("jaccard"),
     )
 
 
@@ -474,10 +439,7 @@ def dedup_semantic_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (boilerplate, templated pages) are exactly the hub-shaped
     components star contraction collapses in O(log n) rounds. Oracle:
     recursive-CTE transitive closure over the identical cosine pairs."""
-    from stupp_exclusion_etl_spark.operators.dedup import (
-        connected_components_star,
-        embedding_neardup_pairs,
-    )
+    from stupp_exclusion_etl_spark.operators.dedup import embedding_neardup_pairs
 
     e = table(spark, sf_dir, "embeddings")
     # same cost fence as dedup_embedding_cosine: exact at test scales,
@@ -543,33 +505,23 @@ def dedup_semantic_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE production near-dedup pipeline as one oracled plan:
     MinHash-LSH candidates → exact-Jaccard verification (≥ 0.4) →
-    star-contraction connected components → keep exactly one canonical
-    document (min id) per near-dup cluster plus every untouched
-    singleton, with the cluster size it represents. This is the
-    keep-one-of-each step a training-data pipeline actually ships —
-    upstream of tokenization, downstream of everything in this module —
-    and every stage is the sub-quadratic shape proven individually
-    (bucket-capped candidates, candidate-bounded verification,
-    O(log n) contraction). The oracle restates all four stages plus the
+    connected components → keep exactly one canonical document (min
+    id) per near-dup cluster plus every untouched singleton, with the
+    cluster size it represents. This is the keep-one-of-each step a
+    training-data pipeline actually ships. All four stages are one
+    kernel (operators.dedup.near_dedup, stage "survivors"): on a corpus
+    within the driver budget one collect feeds it and the result is a
+    LocalRelation. The oracle restates all four stages plus the
     survivor anti-join in one recursive-CTE SQL statement."""
-    from stupp_exclusion_etl_spark.operators.dedup import (
-        connected_components_star,
-    )
-
     d = table(spark, sf_dir, "documents")
-    verified = dedup_lsh_verified(spark, sf_dir).select("id1", "id2")
-    groups = connected_components_star(verified)
-    sizes = groups.groupBy("group_id").agg(F.count(F.lit(1)).alias("n_members"))
-    non_canon = groups.filter(F.col("doc_id") != F.col("group_id"))
-    surv = d.select("doc_id").join(non_canon.select("doc_id"), "doc_id", "left_anti")
-    return (
-        surv.join(groups, "doc_id", "left")
-        .join(sizes, "group_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("group_id"), F.col("doc_id")).cast("long").alias("group_id"),
-            F.coalesce(F.col("n_members"), F.lit(1)).cast("long").alias("n_members"),
-        )
+    out = near_dedup(
+        d, "doc_id", "text", "survivors",
+        n_hashes=_N_HASHES, band_size=_BAND_SIZE, shingle_k=3, threshold=0.4,
+    )
+    return out.select(
+        "doc_id",
+        F.col("group_id").cast("long"),
+        F.col("n_members").cast("long"),
     )
 
 

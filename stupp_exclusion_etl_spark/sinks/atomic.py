@@ -456,15 +456,6 @@ def _ddl_field_type(ddl: str, col: str) -> str | None:
     return None
 
 
-def _write_text_plain(spark, dest: str, text: str) -> None:
-    """Write a uuid-named (hence race-free) metadata file. No CAS
-    needed: chunk names never collide and a chunk is unreferenced —
-    invisible to every reader — until the commit record's CAS publish
-    lands; a crash in between leaves an orphan for gc's age-guarded
-    reaper."""
-    _write_bytes_plain(spark, dest, text.encode("utf-8"))
-
-
 def _write_bytes_plain(spark, dest: str, payload: bytes) -> None:
     fs, dp, _jvm = _fs(spark, dest)
     out = fs.create(dp, False)
@@ -4104,10 +4095,11 @@ class AtomicParquetTable:
         old = read_files({f for s in only_a.values() for f in s}, since)
         new = read_files({f for s in only_b.values() for f in s}, until)
         if old is None and new is None:
-            empty = self.spark.createDataFrame(
-                [], self._manifest_light(until)["schema_ddl"]
-            )
-            return empty.withColumn("_change_type", F.lit(""))
+            # an empty LocalRelation in read order, as a feed that read
+            # files lists its columns; its collect runs no job
+            return self._empty_read(
+                self._manifest_light(until)["schema_ddl"]
+            ).withColumn("_change_type", F.lit(""))
         # align schemas (evolution may have widened either side)
         if old is None:
             old = new.limit(0)

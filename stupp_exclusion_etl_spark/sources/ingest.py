@@ -154,13 +154,6 @@ def parse_form_inputs(html: Column, url: Column) -> Column:
     return F.map_concat(m, F.create_map(F.lit("URL"), url))
 
 
-def parse_double_encoded_json(col: Column, schema: T.DataType) -> Column:
-    """A19: the portal returns JSON-encoded JSON
-    (reference clients/exclusion_requests.py:116,138 —
-    json.loads(json.loads(text))); decode with from_json twice."""
-    return F.from_json(F.from_json(col, T.StringType()), schema)
-
-
 @contextmanager
 def quarantine_split(df, reason):
     """Dead-letter split for dirty ingest: `reason` is an expression

@@ -108,3 +108,33 @@ def test_dup_span_removal_adversarial(spark):
     assert got[7] == (8, "tail1 tail2"), got[7]
     assert got[8][0] == 0
     assert got[9] == (10, "pre1 post1"), "overlap must merge maximally"
+
+
+# Separators Java's \s (Spark's split) and Python's str.split() disagree
+# on, next to the ones they share, and the short/repeated shapes the
+# shingle fallback handles.
+TOKENIZER_TEXTS = [
+    "a\u00a0b c d", "x\u2028y z w v", "p\x1cq\x1dr\x1es\x1ft u v",
+    "m\x85n o p", "a\x0bb\x0cc d e", "a\tb\t\tc\td", "\ta b c d\n",
+    "", " ", "\t\n\x0b\x0c\r ", "one", "two words", "\u00a0",
+    "r r r r r r r", "a b a b a b a b", "\u2028", "x\x1cy",
+]
+
+
+def test_kernel_shingles_equal_spark_shingles(spark):
+    """The near-dedup kernel's shingle sets (operators.dedup) equal
+    Spark's shingles(tokens(text)) as sets, also where Python's
+    str.split() would cut on a character Java's \\s does not."""
+    from stupp_exclusion_etl_spark.functions.text import shingles, tokens
+    from stupp_exclusion_etl_spark.operators.dedup import _shingle_set
+
+    rows = list(enumerate(TOKENIZER_TEXTS)) + [(len(TOKENIZER_TEXTS), None)]
+    df = spark.createDataFrame(rows, "i int, text string")
+    got = df.select("i", shingles(tokens(F.col("text")), 3).alias("sh")).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        text = rows[r.i][1]
+        assert set(r.sh or []) == _shingle_set(text, 3), repr(text)
+    # the disagreement is real: str.split() would have cut these
+    assert _shingle_set("a\u00a0b c d", 3) == {"a\u00a0b c d"}
+    assert _shingle_set("p\x1cq\x1dr\x1es\x1ft u v", 3) == {"p\x1cq\x1dr\x1es\x1ft u v"}

@@ -111,6 +111,38 @@ def test_feed_between_identical_versions_is_empty(spark, table):
     assert table.changes(v0, v0).count() == 0
 
 
+def test_empty_feed_lists_columns_as_a_feed_that_read_files(spark, tmp_path):
+    """An interval in which no file changed gives the columns in the
+    order a non-empty feed gives them (partition columns last), also
+    when the version's record keeps its first commit's order, and
+    collecting it runs no Spark job."""
+    t = AtomicParquetTable(
+        spark, str(tmp_path / "p"), keys=["k"], partition_by=["part"]
+    )
+    t.upsert(
+        spark.createDataFrame(
+            [(1, "A", 1.0), (2, "B", 2.0)], "k int, part string, v double"
+        ),
+        [F.col("v").desc()],
+    )
+    v0 = t.current_version()
+    assert t._manifest_light(v0)["schema_ddl"].index("part") < (
+        t._manifest_light(v0)["schema_ddl"].index("v ")
+    )
+    empty = t.changes(v0, v0)
+    t.upsert(
+        spark.createDataFrame([(3, "C", 3.0)], "k int, part string, v double"),
+        [F.col("v").desc()],
+    )
+    feed = t.changes(v0)
+    assert empty.columns == feed.columns == ["k", "v", "part", "_change_type"]
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.dagScheduler().numTotalJobs()
+    assert empty.collect() == []
+    assert sc.dagScheduler().numTotalJobs() == before
+    assert [(r.k, r._change_type) for r in feed.collect()] == [(3, "insert")]
+
+
 def test_restore_rolls_back_as_new_commit(spark, table):
     """restore(v) re-points the manifest at a retained snapshot's file
     entries — zero data I/O, history preserved, and the change feed

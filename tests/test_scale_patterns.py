@@ -137,20 +137,33 @@ def test_broadcast_join_no_big_side_shuffle(spark):
     assert "ShuffleExchange" not in plan.replace("BroadcastExchange", "")
 
 
-def test_connected_components_known_graph(spark):
-    """Chain of 6 (forces multiple propagation rounds — diameter 5),
-    a triangle, and an isolated pair: every node must label with its
-    component's min id, and convergence must beat max_iter."""
-    from stupp_exclusion_etl_spark.operators.dedup import connected_components
+def _union_find_reference(edges) -> dict:
+    """Plain-Python union-find: node -> min node of its component, for
+    every node of a non-loop edge."""
+    parent = {}
 
-    pairs = spark.createDataFrame(
-        # chain 10-11-12-13-14-15, triangle 20-21-22, pair 30-31
-        [(10, 11), (11, 12), (12, 13), (13, 14), (14, 15),
-         (20, 21), (21, 22), (20, 22), (30, 31)],
-        "id1 long, id2 long",
-    )
-    got = {r.doc_id: r.group_id for r in connected_components(pairs).collect()}
-    assert got == {
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_connected_components_star_known_graph(spark):
+    """Chain of 6 (diameter 5), a triangle, and an isolated pair: every
+    node must label with its component's min id."""
+    from stupp_exclusion_etl_spark.operators.dedup import connected_components_star
+
+    edges = [(10, 11), (11, 12), (12, 13), (13, 14), (14, 15),
+             (20, 21), (21, 22), (20, 22), (30, 31)]
+    pairs = spark.createDataFrame(edges, "id1 long, id2 long")
+    got = {r.doc_id: r.group_id for r in connected_components_star(pairs).collect()}
+    assert got == _union_find_reference(edges) == {
         10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10,
         20: 20, 21: 20, 22: 20,
         30: 30, 31: 30,
@@ -362,19 +375,15 @@ def test_misra_gries_survives_eviction_churn(spark):
     assert [(r.token, r.cnt) for r in got] == [("heavy", 160)]
 
 
-def test_connected_components_star_matches_label_propagation(spark):
-    """The alternating large-star/small-star contraction must produce
-    the identical (doc_id, group_id) map as min-label propagation on a
-    graph with every awkward shape at once: a diameter-9 chain (worst
-    case for propagation), a 60-spoke hub (the skew shape star
+def test_connected_components_star_matches_union_find_reference(spark):
+    """connected_components_star must produce the (doc_id, group_id)
+    map of a plain-Python union-find on a graph with every awkward shape
+    at once: a diameter-9 chain, a 60-spoke hub (the skew shape star
     contraction exists for), a triangle, an isolated pair, and a dense
     random blob."""
     import random
 
-    from stupp_exclusion_etl_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from stupp_exclusion_etl_spark.operators.dedup import connected_components_star
 
     random.seed(23)
     edges = [(i, i + 1) for i in range(100, 109)]           # chain
@@ -382,13 +391,11 @@ def test_connected_components_star_matches_label_propagation(spark):
     edges += [(300, 301), (301, 302), (300, 302), (400, 401)]
     edges += [(500 + random.randrange(40), 500 + random.randrange(40))
               for _ in range(80)]                            # random blob
-    pairs = spark.createDataFrame(
-        [e for e in edges if e[0] != e[1]], "id1 long, id2 long"
-    )
-    want = {r.doc_id: r.group_id for r in connected_components(pairs).collect()}
+    edges = [e for e in edges if e[0] != e[1]]
+    pairs = spark.createDataFrame(edges, "id1 long, id2 long")
     got = {r.doc_id: r.group_id
            for r in connected_components_star(pairs).collect()}
-    assert got == want
+    assert got == _union_find_reference(edges)
     assert got[109] == 100 and got[260] == 200 and got[401] == 400
 
 
