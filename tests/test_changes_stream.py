@@ -493,9 +493,6 @@ def test_incremental_dedup_stream_capstone(spark, tmp_path):
     assert job.bands.current_version() == bv
 
 
-# slow tier: test_rate_cap_end_to_end_bounded_batches checks the same
-# bounded, complete drain through the engine in the fast tier
-@pytest.mark.slow  # round-exit tier (see pytest.ini)
 def test_rate_cap_unit_walk(spark, table):
     """max_versions_per_trigger bounds every planned batch to K source
     versions: the offset walk drains a 6-commit backlog as ceil(6/2)=3
