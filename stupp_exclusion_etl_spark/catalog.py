@@ -91,10 +91,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so plans can use spark.sql."""
     for name in TABLES:

@@ -13,11 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def salted_md5(salt: int | str, value: Column) -> Column:
-    """md5(f"{salt}:{value}") — one member of the MinHash family."""
-    return F.md5(F.concat(F.lit(f"{salt}:"), value))
-
-
 #: Modulus of the affine MinHash family (prime, < 2^30 so a*h+b stays
 #: far inside int64 for both engines).
 MINHASH_P = 1_000_000_007

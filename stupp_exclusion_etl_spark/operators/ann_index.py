@@ -42,27 +42,31 @@ restatable in ANSI SQL for the DuckDB oracle; ``kmeans`` (pyspark.ml)
 is the production trainer — same storage and maintenance, recall-
 tested rather than oracle-hashed (clustering is partition-sensitive).
 
-Serving and assignment run ONE numpy kernel (below) over flat Arrow
-values. A query batch is collected (zero jobs on a LocalRelation; a
-batch is serving-sized by contract), routed on the driver against the
-memoized centroids, and its probed cells are read once, chunk/file-
-pruned, by the sink's driver scan; the top-k returns as a LocalRelation
-frame, so serving a local table runs no Spark job (a table off the
-local filesystem collects its probed read in one). A probed read above
-the sink's driver byte budget (``atomic._DRIVER_SCAN_BYTES``) is scored
-in Arrow tasks instead, then merged per query: only the placement differs,
-never the arithmetic. Build and refresh assign through the kernel in a
-map-only Arrow pass, so every path agrees on NaN, NULL and ties.
+Serving, training and assignment run ONE numpy kernel (below) over
+flat Arrow values, the kernel every operators.similarity operator
+scores with too. A query batch is collected (zero jobs on a
+LocalRelation; a batch is serving-sized by contract), routed on the
+driver against the memoized centroids, and its probed cells are read
+once, chunk/file-pruned, by the sink's driver scan; the top-k returns
+as a LocalRelation frame, so serving a local table runs no Spark job (a
+table off the local filesystem collects its probed read in one). A
+probed read above the sink's driver byte budget
+(``atomic._DRIVER_SCAN_BYTES``) is scored in Arrow tasks instead, then
+merged per query (``_placed``): only the placement differs, never the
+arithmetic. Build and refresh assign (and PQ-encode) through the kernel
+in a map-only Arrow pass, so every path agrees on NaN, NULL and ties.
 """
 
 from __future__ import annotations
 
+import functools
 import sys
 import zlib
 from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +74,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 from pyspark.sql.window import Window
 
+from stupp_exclusion_etl_spark.operators.budget import _on_driver
 from stupp_exclusion_etl_spark.sinks.atomic import (
     _PROBE_BROADCAST_CAP,
     AtomicParquetTable,
@@ -96,16 +101,18 @@ _META_BASELINE_Q = "baseline_quality"
 
 # -- the kernel ---------------------------------------------------------
 #
-# Every cosine is accumulated left to right in float64 from 0.0, the
-# operation order of functions.vectors.dot/cosine, so each value is
+# Every dot, norm, LUT entry and ADC score is accumulated left to right
+# in float64 from 0.0, the operation order of functions.vectors.dot/
+# cosine and of the oracles' ``+`` chains, so each value is
 # bit-identical to the Catalyst expression (a BLAS matmul sums pairwise
 # and can differ in the last ulp). One set of rules for every caller:
-# - NULL never wins: a zero norm, or a NULL, ragged or NULL-element
-#   vector, scores NULL (try_divide / zip_with);
+# - NULL never wins: a zero norm (for cosine), or a NULL, ragged or
+#   NULL-element vector, scores NULL (try_divide / zip_with);
 # - NaN ranks above every double, as Spark orders it;
 # - assignment and routing ties go to the lowest cell;
-# - top-k orders by Spark's round(cos, 6) descending, then id
-#   ascending, exact under any number of ties.
+# - top-k orders by Spark's round(score, 6) descending, then id
+#   ascending (NULL first, strings by UTF-8 bytes), exact under any
+#   number of ties.
 
 _MICRO = Decimal("1e-6")
 _WIDE = Context(prec=400)  # any double quantizes to 1e-6 exactly
@@ -154,22 +161,89 @@ def _norms(a):
     return np.sqrt(acc)
 
 
-def _cosines(a, ai, b, bi):
-    """cosine(a[ai], b[bi]) as a len(ai)×len(bi) float64 matrix plus
-    its NULL mask; a pair is scored per distinct length of ``b``'s rows
-    (in practice one)."""
-    cos = np.zeros((len(ai), len(bi)))
-    null = np.ones(cos.shape, dtype=bool)
+def _cosines(a, ai, b, bi, cos: bool = True):
+    """cosine(a[ai], b[bi]) — or, with ``cos`` False, dot(a[ai], b[bi])
+    — as a len(ai)×len(bi) float64 matrix plus its NULL mask; a pair is
+    scored per distinct length of ``b``'s rows (in practice one)."""
+    out = np.zeros((len(ai), len(bi)))
+    null = np.ones(out.shape, dtype=bool)
     blens, bok = b[2][bi], b[3][bi]
     with np.errstate(all="ignore"):
         for d in np.unique(blens[bok]):
             cols = np.flatnonzero(bok & (blens == d))
             am, aok = _rows(a, ai, int(d))
             bm, _ = _rows(b, bi[cols], int(d))
-            den = _norms(am)[:, None] * _norms(bm)[None, :]
-            cos[:, cols] = _dots(am, bm) / den
-            null[:, cols] = ~aok[:, None] | (den == 0)
-    return cos, null
+            out[:, cols] = _dots(am, bm)
+            null[:, cols] = ~aok[:, None]
+            if cos:
+                den = _norms(am)[:, None] * _norms(bm)[None, :]
+                out[:, cols] /= den
+                null[:, cols] |= den == 0
+    return out, null
+
+
+#: Inner products (MIPS): NULL as for cosine, but for a zero norm.
+_ips = functools.partial(_cosines, cos=False)
+
+
+def _luts(q, book):
+    """(lut, ok) of the query parts ``q`` against the codebook array
+    ``book`` (m×k×d): lut[q][s][c] = <q_s, book[s][c]> summed left to
+    right from 0.0. A query that is not a NULL-free m·d vector is not
+    ok, and scores NULL, as zip_with's NULL product does."""
+    m, kc, d = book.shape
+    qm, ok = _rows(q, np.arange(len(q[3])), m * d)
+    lut = np.zeros((len(qm), m, kc))
+    for s in range(m):
+        for i in range(d):
+            lut[:, s] += qm[:, s * d + i, None] * book[None, s, :, i]
+    return lut, ok
+
+
+def _adc(a, ai, lut, qi):
+    """Asymmetric distances of the code rows a[ai] to queries ``qi``
+    of ``_luts``' (lut, ok): lut[q][s][code_s], the subspace terms
+    added left to right from 0.0. A row that is not m codes is NULL."""
+    tab, qok = lut
+    m = tab.shape[1]
+    codes, ok = _rows(a, ai, m)
+    codes = codes.astype(np.int64)
+    out = np.zeros((len(ai), len(qi)))
+    for s in range(m):
+        out += tab[qi, s][:, codes[:, s]].T
+    return out, ~ok[:, None] | ~qok[qi][None, :]
+
+
+def _pq_codes(vecs, book):
+    """(codes n×m int32, ok) of a list array against the codebook
+    array ``book`` (m×k×d): code s of a row is argmin_c
+    ||book[s][c]||² − 2·<v_s, book[s][c]>, each sum left to right from
+    0.0, the first minimum winning; a NaN distance never wins, and a
+    NaN for centroid 0 keeps code 0. A NULL element reads as NaN. Rows
+    that are NULL or not m·d long are not ok: they have no code."""
+    m, kc, d = book.shape
+    vals, offs, lens, _ok = _parts(vecs)
+    valid = ~vecs.is_null().to_numpy(zero_copy_only=False)
+    v, ok = _rows((vals, offs, lens, valid), np.arange(len(valid)), m * d)
+    cn = np.zeros((m, kc))
+    for i in range(d):
+        cn += book[:, :, i] * book[:, :, i]
+    codes = np.zeros((len(v), m), dtype=np.int32)
+    with np.errstate(all="ignore"):
+        for s in range(m):
+            acc = np.zeros((len(v), kc))
+            for i in range(d):
+                acc = acc + v[:, s * d + i, None] * book[None, s, :, i]
+            dist = cn[s] - 2.0 * acc
+            best = np.argmin(np.where(np.isnan(dist), np.inf, dist), axis=1)
+            codes[:, s] = np.where(np.isnan(dist[:, 0]), 0, best)
+    return codes, ok
+
+
+def _keys(ids) -> np.ndarray:
+    """Integer sort keys of an Arrow id array in Spark's ascending
+    order: NULL first, strings by their UTF-8 bytes."""
+    return pc.rank(ids, null_placement="at_start", tiebreaker="dense").to_numpy()
 
 
 def _rank(cos, null):
@@ -188,21 +262,22 @@ def _best(cos, null):
     return np.argmax(win & (key == key.min(axis=1, keepdims=True)), axis=1)
 
 
-def _top(group, cos, null, ids, k: int):
+def _top(group, cos, null, keys, k: int):
     """Indices of each group's first k entries, ordered by (group,
     rank, id) — the per-query ``row_number() <= k`` of a window over
-    (cos DESC NULLS LAST, id ASC)."""
+    (cos DESC NULLS LAST, id ASC); ``keys`` are the ids' sort keys."""
     if not len(group):
         return np.zeros(0, dtype=np.int64)
-    if ids.dtype == object:  # strings order by code point, as UTF-8
-        ids = np.unique(ids, return_inverse=True)[1]
     cls, key = _rank(cos, null)
-    order = np.lexsort((ids, key, cls, group))
-    g = group[order]
+    order = np.lexsort((keys, key, cls, group))
+    return order[_place(group[order]) < k]
+
+
+def _place(g):
+    """0-based position of each entry within its run of equal ``g``."""
     at = np.arange(len(g))
     first = np.r_[True, g[1:] != g[:-1]]
-    start = np.maximum.accumulate(np.where(first, at, 0))
-    return order[at - start < k]
+    return at - np.maximum.accumulate(np.where(first, at, 0))
 
 
 def _round6(x):
@@ -226,28 +301,163 @@ def _round6(x):
     return out
 
 
-def _score(q, by_cell, ids, cells, vecs, k: int):
-    """Each query's top k among the candidate rows of the cells it was
-    routed to (``by_cell``: cell -> query indices). Returns (query
-    index, row index, cos_sim, NULL mask) in per-query rank order,
-    cos_sim rounded like Spark's round(cos, 6). Pairs are formed per
-    cell in blocks of at most ``_BLOCK`` values and cut to each query's
-    top k at once, so the work is exactly the routed pairs and the
-    memory is one block plus k rows per query and block."""
-    c = _parts(vecs)
-    d = int(q[2].max(initial=1))
+def _score(c, q, groups, keys, k: int, pair=_cosines, skip=None, group=None):
+    """Each query's top k among the candidate rows (parts ``c``) routed
+    to it: ``groups`` holds (rows, query indices) routes, scored by
+    ``pair(c, rows, q, qs)`` — ``_cosines``, ``_ips`` or ``_adc`` —
+    less the pairs ``skip(rows, qs)`` masks. ``group`` maps a query to
+    its ranking (default: itself). Returns (query index, row index,
+    score, NULL mask) in (ranking, rank) order, scores rounded like
+    Spark's round(x, 6), ties to the lower id ``keys``. Routes are
+    scored in blocks of at most ``_BLOCK`` values, each cut to its top
+    k at once: the work is the routed pairs, the memory one block."""
+    d = int(c[2].max(initial=1))
     kept = [(np.zeros(0, np.int64),) * 2 + (np.zeros(0), np.zeros(0, bool))]
-    for cell, qs in by_cell.items():
-        rows = np.flatnonzero(cells == cell)
+    for rows, qs in groups:
         for r in np.array_split(rows, 1 + len(rows) * (len(qs) + d) // _BLOCK):
-            cos, null = (m.ravel() for m in _cosines(c, r, q, qs))
+            s, null = (m.ravel() for m in pair(c, r, q, qs))
             qi, ri = np.tile(qs, len(r)), np.repeat(r, len(qs))
-            cos[~null] = _round6(cos[~null])
-            top = _top(qi, cos, null, ids[ri], k)
-            kept.append((qi[top], ri[top], cos[top], null[top]))
-    qi, ri, cos, null = (np.concatenate(x) for x in zip(*kept))
-    top = _top(qi, cos, null, ids[ri], k)
-    return qi[top], ri[top], cos[top], null[top]
+            if skip is not None:
+                keep = ~skip(r, qs).ravel()
+                qi, ri, s, null = qi[keep], ri[keep], s[keep], null[keep]
+            s[~null] = _round6(s[~null])
+            top = _top(qi if group is None else group[qi], s, null, keys[ri], k)
+            kept.append((qi[top], ri[top], s[top], null[top]))
+    qi, ri, s, null = (np.concatenate(x) for x in zip(*kept))
+    top = _top(qi if group is None else group[qi], s, null, keys[ri], k)
+    return qi[top], ri[top], s[top], null[top]
+
+
+def _route(q, cents, keys, n: int, qi=None):
+    """Row indices into ``cents`` of the first n centroids of every
+    query of the parts ``q`` (or of the ``qi`` subset), shaped
+    (queries, n): the kernel cosines ranked by the one order, ties to
+    the lowest centroid ``keys``."""
+    qi = np.arange(len(q[3])) if qi is None else qi
+    nq, nc = len(qi), len(keys)
+    n = max(0, min(n, nc))
+    cos, null = _cosines(q, qi, cents, np.arange(nc))
+    top = _top(np.repeat(np.arange(nq), nc), cos.ravel(), null.ravel(),
+               np.tile(keys, nq), n)
+    return (top % nc).reshape(nq, n)
+
+
+def _placed(spark, hits, schema: T.StructType, k: int, score: str,
+            id_col: str, table=None, cand=None, rank=None,
+            one_part: bool = False) -> DataFrame:
+    """The top-k rows of ``hits(columns)`` — (output columns, ranking
+    index) of a candidate batch's per-ranking top k, in (ranking, rank)
+    order — named by ``schema``, whose ``rank`` column is the 1-based
+    rank. Over the Arrow ``table`` they return as a LocalRelation (with
+    ``one_part`` in one partition, so a count over them needs no
+    exchange). Over the frame ``cand`` the kernel runs in Arrow tasks,
+    a per-ranking row_number window merges their partial top-ks, and a
+    sort restores (ranking, rank) order."""
+    if table is not None:
+        cols, g = hits([c.combine_chunks() for c in table.columns])
+        if rank is not None:
+            cols.append(pa.array(_place(g) + 1, pa.int32()))
+        out = spark.createDataFrame(
+            pa.Table.from_arrays(cols, schema=to_arrow_schema(schema)), schema
+        )
+        return out.coalesce(1) if one_part else out
+    fields = [f for f in schema.fields if f.name != rank]
+    names = [f.name for f in fields]
+
+    def run(batches):
+        for b in batches:
+            cols, g = hits(b.columns)
+            yield pa.RecordBatch.from_arrays(
+                cols + [pa.array(g, pa.int64())], names=names + ["__q"]
+            )
+
+    order = [F.col(score).desc_nulls_last(), F.col(id_col)]
+    w = Window.partitionBy("__q").orderBy(*order)
+    qcol = T.StructField("__q", T.LongType())
+    return (
+        cand.mapInArrow(run, T.StructType(fields + [qcol]))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .orderBy("__q", *order)
+        .select(*names, *([F.col("__rn").alias(rank)] if rank else []))
+    )
+
+
+def _cell_sums(cells, vecs, counts=None):
+    """(distinct cells in key order, per-position sums, per-position
+    counts, widths) of the non-NULL elements of each cell's rows, every
+    sum added in row order from 0.0 as Spark's avg buffer adds. A
+    cell's width is the longest of its non-NULL vectors. With
+    ``counts`` the rows are partial (sums, counts) being merged."""
+    enc = pc.dictionary_encode(cells, null_encoding="encode")
+    uniq = enc.dictionary
+    inv = enc.indices.to_numpy(zero_copy_only=False)
+    vals, offs, lens, _ok = _parts(vecs)
+    lens = np.where(vecs.is_null().to_numpy(zero_copy_only=False), 0, lens)
+    row = np.repeat(np.arange(len(lens)), lens)
+    pos = np.arange(len(row)) - np.repeat(np.cumsum(lens) - lens, lens)
+    src = offs[:-1][row] + pos
+    live = ~vecs.values.is_null().to_numpy(zero_copy_only=False)[src]
+    cell = inv[row]
+    width = np.zeros(len(uniq), dtype=np.int64)
+    np.maximum.at(width, cell, pos + 1)
+    w = int(width.max(initial=0))
+    sums = np.zeros((len(uniq), w))
+    cnt = np.zeros((len(uniq), w), dtype=np.int64)
+    np.add.at(sums, (cell[live], pos[live]), vals[src][live])
+    if counts is None:
+        add = 1
+    else:
+        n, noffs = _parts(counts)[:2]
+        add = n[noffs[:-1][row] + pos][live]
+    np.add.at(cnt, (cell[live], pos[live]), add)
+    order = np.argsort(_keys(uniq), kind="stable")
+    return uniq.take(order), sums[order], cnt[order], width[order]
+
+
+def _lists(mat, width, dtype, mask=None):
+    """A list array of each matrix row's first ``width`` values."""
+    keep = np.arange(mat.shape[1])[None, :] < width[:, None]
+    offs = np.r_[0, np.cumsum(width)].astype(np.int32)
+    flat = pa.array(mat[keep], dtype, mask=None if mask is None else mask[keep])
+    return pa.ListArray.from_arrays(pa.array(offs), flat)
+
+
+def _cell_means(df: DataFrame) -> pa.Table:
+    """(cell, centroid) of a (cell, vector) frame: per (cell, position)
+    the mean of the non-NULL elements present — ``avg`` over
+    ``posexplode`` — NULL where a position has none; a cell whose
+    vectors are all NULL or empty has no row. Under the driver budget
+    one ``toArrow()`` feeds the kernel; above it each Arrow task sums
+    its partition and the driver merges the partial sums."""
+    if _on_driver(df):
+        t = df.toArrow()
+        cols = [t.column(0).combine_chunks(), t.column(1).combine_chunks()]
+        cells, sums, cnt, width = _cell_sums(*cols)
+    else:
+        def partial(batches):
+            for b in batches:
+                c, s, n, wd = _cell_sums(b.column(0), b.column(1))
+                yield pa.RecordBatch.from_arrays(
+                    [c, _lists(s, wd, pa.float64()), _lists(n, wd, pa.int64())],
+                    names=["cell", "s", "n"],
+                )
+
+        part = df.mapInArrow(partial, T.StructType([
+            T.StructField("cell", df.schema[0].dataType),
+            T.StructField("s", T.ArrayType(T.DoubleType())),
+            T.StructField("n", T.ArrayType(T.LongType())),
+        ])).toArrow()
+        cells, sums, cnt, width = _cell_sums(
+            *(part.column(i).combine_chunks() for i in range(3))
+        )
+    keep = width > 0
+    with np.errstate(all="ignore"):
+        means = sums / cnt
+    return pa.table({
+        "cell": cells.filter(pa.array(keep)),
+        "centroid": _lists(means[keep], width[keep], pa.float64(), cnt[keep] == 0),
+    })
 
 
 class PersistedIvfIndex:
@@ -328,21 +538,21 @@ class PersistedIvfIndex:
 
     # -- training -----------------------------------------------------
 
-    def _train_centroids(self, snapshot: DataFrame) -> DataFrame:
-        """(cell, centroid array<double>) from the snapshot. modmean:
-        positional mean per (id % k) seed group — deterministic and
-        SQL-restatable. kmeans: pyspark.ml, seeded (deterministic per
-        layout, not across engines)."""
+    def _train_centroids(self, snapshot: DataFrame) -> tuple:
+        """((cell, centroid) rows, cell type) from the snapshot.
+        modmean: the positional mean per (id % k) seed group, by the
+        kernel's ``_cell_means`` over Spark's own ``%`` (Java sign
+        semantics) — deterministic and SQL-restatable. kmeans:
+        pyspark.ml, seeded (deterministic per layout, not across
+        engines)."""
         if self.trainer == "modmean":
-            from stupp_exclusion_etl_spark.operators.similarity import (
-                mean_centroids,
-            )
-
-            seeded = snapshot.withColumn(
-                "cell",
-                (F.col(self.id_col) % self.k_cells).cast("int"),
-            )
-            return mean_centroids(seeded, "cell", self.vec_col)
+            t = _cell_means(snapshot.select(
+                (F.col(self.id_col) % self.k_cells).cast("int").alias("cell"),
+                self.vec_col,
+            ))
+            rows = zip(t.column("cell").to_pylist(),
+                       t.column("centroid").to_pylist())
+            return list(rows), T.IntegerType()
         from stupp_exclusion_etl_spark.operators.similarity import (
             ivf_kmeans_cells,
         )
@@ -350,7 +560,8 @@ class PersistedIvfIndex:
         _assigned, cents = ivf_kmeans_cells(
             snapshot, k=self.k_cells, vec_col=self.vec_col
         )
-        return cents
+        rows = cents.select("cell", "centroid").collect()
+        return [tuple(r) for r in rows], cents.schema["cell"].dataType
 
     def _centroids(self) -> tuple:
         """(cells ascending, centroid kernel parts, cell dtype
@@ -384,7 +595,8 @@ class PersistedIvfIndex:
             cell_t,
         )
 
-    def _assign(self, vectors: DataFrame, stored: bool = False) -> DataFrame:
+    def _assign(self, vectors: DataFrame, stored: bool = False,
+                book=None) -> DataFrame:
         """Route vectors to their nearest frozen centroid: (id, cell,
         vector, cent_cos) through the kernel, one map-only Arrow pass
         (zero shuffle; the plan carries no centroid literals, so its
@@ -393,7 +605,9 @@ class PersistedIvfIndex:
         or NULL-element vectors keep the lowest cell). With ``stored``
         the rows already carry a ``cell``: it is kept, and cent_cos is
         the cosine against that cell's centroid (NULL for a cell the
-        centroid table lacks)."""
+        centroid table lacks). With a PQ ``book`` the same pass adds
+        each row's ``codes`` (``_pq_codes``) and drops the rows that
+        have none."""
         cells, cents, cell_t = self._centroids()
         cols = [self.id_col] + (["cell"] if stored else []) + [self.vec_col]
         src = vectors.select(*cols)
@@ -402,6 +616,9 @@ class PersistedIvfIndex:
         cell_pa = to_arrow_type(T._parse_datatype_string(cell_t))
         names = [self.id_col, "cell", self.vec_col, "cent_cos"]
         every = np.arange(len(cells))
+        pq_book = None if book is None else np.asarray(book, np.float64)
+        if pq_book is not None:
+            names.append("codes")
 
         def route(batches):
             for b in batches:
@@ -417,20 +634,26 @@ class PersistedIvfIndex:
                     j = _best(cos, null)
                     cell = pa.array(cells[j], type=cell_pa)
                 r = np.arange(n)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        b.column(0),
-                        cell,
-                        emb,
-                        pa.array(cos[r, j], pa.float64(), mask=null[r, j]),
-                    ],
-                    names=names,
+                out = [
+                    b.column(0),
+                    cell,
+                    emb,
+                    pa.array(cos[r, j], pa.float64(), mask=null[r, j]),
+                ]
+                if pq_book is None:
+                    yield pa.RecordBatch.from_arrays(out, names=names)
+                    continue
+                codes, ok = _pq_codes(emb, pq_book)
+                out.append(_lists(codes, np.full(n, codes.shape[1]), pa.int32()))
+                yield pa.RecordBatch.from_arrays(out, names=names).filter(
+                    pa.array(ok)
                 )
 
         return src.mapInArrow(
             route,
             f"{self.id_col} {id_t}, cell {cell_t}, "
-            f"{self.vec_col} {vec_t}, cent_cos double",
+            f"{self.vec_col} {vec_t}, cent_cos double"
+            + ("" if pq_book is None else ", codes array<int>"),
         )
 
     def _train_codebook(self, snapshot: DataFrame) -> list:
@@ -498,18 +721,6 @@ class PersistedIvfIndex:
         for r in got:
             book[r.s][r.c] = [float(x) for x in r.centroid]
         return book
-
-    def _with_codes(self, routed: DataFrame, vectors: DataFrame, book):
-        """Join PQ codes (frozen codebook, map-only encode) onto the
-        routed assignment rows."""
-        from stupp_exclusion_etl_spark.operators.similarity import (
-            pq_encode,
-        )
-
-        codes = pq_encode(
-            vectors, book, id_col=self.id_col, vec_col=self.vec_col
-        )
-        return routed.join(codes, self.id_col)
 
     def _put_meta(self, pairs: dict[str, float], ts: int) -> None:
         # _local_df: see _store_codebook — a zero-probe-job commit
@@ -579,12 +790,13 @@ class PersistedIvfIndex:
         # the commit is a zero-probe LocalRelation write, and the rows
         # seed the per-version centroid memo, so the build's own
         # assignment pass pays no further centroid read (guide §1.2).
-        tr = self._train_centroids(snap).select("cell", "centroid")
-        got = [(r[0], [float(x) for x in r[1]]) for r in tr.collect()]
-        sch = T.StructType(
-            list(tr.schema.fields)
-            + [T.StructField("ts", T.LongType(), False)]
-        )
+        rows, cell_t = self._train_centroids(snap)
+        got = [(c, [float(x) for x in v]) for c, v in rows]
+        sch = T.StructType([
+            T.StructField("cell", cell_t),
+            T.StructField("centroid", T.ArrayType(T.DoubleType())),
+            T.StructField("ts", T.LongType(), False),
+        ])
         # same 2v(+1) recency stamp as the assignment rows below —
         # strict ordering against any same-version earlier build
         cur_cents = self.centroids.read()
@@ -606,7 +818,7 @@ class PersistedIvfIndex:
         self._cache_centroids(
             self.centroids.current_version(),
             got,
-            tr.schema["cell"].dataType.simpleString(),
+            cell_t.simpleString(),
         )
         prev = self.assignments.read()
         # Assignment-row recency stamp: 2·version for build/refresh,
@@ -622,15 +834,13 @@ class PersistedIvfIndex:
         # rebuilds at one version still tie, but the trainers are
         # deterministic per layout, so the tied rows are identical.)
         stamp = 2 * int(head) + (1 if prev is not None else 0)
-        assigned = self._assign(
-            snap.select(self.id_col, self.vec_col)
-        ).withColumn("ts", F.lit(stamp).cast("long"))
+        book = None
         if self.pq is not None:
             book = self._train_codebook(snap)
             self._store_codebook(book, ts=stamp)
-            assigned = self._with_codes(
-                assigned, snap.select(self.id_col, self.vec_col), book
-            )
+        assigned = self._assign(
+            snap.select(self.id_col, self.vec_col), book=book
+        ).withColumn("ts", F.lit(stamp).cast("long"))
         stale = None
         if prev is not None:
             stale = prev.select(self.id_col).join(
@@ -753,15 +963,12 @@ class PersistedIvfIndex:
             # their cosine against the frozen centroid they landed on,
             # keeping the drift metric a single-column scan. The 2v
             # lamport matches build()'s 2v(+1) stamping — see there.
-            routed = self._assign(changed).withColumn(
+            # changed vectors re-encode through the FROZEN codebook
+            # in the same pass — O(churn), like the cell re-route
+            book = None if self.pq is None else self._load_codebook()
+            routed = self._assign(changed, book=book).withColumn(
                 "ts", F.lit(2 * int(head)).cast("long")
             )
-            if self.pq is not None:
-                # changed vectors re-encode through the FROZEN
-                # codebook — O(churn), like the cell re-route
-                routed = self._with_codes(
-                    routed, changed, self._load_codebook()
-                )
             # routing (and PQ encode) is 1:1, so the batch's distinct
             # keys are exactly the changed keys — same probe skip.
             # batch_id = the cursor riding this (final) commit.
@@ -858,18 +1065,12 @@ class PersistedIvfIndex:
         qids = [r[0] for r in rows] if qid_col else None
         return qids, vecs, _parts(pa.array(vecs, pa.list_(pa.float64())))
 
-    def _route(self, q, n: int, qi=None):
+    def _probe(self, q, n: int, qi=None):
         """The first n probe cells of every query (or of the ``qi``
-        subset): the q×k kernel cosines against the memoized centroids
-        ranked by the one order, shaped (queries, n)."""
+        subset), shaped (queries, n): ``_route`` against the memoized
+        centroids."""
         cells, cents, _t = self._centroids()
-        qi = np.arange(len(q[3])) if qi is None else qi
-        nq, nc = len(qi), len(cells)
-        n = max(0, min(n, nc))
-        cos, null = _cosines(q, qi, cents, np.arange(nc))
-        top = _top(np.repeat(np.arange(nq), nc), cos.ravel(), null.ravel(),
-                   np.tile(cells, nq), n)
-        return cells[top % nc].reshape(nq, n)
+        return cells[_route(q, cents, cells, n, qi)]
 
     def _sample(self) -> list:
         """A bounded deterministic (xxhash64-ordered, content-spread)
@@ -895,75 +1096,53 @@ class PersistedIvfIndex:
             raise ValueError("index not built")
         return a if cells else a.limit(0)
 
-    def _serve(self, qids, q, routes, k: int, qid_field=None) -> DataFrame:
+    def _serve(self, qids, q, routes, k: int, qid_field=None,
+               col: str | None = None, pair=_cosines,
+               score: str = "cos_sim") -> DataFrame:
         """Top-k of every query over the candidate rows of its routed
-        cells: (qid, id, cell, cos_sim), or (id, cell, cos_sim) without
-        ``qid_field``. While the probed cells' files fit the sink's
-        byte budget their rows come to the driver (``_driver_read``: a
-        pyarrow scan, or one collect job for a table off the local
-        filesystem) and the kernel scores them there, returned as a
-        LocalRelation frame. Above
-        the budget the kernel runs in Arrow tasks over the pruned
-        FileScan instead, a per-query top-k window merges the tasks'
-        partial top-ks, and a sort restores the driver placement's
-        (query, rank) row order."""
+        cells: (qid, id, cell, score), or (id, cell, score) without
+        ``qid_field``; ``pair`` scores the candidates' ``col`` (default
+        the vector) against the query side ``q``. While the probed
+        cells' files fit the sink's byte budget their rows come to the
+        driver (``_driver_read``: a pyarrow scan, or one collect job for
+        a table off the local filesystem); above it the kernel runs in
+        Arrow tasks over the pruned FileScan (``_placed``)."""
+        cols = [self.id_col, "cell", col or self.vec_col]
         by_cell = {c: np.flatnonzero((routes == c).any(axis=1))
                    for c in np.unique(routes).tolist()}
         cells = sorted(by_cell)
         scan = self.assignments._driver_read([("cell", "in", cells)])
+        cand = None
         if scan is None:
-            cand = self._probed(cells).select(self.id_col, "cell", self.vec_col)
+            cand = self._probed(cells).select(*cols)
         src = cand.schema if scan is None else scan[1]
         fields = [src[self.id_col], src["cell"],
-                  T.StructField("cos_sim", T.DoubleType())]
+                  T.StructField(score, T.DoubleType())]
         qid_pa = None
         if qid_field is not None:
             fields.insert(0, qid_field)
             qid_pa = pa.array(qids, type=to_arrow_type(qid_field.dataType))
-        schema = T.StructType(fields)
 
-        def hits(ids, cell, vec):
-            qi, ri, cos, null = _score(
-                q, by_cell, ids.to_numpy(zero_copy_only=False),
-                cell.to_numpy(zero_copy_only=False), vec, k,
-            )
-            cols = [ids.take(ri), cell.take(ri),
-                    pa.array(cos, pa.float64(), mask=null)]
+        def hits(batch):
+            ids, cell, vec = batch
+            got = cell.to_numpy(zero_copy_only=False)
+            groups = [(np.flatnonzero(got == c), qs) for c, qs in by_cell.items()]
+            qi, ri, val, null = _score(_parts(vec), q, groups, _keys(ids), k, pair)
+            out = [ids.take(ri), cell.take(ri),
+                   pa.array(val, pa.float64(), mask=null)]
             if qid_pa is not None:
-                cols.insert(0, qid_pa.take(qi))
-            return cols, qi
+                out.insert(0, qid_pa.take(qi))
+            return out, qi
 
-        if scan is not None:
-            t = scan[0]
-            cols, _qi = hits(*(t.column(c).combine_chunks()
-                               for c in (self.id_col, "cell", self.vec_col)))
-            out = pa.Table.from_arrays(cols, schema=to_arrow_schema(schema))
-            return self.spark.createDataFrame(out, schema)
-
-        def score(batches):
-            for b in batches:
-                cols, qi = hits(*b.columns)
-                yield pa.RecordBatch.from_arrays(
-                    cols + [pa.array(qi, pa.int64())],
-                    names=schema.names + ["__q"],
-                )
-
-        rank = [F.col("cos_sim").desc_nulls_last(), F.col(self.id_col)]
-        w = Window.partitionBy("__q").orderBy(*rank)
-        qcol = T.StructField("__q", T.LongType())
-        return (
-            cand.mapInArrow(score, T.StructType(schema.fields + [qcol]))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .orderBy("__q", *rank)
-            .select(*schema.names)
+        return _placed(
+            self.spark, hits, T.StructType(fields), k, score, self.id_col,
+            table=None if scan is None else scan[0].select(cols), cand=cand,
         )
 
     def probe_cells(self, query: DataFrame, n_probe: int | None = None):
-        """The query's nearest cells — same contract as
-        operators.similarity.ivf_probe_cells."""
+        """The query's nearest cells, best first."""
         _qids, _vecs, q = self._queries(query, "q")
-        routes = self._route(q, self.n_probe if n_probe is None else n_probe)
+        routes = self._probe(q, self.n_probe if n_probe is None else n_probe)
         return routes[0].tolist() if len(routes) else []
 
     def topk(
@@ -994,7 +1173,7 @@ class PersistedIvfIndex:
                 list(range(len(vecs))), vecs, q, k, n, recall_target,
                 max_n_probe, "persisted_ivf_topk",
             )
-        return self._serve(None, q, self._route(q, n), k)
+        return self._serve(None, q, self._probe(q, n), k)
 
     def _batch_probe_escalation(
         self, qids: list, vecs: list, q, k: int, n: int,
@@ -1025,7 +1204,7 @@ class PersistedIvfIndex:
             range(len(qids)),
             key=lambda i: (zlib.crc32(str(qids[i]).encode()), i),
         )[:_BATCH_SAMPLE_QUERIES]
-        orders = self._route(q, cap, np.asarray(pick, dtype=np.int64))
+        orders = self._probe(q, cap, np.asarray(pick, dtype=np.int64))
         info = _rc.choose_ivf_probe_batch(
             self._sample(),
             [[float(x) for x in vecs[i]] for i in pick],
@@ -1068,7 +1247,7 @@ class PersistedIvfIndex:
                 "persisted_ivf_topk_batch",
             )
         return self._serve(
-            qids, q, self._route(q, n), k, queries.schema[qid_col]
+            qids, q, self._probe(q, n), k, queries.schema[qid_col]
         )
 
     def topk_batch_adc(
@@ -1081,24 +1260,13 @@ class PersistedIvfIndex:
         recall_target: float | None = None,
         max_n_probe: int | None = None,
     ) -> DataFrame:
-        """Batched PQ-ADC serving: same kernel routing as
-        ``topk_batch``, but the candidate scan reads ONLY (id, cell,
-        codes) — m small ints per vector, never the raw embeddings —
-        and scores each (query, candidate) pair asymmetrically
-        against the frozen codebook, embedded as per-subspace centroid
-        literals. The accumulation order (0-seeded left-to-right
-        per-subspace dot, subspace terms added left to right, round 6)
-        is bit-identical to ``topk_adc``'s driver-side LUT — the LUT
-        contraction simply happens row-wise against the query column
-        instead of folding to literals; tests pin per-query equality."""
+        """Batched PQ-ADC serving: (qid, id, adc_score), k rows per
+        query — ``topk_batch``'s routing, but candidates score by ADC
+        (``_luts``, ``_adc``) from their codes, never the embeddings:
+        per query exactly ``topk_adc``'s rows."""
         if self.pq is None:
             raise ValueError("index built without pq=(m, k)")
-        from stupp_exclusion_etl_spark.operators.similarity import _dlit
-
-        book = self._load_codebook()
-        m = len(book)
-        kc = len(book[0])
-        d = len(book[0][0])
+        book = np.asarray(self._load_codebook(), np.float64)
         qids, vecs, q = self._queries(queries, qvec_col, qid_col)
         n = self.n_probe if n_probe is None else n_probe
         if recall_target is not None:
@@ -1108,47 +1276,11 @@ class PersistedIvfIndex:
                 qids, vecs, q, k, n, recall_target, max_n_probe,
                 "persisted_ivf_topk_batch_adc",
             )
-        # the (query, cell) routes as a LocalRelation literal: the
-        # broadcast builds driver-side (see _local_df)
-        routed = [
-            (qids[i], c, vecs[i])
-            for i, row in enumerate(self._route(q, n))
-            for c in row.tolist()
-        ]
-        cell_t = T._parse_datatype_string(self._centroids()[2])
-        routes = _local_df(self.spark, routed, T.StructType([
-            queries.schema[qid_col], T.StructField("cell", cell_t),
-            queries.schema[qvec_col],
-        ]))
-        cand = self._probed(sorted({c for _q, c, _v in routed})).select(
-            self.id_col, "cell", "codes"
+        out = self._serve(
+            qids, _luts(q, book), self._probe(q, n), k,
+            queries.schema[qid_col], "codes", _adc, "adc_score",
         )
-        joined = cand.join(F.broadcast(routes), "cell")
-        terms = []
-        for s in range(m):
-            cents_lit = "array(" + ", ".join(
-                "array(" + ", ".join(_dlit(x) for x in book[s][c]) + ")"
-                for c in range(kc)
-            ) + ")"
-            sub = f"slice({qvec_col}, {s * d + 1}, {d})"
-            terms.append(
-                f"aggregate(zip_with({sub}, "
-                f"element_at({cents_lit}, codes[{s}] + 1), "
-                f"(a, b) -> CAST(a AS DOUBLE) * b), "
-                f"0.0D, (acc, x) -> acc + x)"
-            )
-        score = " + ".join(terms)
-        out = joined.selectExpr(
-            qid_col, self.id_col, f"round({score}, 6) AS adc_score"
-        )
-        ws = Window.partitionBy(qid_col).orderBy(
-            F.col("adc_score").desc(), F.col(self.id_col).asc()
-        )
-        return (
-            out.withColumn("__rn", F.row_number().over(ws))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
+        return out.select(qid_col, self.id_col, "adc_score")
 
     def topk_adc(
         self,
@@ -1156,25 +1288,16 @@ class PersistedIvfIndex:
         k: int = 10,
         n_probe: int | None = None,
     ) -> DataFrame:
-        """PQ-ADC serving from the persisted codes: probe cells, then
-        asymmetric-distance top-k over ONLY the probed cells'
-        (id, codes) rows — the billion-vector layout (IVF routes, PQ
-        codes score): the candidate scan reads m small ints per
-        vector, never the raw embeddings."""
+        """PQ-ADC serving from the persisted codes: (id, adc_score) —
+        the query (as array<float>) probes its cells, whose (id, codes)
+        rows rank by ADC against the LUT of the query as given."""
         if self.pq is None:
             raise ValueError("index built without pq=(m, k)")
-        from stupp_exclusion_etl_spark.operators.similarity import (
-            pq_adc_topk,
-        )
-
-        # LocalRelation literal (zero-job probe collect — see _local_df)
-        q = _local_df(
-            self.spark,
-            [([float(x) for x in query_vec],)], "q array<float>",
-        )
-        cells = self.probe_cells(q, n_probe)
-        cand = self._probed(cells).select(self.id_col, "codes")
-        return pq_adc_topk(
-            cand, self._load_codebook(), [float(x) for x in query_vec],
-            k=k, id_col=self.id_col,
-        )
+        qv = [float(x) for x in query_vec]
+        routed = _parts(pa.array([qv], pa.list_(pa.float32())))
+        lut = _luts(_parts(pa.array([qv], pa.list_(pa.float64()))),
+                    np.asarray(self._load_codebook(), np.float64))
+        n = self.n_probe if n_probe is None else n_probe
+        out = self._serve(None, lut, self._probe(routed, n), k,
+                          col="codes", pair=_adc, score="adc_score")
+        return out.select(self.id_col, "adc_score")

@@ -132,3 +132,20 @@ def cached_estimate(tag: str, dfs: tuple, compute):
             _ESTIMATE_CACHE.clear()
         _ESTIMATE_CACHE[key] = compute()
     return _ESTIMATE_CACHE[key]
+
+
+#: Driver placement of the Arrow kernels (near-dedup in operators.dedup,
+#: similarity in operators.similarity): while the input plan's optimized
+#: ``stats().sizeInBytes`` is at most this, one ``toArrow()`` collect
+#: feeds the kernel on the driver and the result is a LocalRelation;
+#: above it the kernel runs in ``mapInArrow`` tasks. On
+#: 4 local cores the two placements of pipeline_near_dedup break even
+#: near a 2.5 MB estimate (about 11 MB of text; CHANGES.md).
+_DRIVER_DEDUP_BYTES = 2 << 20
+
+
+def _on_driver(df: DataFrame) -> bool:
+    """Whether ``df``'s optimized-plan size estimate fits
+    ``_DRIVER_DEDUP_BYTES`` (plan statistics only, no job)."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(str(size)) <= _DRIVER_DEDUP_BYTES

@@ -43,6 +43,7 @@ from pyspark.sql import Window as W
 
 from stupp_exclusion_etl_spark.functions.hashing import MINHASH_P, minhash_params
 from stupp_exclusion_etl_spark.functions.text import shingles, tokens
+from stupp_exclusion_etl_spark.operators.budget import _on_driver
 
 # Arrow tasks run this module's kernel: pickle it by value, so an
 # executor needs no import path to the package (as operators.ann_index).
@@ -81,14 +82,6 @@ def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> Dat
 
 
 # -- the near-dedup kernel ----------------------------------------------------
-
-#: Driver placement of the near-dedup kernel: while the input plan's
-#: optimized ``stats().sizeInBytes`` is at most this, one ``toArrow()``
-#: collect feeds the kernel on the driver and the result is a
-#: LocalRelation; above it the kernel runs in ``mapInArrow`` tasks. On
-#: 4 local cores the two placements of pipeline_near_dedup break even
-#: near a 2.5 MB estimate (about 11 MB of text; CHANGES.md).
-_DRIVER_DEDUP_BYTES = 2 << 20
 
 #: Java's ``\s`` — what Spark's split(text, '\\s+') cuts on. Python's
 #: str.split() also cuts on \x1c-\x1f, \x85, \xa0 and \u2028, which
@@ -231,13 +224,6 @@ def _stage_schema(stage: str, id_t: T.DataType, n_hashes: int) -> T.StructType:
         T.StructField(c, id_t if c in ("id", "id1", "id2", "group_id") else T.LongType())
         for c in cols
     ])
-
-
-def _on_driver(df: DataFrame) -> bool:
-    """Whether ``df``'s optimized-plan size estimate fits
-    ``_DRIVER_DEDUP_BYTES`` (plan statistics only, no job)."""
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return int(str(size)) <= _DRIVER_DEDUP_BYTES
 
 
 def _pooled(batches) -> list[pa.Array] | None:

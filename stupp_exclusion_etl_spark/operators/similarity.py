@@ -1,54 +1,142 @@
 """Similarity search over embedding columns (SURVEY.md §2 B13).
 
-- `brute_force_topk`: exact cosine top-K — broadcast the query vector,
-  score every row JVM-side, TakeOrderedAndProject for the top-K (no
-  global sort). The correctness baseline.
-- `lsh_assign_buckets` + `ann_topk_lsh`: random-hyperplane LSH — the
-  scale path. Hyperplane components are derived deterministically from
-  md5 so bucket assignment is reproducible across engines and runs.
-- `ivf_topk`: IVF-style two-stage search against a provided centroid
-  table: route each query to its `n_probe` nearest centroids, then
-  score only vectors in those cells — at 100 TB this turns a full scan
-  into a partition-pruned read when vectors are written partitioned by
-  cell id.
+Every operator here scores through the one numpy kernel of
+operators.ann_index (``_score``): cosine and inner product summed left
+to right from 0.0 like functions.vectors.dot/cosine, ADC from per-query
+LUTs, Spark's round(x, 6), and a top-k ordered by score DESC NULLS LAST
+(NaN first) then id. The operators differ only in which candidate rows
+each query is routed to:
+
+- ``brute_force_topk`` / ``mips_topk``: every row, by cosine / inner
+  product — the correctness baselines;
+- ``ann_topk_lsh``: the rows in the query's random-hyperplane LSH
+  buckets and their Hamming neighbours. Hyperplane components derive
+  from md5 (``hyperplane``, ``recall.planes_matrix``), so buckets are
+  reproducible across engines and runs;
+- ``ivf_topk``: the rows of the query's n_probe nearest cells of a
+  centroid table (``mean_centroids``, ``ivf_kmeans_cells``);
+- ``knn_join``: every row for every query, or under its cost budget the
+  query's probed LSH buckets across tables;
+- ``pq_adc_topk``: every PQ code row (``pq_encode_arrow``), by ADC.
+
+Placement is operators.budget's rule: while the input plan's size
+estimate fits ``_DRIVER_DEDUP_BYTES`` the candidate and query rows come
+to the driver in one ``toArrow()`` and the top-k returns as a
+one-partition LocalRelation; above it the kernel runs in Arrow tasks
+whose partial top-ks a per-query window merges (ann_index._placed).
 """
 
 from __future__ import annotations
 
+import sys
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from stupp_exclusion_etl_spark.functions.vectors import cosine, dot, norm2
+from stupp_exclusion_etl_spark.functions.vectors import dot
+from stupp_exclusion_etl_spark.operators.ann_index import (
+    _adc,
+    _cell_means,
+    _cosines,
+    _dots,
+    _ips,
+    _keys,
+    _lists,
+    _luts,
+    _parts,
+    _placed,
+    _pq_codes,
+    _route,
+    _rows,
+    _score,
+)
+from stupp_exclusion_etl_spark.operators.budget import (
+    CostBudgetExceeded,
+    _on_driver,
+    cached_estimate,
+)
+from stupp_exclusion_etl_spark.operators.recall import planes_matrix
+
+# Arrow tasks run closures of this module: pickle it by value, as
+# operators.ann_index and operators.dedup.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
-def _with_qnorm(query: DataFrame, query_vec_col: str) -> DataFrame:
-    """Precompute the query vector's norm on the (tiny) broadcast side —
-    saves one 64-element aggregate per scored row versus recomputing it
-    inside cosine()."""
-    return query.withColumn("__qn", norm2(F.col(query_vec_col)))
+def _topk(vectors: DataFrame, vcols: list, query, qcols: list, k: int,
+          score: str, routes, pair=_cosines, side=None, skip=None,
+          rank: str | None = None) -> DataFrame:
+    """The operators' one shape: top-k ``score`` rows of the candidates
+    ``vcols`` (id first, vector or codes last) for the query rows
+    ``qcols`` (vector last; with a query id first, each query ranks
+    alone and its id is emitted, else all share one ranking).
+    ``routes(q, nq)`` maps the query parts to ``groups(columns,
+    parts)``, the (rows, query indices) routes of a candidate batch;
+    ``pair`` scores them against the query parts, or against ``side``
+    without a ``query`` frame; ``skip(qids)`` gives the pairs to drop.
+    Under the driver budget one ``toArrow()`` of both sides' union
+    feeds the kernel; above it only the query rows are read and the
+    candidates are scored in Arrow tasks (``_placed``)."""
+    v = vectors.select(*vcols)
+    q = None if query is None else query.select(*qcols)
+    both = v
+    if q is not None:
+        def pad(df, tag):
+            return [F.lit(None).cast(f.dataType).alias(f"__{tag}{i}")
+                    for i, f in enumerate(df.schema.fields)]
 
+        both = v.select(F.lit(0).alias("__side"), "*", *pad(q, "q")).union(
+            q.select(F.lit(1), *pad(v, "v"), "*")
+        )
+    table, qt = None, None
+    if _on_driver(both):
+        table = both.toArrow()
+        if q is not None:
+            tag, n = table.column(0), len(vcols) + 1
+            qt = table.filter(pc.equal(tag, 1)).select(
+                list(range(n, table.num_columns)))
+            table = table.filter(pc.equal(tag, 0)).select(list(range(1, n)))
+    elif q is not None:
+        qt = q.toArrow()
+    qids, nq = None, 1
+    if qt is not None:
+        side = _parts(qt.column(len(qcols) - 1).combine_chunks())
+        nq = len(side[3])
+        if len(qcols) == 2:
+            qids = qt.column(0).combine_chunks()
+    group = None if qids is not None else np.zeros(nq, dtype=np.int64)
+    groups = routes(side, nq)
+    drop = None if skip is None else skip(qids)
 
-def _cos_with_qnorm(vec: Column, qvec: Column) -> Column:
-    # try_divide: a zero data vector must score NULL (rank last), not
-    # throw ANSI DIVIDE_BY_ZERO — same contract as functions.vectors.cosine.
-    return F.try_divide(dot(vec, qvec), norm2(vec) * F.col("__qn"))
+    def hits(cols):
+        ids, c = cols[0], _parts(cols[-1])
+        excl = None if drop is None else lambda r, qs: drop(ids, r, qs)
+        qi, ri, val, null = _score(c, side, groups(cols, c), _keys(ids), k,
+                                   pair, excl, group)
+        out = [ids.take(ri), pa.array(val, pa.float64(), mask=null)]
+        if qids is None:
+            return out, np.zeros(len(qi), dtype=np.int64)
+        return [qids.take(qi)] + out, qi
 
-
-def _broadcast_score_topk(
-    vectors: DataFrame,
-    query: DataFrame,
-    score: Column,
-    score_name: str,
-    k: int,
-    id_col: str,
-) -> DataFrame:
-    """Shared exact-serving shape for every brute-force ranking: query
-    broadcast against the full scan, round-6 score, top-K with id
-    tie-break (TakeOrderedAndProject — no global sort)."""
-    scored = vectors.crossJoin(F.broadcast(query)).select(
-        F.col(id_col), F.round(score, 6).alias(score_name)
+    fields = [v.schema[0], T.StructField(score, T.DoubleType())]
+    if qids is not None:
+        fields.insert(0, q.schema[0])
+    if rank is not None:
+        fields.append(T.StructField(rank, T.IntegerType()))
+    return _placed(
+        vectors.sparkSession, hits, T.StructType(fields), k, score,
+        v.columns[0], table=table, cand=None if table is not None else v,
+        rank=rank, one_part=True,
     )
-    return scored.orderBy(F.col(score_name).desc(), F.col(id_col)).limit(k)
+
+
+def _everything(q, nq: int):
+    """Routes every candidate row to every query."""
+    return lambda cols, c: [(np.arange(len(c[3])), np.arange(nq))]
 
 
 def brute_force_topk(
@@ -59,15 +147,10 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_vec_col: str = "q",
 ) -> DataFrame:
-    """Exact top-K by cosine: (id, cos_sim), ties broken by id."""
-    return _broadcast_score_topk(
-        vectors,
-        _with_qnorm(query, query_vec_col),
-        _cos_with_qnorm(F.col(vec_col), F.col(query_vec_col)),
-        "cos_sim",
-        k,
-        id_col,
-    )
+    """Exact top-K by cosine: (id, cos_sim), ties broken by id; a zero,
+    NULL, ragged or NULL-element vector scores NULL and ranks last."""
+    return _topk(vectors, [id_col, vec_col], query, [query_vec_col], k,
+                 "cos_sim", _everything)
 
 
 def mips_topk(
@@ -81,32 +164,19 @@ def mips_topk(
     """Exact top-K by inner product (un-normalized MIPS — the
     recommendation-retrieval ranking, and exactly what PQ's ADC
     approximates from codes): (id, ip), ties broken by id."""
-    return _broadcast_score_topk(
-        vectors,
-        query,
-        dot(F.col(vec_col), F.col(query_vec_col)),
-        "ip",
-        k,
-        id_col,
-    )
+    return _topk(vectors, [id_col, vec_col], query, [query_vec_col], k,
+                 "ip", _everything, _ips)
 
 
 def hyperplane(dim: int, plane_idx: int) -> Column:
-    """Deterministic pseudo-random hyperplane: component d is the first
-    8 md5 hex chars of "plane:{i}:{d}" mapped to [-0.5, 0.5).
-    Components are computed driver-side (hashlib) and emitted as plain
-    double literals — relying on Catalyst to constant-fold dim×planes
-    md5/conv expression trees was measured NOT happening inside the
-    zip_with lambda, i.e. 256 md5s per scored row."""
-    import hashlib
-
-    comps = [
-        int(hashlib.md5(f"plane:{plane_idx}:{d}".encode()).hexdigest()[:8], 16)
-        / float(2**32)
-        - 0.5
-        for d in range(dim)
-    ]
-    return F.array(*[F.lit(c) for c in comps])
+    """Deterministic pseudo-random hyperplane (a ``planes_matrix``
+    row): component d is the first 8 md5 hex chars of "plane:{i}:{d}"
+    mapped to [-0.5, 0.5), emitted as plain double literals — relying
+    on Catalyst to constant-fold dim×planes md5/conv expression trees
+    was measured NOT happening inside the zip_with lambda, i.e. 256
+    md5s per scored row."""
+    comps = planes_matrix(dim, 1, offset=plane_idx)[0]
+    return F.array(*[F.lit(float(c)) for c in comps])
 
 
 def lsh_assign_buckets(
@@ -128,6 +198,50 @@ def lsh_assign_buckets(
     return vectors.withColumn("lsh_bucket", bucket)
 
 
+def _buckets(c, planes) -> np.ndarray:
+    """Sign-of-projection LSH bucket of each row of the parts ``c``:
+    bit p is set when the row's dot with plane p — the kernel's left
+    to right sum, as ``lsh_assign_buckets`` computes it — is > 0. A
+    NULL, ragged or NULL-element row lands in bucket 0, as Spark's
+    ``when(NULL > 0)`` does."""
+    m, ok = _rows(c, np.arange(len(c[3])), planes.shape[1])
+    with np.errstate(all="ignore"):
+        bits = (_dots(m, planes) > 0) & ok[:, None]
+    return bits @ (1 << np.arange(len(planes), dtype=np.int64))
+
+
+def _probes(buckets, n_planes: int, radius: int) -> np.ndarray:
+    """Each bucket's probe list: itself, then its XOR neighbours at
+    Hamming radius 1 and 2 (as far as ``radius``)."""
+    masks = [0]
+    if radius >= 1:
+        masks += [1 << p for p in range(n_planes)]
+    if radius >= 2:
+        masks += [(1 << p) | (1 << r) for p in range(n_planes)
+                  for r in range(p + 1, n_planes)]
+    return buckets[:, None] ^ np.asarray(masks, dtype=np.int64)
+
+
+def _lsh(planes: list, radius: int):
+    """Routes of each query to the rows in its probed buckets of every
+    table (``planes`` per table), each (query, row) pair once."""
+    def routes(q, nq):
+        probes = [_probes(_buckets(q, pl), len(pl), radius) for pl in planes]
+
+        def groups(cols, c):
+            got = [_buckets(c, pl) for pl in planes]
+            return [
+                (np.flatnonzero(np.any(
+                    [np.isin(b, p[i]) for b, p in zip(got, probes)], axis=0
+                )), np.array([i]))
+                for i in range(nq)
+            ]
+
+        return groups
+
+    return routes
+
+
 def ann_topk_lsh(
     vectors: DataFrame,
     query: DataFrame,
@@ -139,37 +253,14 @@ def ann_topk_lsh(
     vec_col: str = "embedding",
     query_vec_col: str = "q",
 ) -> DataFrame:
-    """Approximate top-K: score only vectors in the query's LSH bucket.
-    Recall is tunable two ways: fewer planes → bigger buckets, and
-    ``multi_probe`` = Hamming radius of extra buckets probed (radius 1
-    adds the n_planes single-bit-flip neighbors — near-misses where the
-    query sat close to one hyperplane). The probe list stays tiny and
-    broadcast; the big side is only ever equi-joined on its bucket id,
-    so a bucket-partitioned table serves this with partition pruning."""
-    vb = lsh_assign_buckets(vectors, vec_col, dim, n_planes)
-    qb = lsh_assign_buckets(
-        query.withColumnRenamed(query_vec_col, "__qv"), "__qv", dim, n_planes
-    )
-    probes = [F.col("lsh_bucket")]
-    if multi_probe >= 1:
-        probes += [F.col("lsh_bucket").bitwiseXOR(1 << p) for p in range(n_planes)]
-    if multi_probe >= 2:
-        probes += [
-            F.col("lsh_bucket").bitwiseXOR((1 << p) | (1 << r))
-            for p in range(n_planes)
-            for r in range(p + 1, n_planes)
-        ]
-    qprobes = _with_qnorm(qb, "__qv").select(
-        F.col("__qv"), F.col("__qn"), F.explode(F.array(*probes)).alias("__qbucket")
-    )
-    cand = vb.join(
-        F.broadcast(qprobes), F.col("lsh_bucket") == F.col("__qbucket"), "inner"
-    )
-    scored = cand.select(
-        F.col(id_col),
-        F.round(_cos_with_qnorm(F.col(vec_col), F.col("__qv")), 6).alias("cos_sim"),
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
+    """Approximate top-K by cosine: score only vectors in the query's
+    LSH bucket. Recall is tunable two ways: fewer planes → bigger
+    buckets, and ``multi_probe`` = Hamming radius (up to 2) of extra
+    buckets probed (radius 1 adds the n_planes single-bit-flip
+    neighbours — near-misses where the query sat close to one
+    hyperplane)."""
+    return _topk(vectors, [id_col, vec_col], query, [query_vec_col], k,
+                 "cos_sim", _lsh([planes_matrix(dim, n_planes)], multi_probe))
 
 
 def ivf_topk(
@@ -184,30 +275,39 @@ def ivf_topk(
     centroid_vec_col: str = "centroid",
     query_vec_col: str = "q",
 ) -> DataFrame:
-    """IVF two-stage ANN: pick the query's n_probe nearest centroids,
-    then exact-score only vectors assigned to those cells. `vectors`
-    must carry its cell assignment (write-time k-means or any
-    partitioner); the cell filter prunes partitions on a cell-
-    partitioned table."""
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(query))
-        .select(
-            F.col(cell_col),
-            cosine(F.col(centroid_vec_col), F.col(query_vec_col)).alias("__c"),
-        )
-        .orderBy(F.col("__c").desc(), F.col(cell_col))
-        .limit(n_probe)
-        .select(cell_col)
-    )
-    cand = vectors.join(F.broadcast(probe_cells), cell_col)
-    return _broadcast_score_topk(
-        cand,
-        _with_qnorm(query, query_vec_col),
-        _cos_with_qnorm(F.col(vec_col), F.col(query_vec_col)),
-        "cos_sim",
-        k,
-        id_col,
-    )
+    """IVF two-stage ANN: route the query to its n_probe nearest
+    centroids (``_route`` over the collected centroid rows), then
+    exact-score only vectors assigned to those cells. `vectors` must
+    carry its cell assignment (write-time k-means or any partitioner);
+    the candidate frame is filtered on the probed cells, so a
+    cell-partitioned table is read pruned, and a NULL cell matches no
+    probe, as in an equi-join."""
+    ct = centroids.select(cell_col, centroid_vec_col).toArrow()
+    cells = ct.column(0).combine_chunks()
+    qt = query.select(query_vec_col).toArrow()
+    probed = [cells.take(r).drop_null() for r in _route(
+        _parts(qt.column(0).combine_chunks()),
+        _parts(ct.column(1).combine_chunks()), _keys(cells), n_probe,
+    )]
+    near = sorted({c for p in probed for c in p.to_pylist()})
+
+    def routes(q, nq):
+        def groups(cols, c):
+            cell = cols[1]
+            return [
+                (np.flatnonzero(pc.is_in(
+                    cell, value_set=p.cast(cell.type)
+                ).fill_null(False).to_numpy(zero_copy_only=False)),
+                 np.array([i]))
+                for i, p in enumerate(probed)
+            ]
+
+        return groups
+
+    return _topk(vectors.filter(F.col(cell_col).isin(near)),
+                 [id_col, cell_col, vec_col],
+                 vectors.sparkSession.createDataFrame(qt), [query_vec_col], k,
+                 "cos_sim", routes)
 
 
 def knn_join(
@@ -218,7 +318,6 @@ def knn_join(
     vec_col: str = "embedding",
     q_id_col: str = "q_id",
     q_vec_col: str = "q",
-    n_salts: int = 8,
     exclude_self: bool = False,
     max_comparisons: int | None = None,
     on_exceed: str = "raise",
@@ -227,54 +326,30 @@ def knn_join(
     budget_escalation: float | None = None,
 ) -> DataFrame:
     """Batch k-NN join: every query row gets its k nearest vectors by
-    cosine — the retrieval-eval / hard-negative-mining shape (millions
-    of vectors × a bounded query batch). Queries broadcast, so scoring
-    is map-side; top-k per query is two-stage so the big scored stream
-    never funnels into one reducer per query: stage 1 ranks within
-    (query, salt) — one shuffle on perfectly uniform keys
-    (salt = xxhash64(id) mod n_salts) — keeping n_salts*k candidates
-    per query; stage 2 ranks that tiny remainder per query. Scores are
-    rounded BEFORE ranking so tie-break order (cos_sim desc, id) is
-    engine-portable.
+    cosine, as (q_id, id, cos_sim, rnk) — the retrieval-eval /
+    hard-negative-mining shape (millions of vectors × a bounded query
+    batch). Each query ranks alone; ``exclude_self`` drops the pairs
+    whose ids are equal (or NULL) before ranking.
 
     ``max_comparisons`` is the cost fence for the query-batch-grows-
-    with-n trap (work = n_queries × n_corpus — measured 54×
-    wall-clock at 10× data, BENCH_SCALE_r06): two column-pruned
+    with-n trap (work = n_queries × n_corpus): two column-pruned
     counts estimate the scored-pair count up front, and above the
     budget the operator either raises ``CostBudgetExceeded``
-    (``on_exceed="raise"``) or re-routes (``on_exceed="lsh"``): both
-    sides get deterministic sign-of-projection LSH buckets with the
-    smallest plane count whose expected candidate work
-    est·(1+p)/2^p fits the budget, queries multi-probe their
-    single-bit-flip neighbor buckets, and the same salted two-stage
-    top-k ranks the candidates — identical output shape, approximate
-    neighbors (the standard ANN recall trade; a vector matches a
-    query at most once because the probed buckets are distinct).
-    Below the budget the plan is byte-identical to the unguarded
-    one.
-
-    Every reroute now ESTIMATES its recall on a bounded deterministic
+    (``on_exceed="raise"``) or re-routes (``on_exceed="lsh"``): a
+    query's candidates become the rows in its probed sign-of-projection
+    LSH buckets, across tables each row once — identical output shape,
+    approximate neighbors. Below the budget the result is the unguarded
+    one. Every reroute ESTIMATES its recall on a bounded deterministic
     sample (operators.recall) and surfaces it via warnings +
-    recall.last_reroute_info("knn_join") — low-locality data can no
-    longer silently return near-empty answers. ``recall_target``
-    additionally escalates within the same budget: wider multi-probe
-    radii and OR-amplified independent hash tables (T tables of p
-    planes each; work est·T·probes/2^p stays under budget, recall
-    1-(1-s^p)^T grows), choosing the cheapest config whose estimated
-    recall clears the target, else the best feasible.
-    ``budget_escalation`` (opt-in, only meaningful with
-    ``recall_target``): when no in-budget config's estimated recall
-    clears the target, permit configs spending up to N×
-    max_comparisons — decided by the same sample estimate, actual
-    multiple reported as ``budget_multiplier``."""
-    from pyspark.sql.window import Window
-
-    qn = _with_qnorm(queries, q_vec_col)
+    recall.last_reroute_info("knn_join"). ``recall_target`` escalates
+    within the same budget (wider multi-probe radii, OR-amplified
+    independent hash tables), choosing the cheapest config whose
+    estimated recall clears the target, else the best feasible;
+    ``budget_escalation`` (opt-in, with ``recall_target``) permits
+    configs spending up to N× max_comparisons when none in budget
+    clears it, reported as ``budget_multiplier``."""
+    planes, radius = [], 0
     if max_comparisons is not None:
-        from stupp_exclusion_etl_spark.operators.budget import (
-            cached_estimate,
-        )
-
         # memoized per (plan, input files) fingerprint — same estimate
         # cache as embedding_neardup_pairs (VERDICT r7 wrong #1)
         est = cached_estimate(
@@ -284,10 +359,6 @@ def knn_join(
         )
         if est > max_comparisons:
             if on_exceed != "lsh":
-                from stupp_exclusion_etl_spark.operators.budget import (
-                    CostBudgetExceeded,
-                )
-
                 raise CostBudgetExceeded(
                     f"knn_join: estimated comparison count {est:,} "
                     f"(n_vectors × n_queries) exceeds "
@@ -320,137 +391,43 @@ def knn_join(
                 recall_target,
             )
             n_planes, radius = cfg["n_planes"], cfg["radius"]
-            n_tables = cfg["n_tables"]
-            cands = []
-            for t in range(n_tables):
-                vb = lsh_assign_buckets(
-                    vectors, vec_col, dim, n_planes,
-                    plane_offset=t * n_planes,
-                )
-                qb = lsh_assign_buckets(
-                    qn, q_vec_col, dim, n_planes,
-                    plane_offset=t * n_planes,
-                )
-                probes = [F.col("lsh_bucket")]
-                if radius >= 1:
-                    probes += [
-                        F.col("lsh_bucket").bitwiseXOR(1 << p)
-                        for p in range(n_planes)
-                    ]
-                if radius >= 2:
-                    probes += [
-                        F.col("lsh_bucket").bitwiseXOR((1 << p) | (1 << r2))
-                        for p in range(n_planes)
-                        for r2 in range(p + 1, n_planes)
-                    ]
-                qprobes = qb.select(
-                    F.col(q_id_col), F.col(q_vec_col), F.col("__qn"),
-                    F.explode(F.array(*probes)).alias("__qbucket"),
-                )
-                cands.append(
-                    vb.join(
-                        F.broadcast(qprobes),
-                        F.col("lsh_bucket") == F.col("__qbucket"),
-                        "inner",
-                    )
-                )
-            pairs = cands[0]
-            for extra in cands[1:]:
-                pairs = pairs.unionByName(extra)
-            if n_tables > 1:
-                # a (query, vector) pair can collide in several tables;
-                # within one table the probed buckets are distinct
-                pairs = pairs.dropDuplicates([q_id_col, id_col])
-            return _knn_rank(pairs, k, id_col, vec_col, q_id_col, q_vec_col,
-                             n_salts, exclude_self)
-    pairs = vectors.crossJoin(F.broadcast(qn))
-    return _knn_rank(pairs, k, id_col, vec_col, q_id_col, q_vec_col,
-                     n_salts, exclude_self)
+            planes = [planes_matrix(dim, n_planes, offset=t * n_planes)
+                      for t in range(cfg["n_tables"])]
 
+    def skip(qids):
+        """Pairs whose ids are equal or NULL: Spark's ``id != q_id``
+        filter is not true for them."""
+        qv = np.asarray(qids.to_pylist(), dtype=object)
 
-def _knn_rank(
-    pairs: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    q_id_col: str,
-    q_vec_col: str,
-    n_salts: int,
-    exclude_self: bool,
-) -> DataFrame:
-    """knn_join's shared ranking tail: score candidate (vector, query)
-    rows and keep each query's top-k via the salted two-stage
-    row_number (see knn_join docstring for why two stages)."""
-    from pyspark.sql.window import Window
+        def drop(ids, r, qs):
+            iv = np.asarray(ids.take(r).to_pylist(), dtype=object)
+            a, b = iv[:, None], qv[None, qs]
+            return (a == b) | (a == None) | (b == None)  # noqa: E711
 
-    if exclude_self:  # drop self-matches BEFORE ranking (cos=1.0 rank-1 noise)
-        pairs = pairs.filter(F.col(id_col) != F.col(q_id_col))
-    scored = pairs.select(
-        F.col(q_id_col),
-        F.col(id_col),
-        F.round(_cos_with_qnorm(F.col(vec_col), F.col(q_vec_col)), 6).alias("cos_sim"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)).alias("__salt"),
-    )
-    w1 = Window.partitionBy(q_id_col, "__salt").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    local = scored.withColumn("__r", F.row_number().over(w1)).filter(F.col("__r") <= k)
-    w2 = Window.partitionBy(q_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        local.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "cos_sim", "rnk")
-    )
+        return drop
+
+    return _topk(vectors, [id_col, vec_col], queries, [q_id_col, q_vec_col],
+                 k, "cos_sim", _lsh(planes, radius) if planes else _everything,
+                 skip=skip if exclude_self else None, rank="rnk")
 
 
 def mean_centroids(
     vectors: DataFrame, cell_col: str = "cell", vec_col: str = "embedding"
 ) -> DataFrame:
     """Per-cell positional-mean centroid table (cell, centroid) — the
-    IVF coarse quantizer for any existing cell assignment. One
-    explode + two aggregates, all JVM-side."""
-    exploded = vectors.select(
-        F.col(cell_col).alias("cell"), F.posexplode(vec_col).alias("pos", "x")
-    )
-    return (
-        exploded.groupBy("cell", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("m"))
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s.m
-            ).alias("centroid")
-        )
-    )
-
-
-def ivf_probe_cells(
-    centroids: DataFrame,
-    query: DataFrame,
-    n_probe: int = 2,
-    cell_col: str = "cell",
-    centroid_vec_col: str = "centroid",
-    query_vec_col: str = "q",
-) -> list:
-    """Stage 1 of the IVF serving path: the query's n_probe nearest
-    cell ids, collected driver-side. The collect is metadata-scale
-    (n_probe rows of one id each — like listing partitions, never
-    data); stage 2 pushes the ids as a LITERAL IN filter on a
-    cell-partitioned table, so the scan statically prunes to the probed
-    partitions — the .inputFiles()/PartitionFilters-verified 100 TB
-    claim (tests/test_similarity.py). ivf_topk's join form is the
-    single-job alternative when dynamic partition pruning is available."""
-    rows = (
-        centroids.crossJoin(F.broadcast(query))
-        .select(
-            F.col(cell_col),
-            cosine(F.col(centroid_vec_col), F.col(query_vec_col)).alias("__c"),
-        )
-        .orderBy(F.col("__c").desc(), F.col(cell_col))
-        .limit(n_probe)
-        .collect()
-    )
-    return [r[0] for r in rows]
+    IVF coarse quantizer for any existing cell assignment: per (cell,
+    position) the mean of the non-NULL elements present, as ``avg``
+    over ``posexplode``, by the kernel (ann_index._cell_means). A NULL
+    cell is a cell of its own, as in a GROUP BY."""
+    src = vectors.select(F.col(cell_col).alias("cell"), vec_col)
+    schema = T.StructType([
+        src.schema["cell"],
+        T.StructField("centroid", T.ArrayType(T.DoubleType())),
+    ])
+    t = _cell_means(src)
+    return vectors.sparkSession.createDataFrame(
+        pa.Table.from_arrays(t.columns, names=schema.names), schema
+    ).coalesce(1)
 
 
 def ivf_kmeans_cells(
@@ -498,9 +475,8 @@ def pq_seed_codebook(
     id c+1 (ids 1..k). Returns codebook[s][c] = list of dim/m doubles.
 
     The collect is metadata-scale — k rows, one codebook (m*k*(dim/m)
-    = dim*k doubles), the PQ analog of ivf_probe_cells' cell-id
-    collect. Seeding centroids from data ROWS (not learned floats)
-    keeps the entire encode→ADC pipeline SQL-expressible, so the
+    = dim*k doubles). Seeding centroids from data ROWS (not learned
+    floats) keeps the entire encode→ADC pipeline SQL-restatable, so the
     DuckDB oracle reproduces codes and scores bit-for-bit;
     pq_kmeans_codebook is the trained-quality variant (recall-gated in
     tests, not oracle-checkable)."""
@@ -531,7 +507,7 @@ def pq_kmeans_codebook(
     """Learned PQ codebook: an independent k-means per subspace over
     the subvectors (pyspark.ml). At 100 TB train on df.sample(frac) —
     codebook quality saturates at ~100k training points; only the
-    assign pass (pq_encode, map-only) touches the full table."""
+    assign pass (pq_encode_arrow, map-only) touches the full table."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -549,145 +525,42 @@ def pq_kmeans_codebook(
     return book
 
 
-def _dlit(x: float) -> str:
-    """Shortest-round-trip double literal for Spark SQL text (`D` suffix
-    — a bare decimal literal would parse as DECIMAL, not DOUBLE)."""
-    return f"{float(x)!r}D"
-
-
-def pq_encode(
-    vectors: DataFrame,
-    codebook: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PQ encode: (id, codes array<int>), codes[s] = argmin_c
-    ||vec_sub[s] - codebook[s][c]||² (first-min tie-break on c).
-
-    Map-only — the codebook rides into the plan as literals (it IS the
-    broadcast side), so encoding 100 TB is one scan with zero
-    exchanges, emitting m small ints per vector: at m=8 that is 8
-    bytes/vector vs 256 raw — 32× compression, the reason PQ is the
-    standard billion-vector serving layout (IVF routes, PQ codes
-    score).
-
-    The m·k squared-distance expressions are emitted as ONE SQL string
-    (selectExpr) rather than thousands of Column-API calls — the py4j
-    round-trips of building the tree object-by-object dominated plan
-    construction (measured ~13s → ~1s at m=8, k=16). The additions are
-    explicit and left-to-right, matching the DuckDB oracle's chains
-    bit-for-bit.
-
-    Distances are ranked by the reduced form ||c||² − 2·<v_s, c>
-    (= ||v_s − c||² − ||v_s||², and ||v_s||² is constant within a
-    subspace so the argmin is identical): ~45% fewer bytecode ops than
-    the expanded squared-difference chains, which is the difference
-    between whole-stage codegen COMPILING and blowing janino's 64 KB
-    method limit — the doomed compile attempts of the expanded form
-    cost ~3s per new plan before interpreted fallback (measured 5.1s →
-    ~2s for the full sim_pq_adc_topk at sf0.1). ||c||² folds to one
-    literal per centroid driver-side (Python left-to-right sum — the
-    oracle re-derives it as the identical SQL chain). The subvector
-    elements are cast to DOUBLE once in a prelude projection."""
-    m = len(codebook)
-    k = len(codebook[0])
-    d = len(codebook[0][0])
-    dim = m * d
-
-    def ip_chain(s: int, cent: list[float]) -> str:
-        cn = sum(x * x for x in cent)
-        terms = " + ".join(
-            f"__v{s * d + i} * {_dlit(cent[i])}" for i in range(d)
-        )
-        return f"{_dlit(cn)} - 2.0D * ({terms})"
-
-    # argmin as array_min over (distance, centroid-idx) structs: one
-    # evaluation of each distance chain (array_position+array_min would
-    # inline the array twice after CollapseProject — measured ~2× cost)
-    # and the lexicographic struct order IS the oracle's
-    # `ORDER BY d2, c` tie-break.
-    argmins = ", ".join(
-        "CAST(array_min(array("
-        + ", ".join(
-            f"struct({ip_chain(s, codebook[s][c])} AS d, {c} AS c)" for c in range(k)
-        )
-        + ")).c AS INT)"
-        for s in range(m)
-    )
-    pre = vectors.filter(F.col(vec_col).isNotNull()).selectExpr(
-        id_col,
-        *[f"CAST({vec_col}[{i}] AS DOUBLE) AS __v{i}" for i in range(dim)],
-    )
-    return pre.selectExpr(id_col, f"array({argmins}) AS codes")
-
-
 def pq_encode_arrow(
     vectors: DataFrame,
     codebook: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Arrow-vectorized PQ encode, BIT-IDENTICAL to pq_encode and the
-    SQL oracle. The m·k literal distance chains defeat JVM codegen
-    outright — janino's 64 KB method limit fails whole-stage compile
-    even split per subspace (measured: the doomed attempts + interpreted
-    fallback cost ~2s per fresh plan for 2000 rows) — so this is the
-    production encode path, as it is in real vector pipelines (numpy /
-    FAISS inside Arrow batches).
+    """PQ encode: (id, codes array<int>), codes[s] = argmin_c
+    ||vec_sub[s] - codebook[s][c]||² (first-min tie-break on c), by the
+    kernel's ``_pq_codes`` in one map-only Arrow pass (no exchange; the
+    codebook rides in the task closure). At m=8 that is 8 bytes/vector
+    vs 256 raw — 32× compression, the reason PQ is the standard
+    billion-vector serving layout (IVF routes, PQ codes score).
 
-    Bit-parity is engineered, not hoped for: the inner product folds
-    with an explicit per-dimension accumulate (acc = acc + sub·cᵢ, a
-    left-to-right IEEE chain identical to the oracle's `+` chains; the
-    0-init start is exact because 0.0 + x == x), distances use the same
-    ||c||²−2·acc form with the same driver-side ||c||² doubles, and
-    `dist < best` with ascending c reproduces the first-min (d, c)
-    tie-break. Still map-only: no exchange, codebook broadcast by
-    closure; tests assert row-for-row equality with pq_encode."""
-    import numpy as np
-    import pandas as pd
+    Distances are ranked by the reduced form ||c||² − 2·<v_s, c>
+    (||v_s||² is constant within a subspace, so the argmin is the
+    same), each sum left to right from 0.0: the DuckDB oracle's
+    explicit ``+`` chains fold the same doubles in the same order, so
+    codes are bit-identical to it. A NULL, ragged or wrong-width
+    embedding (a failed encoder upstream) has no code row."""
+    src = vectors.select(id_col, vec_col)
+    book = np.asarray(codebook, np.float64)
 
-    m = len(codebook)
-    k = len(codebook[0])
-    d = len(codebook[0][0])
-    cents = [[[float(x) for x in codebook[s][c]] for c in range(k)] for s in range(m)]
-    cns = [[sum(x * x for x in cents[s][c]) for c in range(k)] for s in range(m)]
-
-    def enc(batches: "object") -> "object":
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
+    def enc(batches):
+        for b in batches:
+            codes, ok = _pq_codes(b.column(1), book)
+            width = np.full(int(ok.sum()), codes.shape[1])
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).filter(pa.array(ok)),
+                 _lists(codes[ok], width, pa.int32())],
+                names=[id_col, "codes"],
             )
-            n = len(pdf)
-            codes = np.empty((n, m), dtype=np.int32)
-            for s in range(m):
-                sub = vecs[:, s * d : (s + 1) * d]
-                best_d = np.empty(n)
-                best_c = np.zeros(n, dtype=np.int32)
-                for c in range(k):
-                    acc = np.zeros(n)
-                    for i in range(d):
-                        acc = acc + sub[:, i] * cents[s][c][i]
-                    dist = cns[s][c] - 2.0 * acc
-                    if c == 0:
-                        best_d = dist
-                    else:
-                        better = dist < best_d
-                        best_d = np.where(better, dist, best_d)
-                        best_c = np.where(better, c, best_c)
-                codes[:, s] = best_c
-            yield pd.DataFrame({"id": pdf["id"], "codes": list(codes)})
 
-    # NULL embeddings (failed encoder upstream) cannot be coded — they
-    # are excluded JVM-side before the Arrow stage, mirroring the
-    # oracle's explicit IS NOT NULL (adversarial null-embedding probe:
-    # np.stack over a None crashed the worker).
-    src = vectors.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("__v")
-    )
-    out = src.mapInPandas(enc, "id long, codes array<int>")
-    return out.select(F.col("id").alias(id_col), "codes")
+    return src.mapInArrow(enc, T.StructType([
+        src.schema[id_col],
+        T.StructField("codes", T.ArrayType(T.IntegerType())),
+    ]))
 
 
 def pq_adc_topk(
@@ -697,27 +570,13 @@ def pq_adc_topk(
     k: int = 10,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Asymmetric-distance top-K over PQ codes: precompute the m×k
-    lookup table lut[s][c] = <query_sub[s], codebook[s][c]> driver-side
-    (it depends only on the query — 128 doubles), then score every code
-    row with m array lookups + an ordered fold. The serving scan reads
-    ONLY the codes column (m bytes/row), never the raw vectors:
-    TakeOrderedAndProject over a map-only projection, zero shuffles."""
-    m = len(codebook)
-    d = len(codebook[0][0])
-    lut = [
-        [
-            sum(query_vec[s * d + i] * codebook[s][c][i] for i in range(d))
-            for c in range(len(codebook[s]))
-        ]
-        for s in range(m)
-    ]
-    score = " + ".join(
-        f"element_at(array({', '.join(_dlit(v) for v in lut[s])}), codes[{s}] + 1)"
-        for s in range(m)
-    )
-    return (
-        codes.selectExpr(id_col, f"round({score}, 6) AS adc_score")
-        .orderBy(F.col("adc_score").desc(), F.col(id_col))
-        .limit(k)
-    )
+    """Asymmetric-distance top-K over PQ codes: (id, adc_score). The
+    m×k lookup table lut[s][c] = <query_sub[s], codebook[s][c]> is
+    built once from the query (``_luts``), then every code row scores
+    m LUT gathers added left to right (``_adc``). The scan reads ONLY
+    the codes column (m bytes/row), never the raw vectors."""
+    lut = _luts(_parts(pa.array([[float(x) for x in query_vec]],
+                                pa.list_(pa.float64()))),
+                np.asarray(codebook, np.float64))
+    return _topk(codes, [id_col, "codes"], None, [], k, "adc_score",
+                 _everything, _adc, side=lut)

@@ -10,6 +10,7 @@ hash-match in CORRECTNESS_r{N}.json.
 from __future__ import annotations
 
 import math
+import re
 
 import duckdb
 import pandas as pd
@@ -81,6 +82,36 @@ def compare(spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[str]:
     return problems
 
 
+_CTE = re.compile(r"(\w+)\s+AS\s*\(", re.I)
+
+
+def materialized(sql: str) -> str:
+    """``sql`` with every non-recursive CTE marked MATERIALIZED. DuckDB
+    otherwise inlines each reference to a CTE, and the near-dedup
+    oracles re-run their whole MinHash chain per reference (about a
+    minute per check instead of about two seconds); the rows are the
+    same. The rewrite of perfbench/batch_pipeline.py's ``materialized``,
+    restricted to the entries of WITH lists: a named window
+    (``WINDOW w AS (...)``) takes no MATERIALIZED."""
+    marks = []
+    for w in re.finditer(r"\bWITH\s+(?:RECURSIVE\s+)?", sql, re.I):
+        at = w.end()
+        while m := _CTE.match(sql, at):
+            depth, i = 1, m.end()
+            while depth and i < len(sql):
+                depth += {"(": 1, ")": -1}.get(sql[i], 0)
+                i += 1
+            if not re.search(rf"\b{m.group(1)}\b", sql[m.end():i]):
+                marks.append(m.end() - 1)  # recursive CTEs stay plain
+            nxt = re.compile(r"\s*,\s*").match(sql, i)
+            if nxt is None:
+                break
+            at = nxt.end()
+    for p in sorted(marks, reverse=True):
+        sql = sql[:p] + "MATERIALIZED " + sql[p:]
+    return sql
+
+
 def run_query(spark, sf_dir: str, name: str):
     from stupp_exclusion_etl_spark.plans import REGISTRY
 
@@ -89,7 +120,7 @@ def run_query(spark, sf_dir: str, name: str):
     if q.oracle is None:
         return spark_pdf, None
     con = duck_con(sf_dir)
-    oracle_pdf = con.execute(q.oracle).fetchdf()
+    oracle_pdf = con.execute(materialized(q.oracle)).fetchdf()
     con.close()
     return spark_pdf, oracle_pdf
 

@@ -266,7 +266,7 @@ def test_pq_codes_persisted_and_adc_serving(spark, tmp_path):
     retraining."""
     from stupp_exclusion_etl_spark.operators.similarity import (
         pq_adc_topk,
-        pq_encode,
+        pq_encode_arrow,
     )
 
     root = str(tmp_path)
@@ -299,7 +299,7 @@ def test_pq_codes_persisted_and_adc_serving(spark, tmp_path):
         (r.vec_id, r.adc_score)
         for r in idx.topk_adc(qv, k=10, n_probe=N_CLUSTERS).collect()
     )
-    fresh_codes = pq_encode(corpus.read(), book)
+    fresh_codes = pq_encode_arrow(corpus.read(), book)
     want = sorted(
         (r.vec_id, r.adc_score)
         for r in pq_adc_topk(fresh_codes, book, qv, k=10).collect()
@@ -1187,7 +1187,7 @@ def test_probe_bytes_not_rows_choose_the_placement(spark, tmp_path, monkeypatch)
     )
     small = idx.topk_batch(qdf, k=5)
     assert not _task_placed(small)
-    routes = idx._route(idx._queries(qdf, "q")[2], idx.n_probe)
+    routes = idx._probe(idx._queries(qdf, "q")[2], idx.n_probe)
     where = [("cell", "in", sorted(set(routes.ravel().tolist())))]
     man = idx.assignments._manifest(idx.assignments.current_version())
     kept = idx.assignments._prune_files(

@@ -69,14 +69,34 @@ def test_stats_present_and_typed(clustered):
         assert st["cols"]["s"]["t"] == "s"
 
 
-def test_cluster_ranges_disjoint(clustered):
-    t, _rows = clustered
-    spans = sorted(
-        (c["k"]["min"], c["k"]["max"])
-        for c in (s["cols"] for s in t.snapshot()["stats"].values())
+def test_cluster_ranges_disjoint(spark, clustered, monkeypatch):
+    """The first commit's ranges come from sampling; a later commit
+    routes by the manifest's boundaries (``_cluster_route_expr``),
+    keys outside the known range included, and its files stay
+    disjoint and its rows the last-write-wins fold."""
+    t, rows = clustered
+
+    def assert_disjoint():
+        spans = sorted(
+            (c["k"]["min"], c["k"]["max"])
+            for c in (s["cols"] for s in t.snapshot()["stats"].values())
+        )
+        for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
+            assert hi1 < lo2, "range clustering must yield disjoint files"
+
+    assert_disjoint()
+    routes = []
+    real = t._cluster_route_expr
+    monkeypatch.setattr(
+        t, "_cluster_route_expr", lambda n: routes.append(real(n)) or routes[-1]
     )
-    for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
-        assert hi1 < lo2, "range clustering must yield disjoint files"
+    late = [(k, "C", float(k), f"n{k}", 1) for k in (-7, -1, 10, 60, 99, 150, 400)]
+    t.upsert(_df(spark, late), [F.col("ts").desc()])
+    assert routes and all(r is not None for r in routes)
+    assert_disjoint()
+    fold = {r[0]: r for r in rows}
+    fold.update({r[0]: r for r in late})
+    assert _vals(t.read()) == sorted(fold.values())
 
 
 @pytest.mark.parametrize(

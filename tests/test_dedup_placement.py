@@ -9,15 +9,15 @@ from __future__ import annotations
 import pytest
 
 from stupp_exclusion_etl_spark.catalog import table
-from stupp_exclusion_etl_spark.operators import dedup
+from stupp_exclusion_etl_spark.operators import budget, dedup
 from tests.conftest import SF_SMALL
 
 
 def _both(monkeypatch, build):
     """(rows on the driver, rows in tasks) of the frame ``build()``."""
     out = []
-    for budget in (1 << 62, -1):
-        monkeypatch.setattr(dedup, "_DRIVER_DEDUP_BYTES", budget)
+    for cap in (1 << 62, -1):
+        monkeypatch.setattr(budget, "_DRIVER_DEDUP_BYTES", cap)
         out.append(sorted(map(tuple, build().collect()), key=repr))
     return out
 

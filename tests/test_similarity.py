@@ -72,8 +72,12 @@ def test_ivf_partition_pruning_end_to_end(spark, tmp_path):
     written partitioned by cell, probe cells pushed as literals → the
     scan reads ONLY the probed partitions (inputFiles + PartitionFilters),
     and the pruned search returns exactly the unpartitioned result."""
+    from stupp_exclusion_etl_spark.operators.ann_index import (
+        _keys,
+        _parts,
+        _route,
+    )
     from stupp_exclusion_etl_spark.operators.similarity import (
-        ivf_probe_cells,
         ivf_topk,
         mean_centroids,
     )
@@ -84,7 +88,13 @@ def test_ivf_partition_pruning_end_to_end(spark, tmp_path):
 
     cent = mean_centroids(e, cell_col="label")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q"))
-    cells = ivf_probe_cells(cent, q, n_probe=2)
+    ct = cent.toArrow()
+    ids = ct.column("cell").combine_chunks()
+    near = _route(
+        _parts(q.toArrow().column("q").combine_chunks()),
+        _parts(ct.column("centroid").combine_chunks()), _keys(ids), 2,
+    )
+    cells = ids.take(near[0]).to_pylist()
     assert len(cells) == 2
 
     part = spark.read.parquet(path)
@@ -137,7 +147,7 @@ def test_pq_kmeans_recall_and_plan(spark):
     TakeOrderedAndProject, never an Exchange."""
     from stupp_exclusion_etl_spark.operators.similarity import (
         pq_adc_topk,
-        pq_encode,
+        pq_encode_arrow,
         pq_kmeans_codebook,
     )
 
@@ -152,7 +162,7 @@ def test_pq_kmeans_recall_and_plan(spark):
         r.vec_id for r in brute_force_topk(rest, q, k=2 * K).collect()
     }
     book = pq_kmeans_codebook(e, m=8, k=16)
-    top = pq_adc_topk(pq_encode(rest, book), book, qv, k=K)
+    top = pq_adc_topk(pq_encode_arrow(rest, book), book, qv, k=K)
     got = {r.vec_id for r in top.collect()}
     overlap = len(got & exact20)
     assert overlap >= K // 2, f"PQ ADC top-{K} ∩ exact top-{2*K} = {overlap}"
@@ -186,29 +196,34 @@ def test_zero_vector_ranks_last_not_crash(spark):
     assert all(2 not in (p.id1, p.id2) for p in pairs)
 
 
-def test_pq_encode_arrow_bit_identical_to_sql(spark):
-    """The Arrow-vectorized encode must reproduce the SQL literal-chain
-    encode code-for-code: the fold order is engineered to match
-    (left-to-right accumulate, same ||c||² literals, first-min
-    tie-break), so any drift is a bug, not tolerance."""
-    from pyspark.sql import functions as F
-
-    from stupp_exclusion_etl_spark.catalog import table
+def test_pq_codes_match_oracle_codes_per_row(spark):
+    """The kernel encoder reproduces the DuckDB oracle's ``codes`` CTE
+    (plans.similarity._pq_oracle) code for code, row by row: the fold
+    order is engineered to match (left-to-right sums, the same ||c||²
+    chains, first-min tie-break), so any drift is a bug, not
+    tolerance."""
     from stupp_exclusion_etl_spark.operators.similarity import (
-        pq_encode,
         pq_encode_arrow,
         pq_seed_codebook,
     )
+    from stupp_exclusion_etl_spark.plans.similarity import _pq_oracle
+    from tests.harness import duck_con
 
     e = table(spark, SF_SMALL, "embeddings")
     book = pq_seed_codebook(e, m=8, k=16)
-    base = e.filter(F.col("vec_id") != 0)
-    sql_codes = {r.vec_id: list(r.codes) for r in pq_encode(base, book).collect()}
-    arrow_codes = {
-        r.vec_id: list(r.codes) for r in pq_encode_arrow(base, book).collect()
+    got = {
+        r.vec_id: list(r.codes)
+        for r in pq_encode_arrow(e.filter(F.col("vec_id") != 0), book).collect()
     }
-    assert arrow_codes == sql_codes
-    assert len(arrow_codes) == base.count()
+    sql = _pq_oracle()
+    sql = sql[: sql.rindex("SELECT vec_id, ROUND(")] + (
+        "SELECT vec_id, list(c ORDER BY s) AS codes FROM codes GROUP BY vec_id"
+    )
+    con = duck_con(SF_SMALL)
+    want = {int(v): [int(c) for c in cs] for v, cs in con.execute(sql).fetchall()}
+    con.close()
+    assert got == want
+    assert len(got) == e.filter(F.col("vec_id") != 0).count()
 
 
 def test_recall_estimator_planes_bit_identical_to_spark(spark):
