@@ -47,9 +47,11 @@ flat Arrow values, the kernel every operators.similarity operator
 scores with too. A query batch is collected (zero jobs on a
 LocalRelation; a batch is serving-sized by contract), routed on the
 driver against the memoized centroids, and its probed cells are read
-once, chunk/file-pruned, by the sink's driver scan; the top-k returns
-as a LocalRelation frame, so serving a local table runs no Spark job (a
-table off the local filesystem collects its probed read in one). A
+once, chunk/file-pruned and column-pruned (a PQ index's ADC serving
+reads id, cell and codes, never the embeddings), by the sink's driver
+scan; the top-k returns as a LocalRelation frame, so serving a local
+table runs no Spark job (a table off the local filesystem collects its
+probed read in one). A
 probed read above the sink's driver byte budget
 (``atomic._DRIVER_SCAN_BYTES``) is scored in Arrow tasks instead, then
 merged per query (``_placed``): only the placement differs, never the
@@ -218,8 +220,9 @@ def _pq_codes(vecs, book):
     """(codes n×m int32, ok) of a list array against the codebook
     array ``book`` (m×k×d): code s of a row is argmin_c
     ||book[s][c]||² − 2·<v_s, book[s][c]>, each sum left to right from
-    0.0, the first minimum winning; a NaN distance never wins, and a
-    NaN for centroid 0 keeps code 0. A NULL element reads as NaN. Rows
+    0.0, the first minimum winning; a NaN distance ranks after every
+    number, +inf included (the oracle's ``ORDER BY d2, c``), so an
+    all-NaN subspace takes code 0. A NULL element reads as NaN. Rows
     that are NULL or not m·d long are not ok: they have no code."""
     m, kc, d = book.shape
     vals, offs, lens, _ok = _parts(vecs)
@@ -235,8 +238,7 @@ def _pq_codes(vecs, book):
             for i in range(d):
                 acc = acc + v[:, s * d + i, None] * book[None, s, :, i]
             dist = cn[s] - 2.0 * acc
-            best = np.argmin(np.where(np.isnan(dist), np.inf, dist), axis=1)
-            codes[:, s] = np.where(np.isnan(dist[:, 0]), 0, best)
+            codes[:, s] = np.argsort(dist, axis=1, kind="stable")[:, 0]
     return codes, ok
 
 
@@ -344,23 +346,22 @@ def _route(q, cents, keys, n: int, qi=None):
 
 def _placed(spark, hits, schema: T.StructType, k: int, score: str,
             id_col: str, table=None, cand=None, rank=None,
-            one_part: bool = False) -> DataFrame:
+            per_query: bool = False) -> DataFrame:
     """The top-k rows of ``hits(columns)`` — (output columns, ranking
     index) of a candidate batch's per-ranking top k, in (ranking, rank)
     order — named by ``schema``, whose ``rank`` column is the 1-based
-    rank. Over the Arrow ``table`` they return as a LocalRelation (with
-    ``one_part`` in one partition, so a count over them needs no
-    exchange). Over the frame ``cand`` the kernel runs in Arrow tasks,
-    a per-ranking row_number window merges their partial top-ks, and a
+    rank. Over the Arrow ``table`` they return as a LocalRelation. Over
+    the frame ``cand`` the kernel runs in Arrow tasks whose partial
+    top-ks merge: one ranking by a take-ordered limit (no exchange);
+    ``per_query`` rankings by a per-ranking row_number window, then a
     sort restores (ranking, rank) order."""
     if table is not None:
         cols, g = hits([c.combine_chunks() for c in table.columns])
         if rank is not None:
             cols.append(pa.array(_place(g) + 1, pa.int32()))
-        out = spark.createDataFrame(
+        return spark.createDataFrame(
             pa.Table.from_arrays(cols, schema=to_arrow_schema(schema)), schema
         )
-        return out.coalesce(1) if one_part else out
     fields = [f for f in schema.fields if f.name != rank]
     names = [f.name for f in fields]
 
@@ -372,11 +373,13 @@ def _placed(spark, hits, schema: T.StructType, k: int, score: str,
             )
 
     order = [F.col(score).desc_nulls_last(), F.col(id_col)]
-    w = Window.partitionBy("__q").orderBy(*order)
     qcol = T.StructField("__q", T.LongType())
+    tasks = cand.mapInArrow(run, T.StructType(fields + [qcol]))
+    if not per_query:
+        return tasks.orderBy(*order).limit(k).select(*names)
+    w = Window.partitionBy("__q").orderBy(*order)
     return (
-        cand.mapInArrow(run, T.StructType(fields + [qcol]))
-        .withColumn("__rn", F.row_number().over(w))
+        tasks.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .orderBy("__q", *order)
         .select(*names, *([F.col("__rn").alias(rank)] if rank else []))
@@ -1111,7 +1114,7 @@ class PersistedIvfIndex:
         by_cell = {c: np.flatnonzero((routes == c).any(axis=1))
                    for c in np.unique(routes).tolist()}
         cells = sorted(by_cell)
-        scan = self.assignments._driver_read([("cell", "in", cells)])
+        scan = self.assignments._driver_read([("cell", "in", cells)], cols)
         cand = None
         if scan is None:
             cand = self._probed(cells).select(*cols)
@@ -1136,7 +1139,8 @@ class PersistedIvfIndex:
 
         return _placed(
             self.spark, hits, T.StructType(fields), k, score, self.id_col,
-            table=None if scan is None else scan[0].select(cols), cand=cand,
+            table=None if scan is None else scan[0], cand=cand,
+            per_query=qid_field is not None,
         )
 
     def probe_cells(self, query: DataFrame, n_probe: int | None = None):

@@ -22,8 +22,9 @@ each query is routed to:
 Placement is operators.budget's rule: while the input plan's size
 estimate fits ``_DRIVER_DEDUP_BYTES`` the candidate and query rows come
 to the driver in one ``toArrow()`` and the top-k returns as a
-one-partition LocalRelation; above it the kernel runs in Arrow tasks
-whose partial top-ks a per-query window merges (ann_index._placed).
+LocalRelation; above it the kernel runs in Arrow tasks whose partial
+top-ks merge by a take-ordered limit (one ranking, no exchange) or a
+per-query window (``knn_join``) (ann_index._placed).
 """
 
 from __future__ import annotations
@@ -130,7 +131,7 @@ def _topk(vectors: DataFrame, vcols: list, query, qcols: list, k: int,
     return _placed(
         vectors.sparkSession, hits, T.StructType(fields), k, score,
         v.columns[0], table=table, cand=None if table is not None else v,
-        rank=rank, one_part=True,
+        rank=rank, per_query=qids is not None,
     )
 
 
@@ -263,6 +264,19 @@ def ann_topk_lsh(
                  "cos_sim", _lsh([planes_matrix(dim, n_planes)], multi_probe))
 
 
+def _probe_cells(centroids: DataFrame, qvecs, n_probe: int,
+                 cell_col: str = "cell",
+                 centroid_vec_col: str = "centroid") -> list:
+    """Each query's n_probe nearest cell ids, best first, as Arrow
+    arrays (NULL cell ids dropped): ``_route`` of the query vectors
+    ``qvecs`` (an Arrow list array) against the collected centroid
+    rows — a metadata-scale collect, like listing partitions."""
+    ct = centroids.select(cell_col, centroid_vec_col).toArrow()
+    cells = ct.column(0).combine_chunks()
+    near = _route(_parts(qvecs), _parts(ct.column(1)), _keys(cells), n_probe)
+    return [cells.take(r).drop_null() for r in near]
+
+
 def ivf_topk(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -282,13 +296,9 @@ def ivf_topk(
     the candidate frame is filtered on the probed cells, so a
     cell-partitioned table is read pruned, and a NULL cell matches no
     probe, as in an equi-join."""
-    ct = centroids.select(cell_col, centroid_vec_col).toArrow()
-    cells = ct.column(0).combine_chunks()
     qt = query.select(query_vec_col).toArrow()
-    probed = [cells.take(r).drop_null() for r in _route(
-        _parts(qt.column(0).combine_chunks()),
-        _parts(ct.column(1).combine_chunks()), _keys(cells), n_probe,
-    )]
+    probed = _probe_cells(centroids, qt.column(0), n_probe, cell_col,
+                          centroid_vec_col)
     near = sorted({c for p in probed for c in p.to_pylist()})
 
     def routes(q, nq):
@@ -427,7 +437,7 @@ def mean_centroids(
     t = _cell_means(src)
     return vectors.sparkSession.createDataFrame(
         pa.Table.from_arrays(t.columns, names=schema.names), schema
-    ).coalesce(1)
+    )
 
 
 def ivf_kmeans_cells(

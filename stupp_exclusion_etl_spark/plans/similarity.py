@@ -460,14 +460,14 @@ def _ivf_pq_oracle(n_probe: int = 4, topk: int = 10) -> str:
 def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full billion-vector serving stack in one query — IVF routes,
     PQ codes score: route the query to its 4 nearest cells (label-mean
-    centroids, the kernel's ``_route``), PQ-encode ONLY the candidates
+    centroids, ``_probe_cells``), PQ-encode ONLY the candidates
     from those cells, then asymmetric-distance top-10 from the
     128-entry LUT. Fully oracled: probe, codes, and LUT all re-derived
     in SQL."""
     import pyarrow as pa
 
-    from stupp_exclusion_etl_spark.operators.ann_index import _keys, _parts, _route
     from stupp_exclusion_etl_spark.operators.similarity import (
+        _probe_cells,
         mean_centroids,
         pq_adc_topk,
         pq_encode_arrow,
@@ -475,11 +475,9 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = table(spark, sf_dir, "embeddings")
     book, qv = _pq_head(spark, e)
-    cent = mean_centroids(e, cell_col="label").toArrow()
-    cells = cent.column("cell").combine_chunks()
-    q = _parts(pa.array([qv], pa.list_(pa.float64())))
-    near = _route(q, _parts(cent.column("centroid").combine_chunks()), _keys(cells), 4)
-    probe = cells.take(near[0]).drop_null().to_pylist()
+    cent = mean_centroids(e, cell_col="label")
+    qvec = pa.array([qv], pa.list_(pa.float64()))
+    probe = _probe_cells(cent, qvec, 4)[0].to_pylist()
     cand = e.filter((F.col("vec_id") != 0) & F.col("label").isin(probe))
     codes = pq_encode_arrow(cand, book)
     return pq_adc_topk(codes, book, qv, k=10)

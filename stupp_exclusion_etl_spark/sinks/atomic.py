@@ -2025,29 +2025,29 @@ class AtomicParquetTable:
             rel = self._prune_files(man, rel, where)
         return man, rel
 
-    def _driver_read(self, where: list[tuple]):
-        """The head snapshot's ``read(where)`` rows as (Arrow table,
-        Spark schema) for callers that compute on the driver, or None
-        before the first commit or when the kept files' manifest bytes
-        are over ``_DRIVER_SCAN_BYTES``. The rows come from
-        ``_driver_scan`` (prefiltered, no cap on the rows kept); where
-        it declines (a table off the local filesystem, a type it does
-        not carry) they are the FileScan's, collected by one job."""
+    def _driver_read(self, where: list[tuple], columns: list):
+        """The head snapshot's ``read(where)`` rows, only ``columns``,
+        as (Arrow table, Spark schema) for callers that compute on the
+        driver, or None before the first commit or when the kept files'
+        manifest bytes are over ``_DRIVER_SCAN_BYTES``. The rows come
+        from ``_driver_scan`` (prefiltered, no cap on the rows kept);
+        where it declines (a table off the local filesystem, a type it
+        does not carry) they are the FileScan's, collected by one job."""
         version = self.current_version()
         if version is None:
             return None
         man, rel = self._kept(version, where)
         if not _fits_driver(man, rel):
             return None
-        scan = self._driver_scan(man, rel, where)
+        scan = self._driver_scan(man, rel, where, columns=columns)
         if scan is None:
-            df = self.read(version=version, where=where)
+            df = self.read(version=version, where=where).select(*columns)
             scan = df.toArrow(), df.schema
         return scan
 
     def _driver_scan(
         self, man: dict, rel: list[str], where: list[tuple],
-        max_rows_bytes: int | None = None,
+        max_rows_bytes: int | None = None, columns: list | None = None,
     ):
         """(Arrow table, Spark schema) of the kept files ``rel``, read
         by pyarrow on the driver, or None when they do not fit
@@ -2059,20 +2059,29 @@ class AtomicParquetTable:
         schema (widened ints, NULL-filled missing columns) with its
         partition values parsed from the dir, and its rows go through
         ``_prefilter_mask``: a superset of the predicates' matches, so
-        the Spark filters on top still decide every row."""
+        the Spark filters on top still decide every row. With
+        ``columns`` only those columns (and the predicates') are read
+        and only those are returned."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql import types as T
         from pyspark.sql.pandas.types import to_arrow_schema
 
         schema = _driver_schema(man["schema_ddl"], tuple(self.partition_by))
+        preds = [_normalize_predicate(p)[0] for p in where]
         if (
             schema is None
             or self._local_root is None
             or not _fits_driver(man, rel)
-            or any(_normalize_predicate(p)[0] not in schema.names
-                   for p in where)
+            or any(c not in schema.names for c in preds + (columns or []))
         ):
             return None
+        out = schema
+        if columns is not None:
+            out = T.StructType([schema[c] for c in columns])
+            schema = T.StructType(
+                [f for f in schema.fields if f.name in {*columns, *preds}]
+            )
         arrow_schema = to_arrow_schema(schema)
         file_part = {
             f: part for part, files in man["partitions"].items() for f in files
@@ -2081,7 +2090,12 @@ class AtomicParquetTable:
         kept_bytes = 0
         try:
             for f in rel:
-                t = pq.read_table(f"{self._local_root}/{DATA_DIR}/{f}")
+                path = f"{self._local_root}/{DATA_DIR}/{f}"
+                read = None
+                if columns is not None:
+                    held = pq.read_schema(path).names
+                    read = [c for c in schema.names if c in held]
+                t = pq.read_table(path, columns=read)
                 parts = _partition_values(file_part[f], schema)
                 cols = []
                 for fld in arrow_schema:
@@ -2101,7 +2115,7 @@ class AtomicParquetTable:
                     return None
         except (pa.ArrowNotImplementedError, ValueError, OSError):
             return None  # a cast Spark may treat differently: FileScan
-        return pa.concat_tables(tables), schema
+        return pa.concat_tables(tables).select(out.names), out
 
     def table_at(
         self,

@@ -309,6 +309,11 @@ def test_pq_codes_persisted_and_adc_serving(spark, tmp_path):
     # pruned ADC probe reads only probed cells' rows and stays sane
     top1 = idx.topk_adc(qv, k=1, n_probe=1).collect()
     assert len(top1) == 1
+    # the driver scan ADC serving takes reads the codes, not the vectors
+    cols = ["vec_id", "cell", "codes"]
+    scan, schema = idx.assignments._driver_read([("cell", "in", [0, 1])], cols)
+    assert scan.column_names == cols and schema.names == cols
+    assert set(scan.column("cell").to_pylist()) <= {0, 1} and scan.num_rows
 
     # durability: a new handle loads the codebook from its table
     idx2 = PersistedIvfIndex(

@@ -72,12 +72,8 @@ def test_ivf_partition_pruning_end_to_end(spark, tmp_path):
     written partitioned by cell, probe cells pushed as literals → the
     scan reads ONLY the probed partitions (inputFiles + PartitionFilters),
     and the pruned search returns exactly the unpartitioned result."""
-    from stupp_exclusion_etl_spark.operators.ann_index import (
-        _keys,
-        _parts,
-        _route,
-    )
     from stupp_exclusion_etl_spark.operators.similarity import (
+        _probe_cells,
         ivf_topk,
         mean_centroids,
     )
@@ -88,13 +84,7 @@ def test_ivf_partition_pruning_end_to_end(spark, tmp_path):
 
     cent = mean_centroids(e, cell_col="label")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q"))
-    ct = cent.toArrow()
-    ids = ct.column("cell").combine_chunks()
-    near = _route(
-        _parts(q.toArrow().column("q").combine_chunks()),
-        _parts(ct.column("centroid").combine_chunks()), _keys(ids), 2,
-    )
-    cells = ids.take(near[0]).to_pylist()
+    cells = _probe_cells(cent, q.toArrow().column("q"), 2)[0].to_pylist()
     assert len(cells) == 2
 
     part = spark.read.parquet(path)
@@ -196,20 +186,15 @@ def test_zero_vector_ranks_last_not_crash(spark):
     assert all(2 not in (p.id1, p.id2) for p in pairs)
 
 
-def test_pq_codes_match_oracle_codes_per_row(spark):
-    """The kernel encoder reproduces the DuckDB oracle's ``codes`` CTE
-    (plans.similarity._pq_oracle) code for code, row by row: the fold
-    order is engineered to match (left-to-right sums, the same ||c||²
-    chains, first-min tie-break), so any drift is a bug, not
-    tolerance."""
+def _assert_codes_match_oracle(spark, e, con):
+    """The kernel's codes of every vec_id != 0 row of ``e`` equal the
+    DuckDB oracle's ``codes`` CTE over ``con``'s ``embeddings``."""
     from stupp_exclusion_etl_spark.operators.similarity import (
         pq_encode_arrow,
         pq_seed_codebook,
     )
     from stupp_exclusion_etl_spark.plans.similarity import _pq_oracle
-    from tests.harness import duck_con
 
-    e = table(spark, SF_SMALL, "embeddings")
     book = pq_seed_codebook(e, m=8, k=16)
     got = {
         r.vec_id: list(r.codes)
@@ -219,11 +204,51 @@ def test_pq_codes_match_oracle_codes_per_row(spark):
     sql = sql[: sql.rindex("SELECT vec_id, ROUND(")] + (
         "SELECT vec_id, list(c ORDER BY s) AS codes FROM codes GROUP BY vec_id"
     )
-    con = duck_con(SF_SMALL)
     want = {int(v): [int(c) for c in cs] for v, cs in con.execute(sql).fetchall()}
-    con.close()
     assert got == want
     assert len(got) == e.filter(F.col("vec_id") != 0).count()
+    return got
+
+
+def test_pq_codes_match_oracle_codes_per_row(spark):
+    """The kernel encoder reproduces the DuckDB oracle's ``codes`` CTE
+    (plans.similarity._pq_oracle) code for code, row by row: the fold
+    order is engineered to match (left-to-right sums, the same ||c||²
+    chains, first-min tie-break), so any drift is a bug, not
+    tolerance."""
+    from tests.harness import duck_con
+
+    con = duck_con(SF_SMALL)
+    _assert_codes_match_oracle(spark, table(spark, SF_SMALL, "embeddings"), con)
+    con.close()
+
+
+def test_pq_codes_nan_seed_match_oracle(spark, tmp_path):
+    """A NaN in centroid 0's seed row makes that centroid's distance
+    NaN in subspace 0 for every row: NaN ranks after every number in
+    the oracle's ``ORDER BY d2, c``, so a row takes its nearest other
+    centroid there, and the seed row itself (all distances NaN) takes
+    code 0."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_SMALL}/embeddings.parquet").slice(0, 120)
+    emb = t.column("embedding").to_pylist()
+    ids = t.column("vec_id").to_pylist()
+    emb[ids.index(1)][0] = float("nan")
+    t = t.set_column(
+        t.schema.get_field_index("embedding"), "embedding",
+        pa.array(emb, t.schema.field("embedding").type),
+    )
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(t, path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    got = _assert_codes_match_oracle(spark, spark.read.parquet(path), con)
+    con.close()
+    assert got[1][0] == 0
+    assert any(codes[0] != 0 for codes in got.values())
 
 
 def test_recall_estimator_planes_bit_identical_to_spark(spark):
